@@ -34,34 +34,6 @@ def evaluate_gold(sims: DataFrame, gold: DataFrame) -> DataFrame:
     )
 
 
-def gold_standard_sims(sims: DataFrame, gold: DataFrame) -> DataFrame:
-    """Similarity of every gold pair, 0.0 when the candidate join never
-    produced the pair (reference analyseDataset's gs_value default,
-    ScalableEntityResolution.scala:321-327).
-
-    Written as (sims INNER broadcast-join gold) UNION (gold ANTI-join
-    matched, sim 0.0) rather than the naive gold-LEFT-JOIN-sims: a left
-    outer join with the big table on the right cannot broadcast-build,
-    so it would shuffle the entire similarity table just to pick out
-    |gold| rows. The decomposed form streams sims map-side against the
-    broadcast gold set and never shuffles it."""
-    matched = sims.join(F.broadcast(gold.select("a_id", "b_id")), ["a_id", "b_id"]).persist()
-    missing = gold.select("a_id", "b_id").join(
-        F.broadcast(matched.select("a_id", "b_id")), ["a_id", "b_id"], "left_anti"
-    ).select("a_id", "b_id", F.lit(0.0).alias("sim"))
-    return matched.select("a_id", "b_id", "sim").unionByName(missing)
-
-
-def sim_histogram(sims: DataFrame, n_bins: int = 100) -> DataFrame:
-    """(bin, cnt): bin = int(sim * n_bins) clamped to [0, n_bins] --
-    the reference's accumulator histogram (ScalableEntityResolution.scala:
-    329-347) as a plain partial-aggregated groupBy."""
-    bin_col = F.least(
-        F.floor(F.col("sim") * n_bins).cast("long"), F.lit(n_bins).cast("long")
-    )
-    return sims.groupBy(bin_col.alias("bin")).agg(F.count("*").alias("cnt"))
-
-
 def threshold_sweep(
     sims: DataFrame, gold: DataFrame, n_thresholds: int = 100
 ) -> DataFrame:
@@ -78,9 +50,9 @@ def threshold_sweep(
     """
     # ONE pass over the (big) similarity table: tag each candidate pair
     # gold/non-gold with a broadcast join, then a single partial-aggregated
-    # groupBy(bin, is_dup). Everything after operates on <= 2*(n+1) rows.
-    # (Binning both distributions separately -- bins_all via sim_histogram,
-    # bins_dup via gold_standard_sims -- scanned the pair table 3-4x.)
+    # groupBy(bin) counting all pairs and the gold-tagged ones. Everything
+    # after operates on the <= n+2 row bin grid, inside the same query: no
+    # persisted table, no second aggregation over the pairs.
     # Gold pairs the candidate join never produced count as sim 0.0
     # (reference gs_value default): their count is |gold| - |matched|,
     # folded into bin 0 arithmetically -- into BOTH distributions. A
@@ -89,49 +61,48 @@ def threshold_sweep(
     # cnt_dup; folding it into cnt_dup alone makes tp exceed pred_pos at
     # threshold 0 (negative fp, precision > 1). Assumes gold pairs are
     # distinct (they are in every gold-standard fixture).
+    # Pairs with a NULL or negative sim are never predicted positive but
+    # are still candidates, so they land in a sentinel bin -1: it counts
+    # toward |matched| and sorts after every real bin in the descending
+    # cumulative sums, then is dropped from the output.
     g = gold.select("a_id", "b_id", F.lit(1).alias("_gold"))
-    bin_col = F.least(
-        F.floor(F.col("sim") * n_thresholds).cast("long"),
-        F.lit(n_thresholds).cast("long"),
+    bin_col = F.greatest(
+        F.least(
+            F.floor(F.col("sim") * n_thresholds).cast("long"),
+            F.lit(n_thresholds).cast("long"),
+        ),
+        F.lit(-1).cast("long"),
     )
-    bins = (
+    by_bin = (
         sims.join(F.broadcast(g), ["a_id", "b_id"], "left")
-        .groupBy(bin_col.alias("bin"), F.col("_gold").isNotNull().alias("is_dup"))
-        .agg(F.count("*").alias("cnt"))
-        .persist()
+        .groupBy(bin_col.alias("bin"))
+        .agg(F.count("*").alias("cnt_all"), F.count("_gold").alias("cnt_matched"))
     )
-    totals = bins.agg(
-        F.coalesce(F.sum(F.when(F.col("is_dup"), F.col("cnt"))), F.lit(0)).alias("matched")
-    ).crossJoin(F.broadcast(gold.agg(F.count("*").alias("n_dups"))))
-
-    grid = sims.sparkSession.range(0, n_thresholds + 1).select(
+    grid = sims.sparkSession.range(-1, n_thresholds + 1).select(
         F.col("id").alias("bin")
     )
-    by_bin = bins.groupBy("bin").agg(
-        F.sum("cnt").alias("cnt_all"),
-        F.coalesce(F.sum(F.when(F.col("is_dup"), F.col("cnt"))), F.lit(0)).alias("cnt_matched"),
-    )
+    n_dups = gold.agg(F.count("*").alias("n_dups"))
 
+    w_all = Window.partitionBy()
     w = Window.orderBy(F.col("bin").desc()).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
+    missing = F.when(
+        F.col("bin") == 0, F.col("n_dups") - F.sum("cnt_matched").over(w_all)
+    ).otherwise(0)
     binned = (
         grid.join(by_bin, "bin", "left")
-        .crossJoin(F.broadcast(totals))
+        .na.fill(0, ["cnt_all", "cnt_matched"])
+        .crossJoin(F.broadcast(n_dups))
         .select(
             "bin",
             "n_dups",
-            (
-                F.coalesce("cnt_all", F.lit(0))
-                + F.when(F.col("bin") == 0, F.col("n_dups") - F.col("matched")).otherwise(0)
-            ).alias("cnt_all"),
-            (
-                F.coalesce("cnt_matched", F.lit(0))
-                + F.when(F.col("bin") == 0, F.col("n_dups") - F.col("matched")).otherwise(0)
-            ).alias("cnt_dup"),
+            (F.col("cnt_all") + missing).alias("cnt_all"),
+            (F.col("cnt_matched") + missing).alias("cnt_dup"),
         )
         .withColumn("pred_pos", F.sum("cnt_all").over(w))
         .withColumn("tp", F.sum("cnt_dup").over(w))
+        .where(F.col("bin") >= 0)
     )
     return binned.select(
         (F.col("bin") / n_thresholds).alias("threshold"),

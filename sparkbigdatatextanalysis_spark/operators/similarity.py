@@ -56,7 +56,7 @@ def common_token_pairs(
     materializes the shared-token lists via groupByKey; the count is all
     downstream consumers need, so aggregate instead of collecting lists.
 
-    Physical strategies (same stats-based choice as the cosine join):
+    Physical strategies (same selection rule as the cosine join):
 
     * ``sparse`` -- token equi-join + groupBy(a_id, b_id). Right for real
       text (large vocab, low df): join output ~ sum over tokens of
@@ -79,16 +79,15 @@ def common_token_pairs(
       |distinct masks| 8-byte rows instead of |docs_b| rows, which is
       what keeps the strategy viable when the catalog outgrows the
       broadcast limit but the vocabulary stays tiny.
+    * ``auto`` -- ``bitmask`` when the caller states ``vocab_n`` <=
+      BITMASK_VOCAB_MAX (a capped count is as good as an exact one),
+      ``sparse`` otherwise. Both return the same pairs, so the choice is
+      speed only and building the DataFrame runs no Spark job.
     """
     a = idx_a.select("token", F.col("id").alias("a_id"))
     b = idx_b.select("token", F.col("id").alias("b_id"))
     if strategy == "auto":
-        # callers that already know the (possibly capped) vocabulary size
-        # pass it to skip the distinct-count job; only the <=63 decision
-        # matters, so a capped count is as good as an exact one.
-        if vocab_n is None:
-            vocab_n = a.select("token").union(b.select("token")).distinct().count()
-        strategy = "bitmask" if vocab_n <= BITMASK_VOCAB_MAX else "sparse"
+        strategy = "bitmask" if _stated_at_most(vocab_n, BITMASK_VOCAB_MAX) else "sparse"
     if strategy == "bitmask":
         vocab = (
             a.select("token")
@@ -217,6 +216,14 @@ def dense_dot_products(flats: DataFrame) -> DataFrame:
 DENSE_VOCAB_THRESHOLD = 1024
 
 
+def _stated_at_most(vocab_n: int | None, limit: int) -> bool:
+    """The module's one strategy-selection rule: a small-vocabulary form
+    is picked only from a vocabulary size the caller states. An unknown
+    size picks the sparse join, which is correct at every size -- never
+    a distinct-token count job hidden inside a lazy operator."""
+    return vocab_n is not None and vocab_n <= limit
+
+
 def cosine_similarity_join(
     weights_a: DataFrame,
     weights_b: DataFrame,
@@ -232,7 +239,7 @@ def cosine_similarity_join(
 
     Inputs are exploded TF-IDF tables (id, token, weight).
 
-    Physical strategy (AQE-style stats-based choice):
+    Physical strategy:
 
     * ``sparse`` -- explode-join-aggregate: shuffle on token, partial
       map-side agg, norms broadcast. The right plan when the vocabulary
@@ -244,9 +251,14 @@ def cosine_similarity_join(
       |pairs| * |vocab| rows through a shuffle; the dense form does the
       same multiplies map-side with NO pair-level shuffle at all.
       Results are identical because TF-IDF weights are strictly positive:
-      dot > 0 <=> the pair shares a token.
-    * ``auto`` -- one cheap distinct-token count decides (the engine's
-      analog of Catalyst picking a join strategy from stats).
+      dot > 0 <=> the pair shares a token. Without a stated ``vocab_n``
+      the dense form is the array one, which needs no width up front.
+    * ``auto`` -- ``dense`` when the caller states ``vocab_n`` <=
+      DENSE_VOCAB_THRESHOLD (pass it to opt a tiny vocabulary into the
+      dense path; the IDF table already knows it), ``sparse`` otherwise.
+      Since both strategies return the same pairs, the choice costs no
+      Spark job: building the DataFrame never re-runs the tokenize ->
+      tf -> idf -> weights lineage just to count the vocabulary.
 
     Scale limit of the dense path: the build side must fit a broadcast
     (|docs_b| rows x ~8*|vocab| bytes). Beyond that, with a still-tiny
@@ -257,16 +269,8 @@ def cosine_similarity_join(
     output at that shape is dominated by its own output size anyway.
     """
     if strategy == "auto":
-        if vocab_n is None:
-            vocab_n = (
-                weights_a.select("token").union(weights_b.select("token")).distinct().count()
-            )
-        strategy = "dense" if vocab_n <= DENSE_VOCAB_THRESHOLD else "sparse"
+        strategy = "dense" if _stated_at_most(vocab_n, DENSE_VOCAB_THRESHOLD) else "sparse"
     if strategy == "dense":
-        if vocab_n is None:
-            vocab_n = (
-                weights_a.select("token").union(weights_b.select("token")).distinct().count()
-            )
         if vocab_n == 0:
             # empty vocabulary (e.g. all-stopword corpus): no pair can
             # share a token, so the result is empty by definition.
@@ -583,7 +587,7 @@ def cross_cosine_similarity(
         )
         return base.unionByName(zero_pairs)
     if sims is None:
-        sims = cosine_similarity_join(weights_a, weights_b)
+        sims = cosine_similarity_join(weights_a, weights_b, vocab_n=vocab_n)
     ids_a = ids_a if ids_a is not None else weights_a.select("id").distinct()
     ids_b = ids_b if ids_b is not None else weights_b.select("id").distinct()
     allpairs = ids_a.select(F.col("id").alias("a_id")).crossJoin(

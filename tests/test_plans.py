@@ -139,9 +139,18 @@ def test_latest_per_user_single_shuffle(spark):
     assert "WindowGroupLimit" in plan
 
 
+def _is_dense_plan(sims) -> bool:
+    """True when the analyzed plan of a cosine join is a dense strategy:
+    the sparse form multiplies the token equi-join's ``w_a`` x ``w_b``
+    columns, the dense forms pivoted per-doc columns or arrays.
+    (BroadcastNestedLoopJoin cannot tell them apart: every TF-IDF plan
+    carries one through idf_table's 1-row doc-count attach.)"""
+    return "w_a#" not in sims._jdf.queryExecution().analyzed().toString()
+
+
 def test_dense_strategy_picked_only_for_small_vocab(spark):
-    """The auto similarity strategy must pick sparse on a realistic
-    (large) vocabulary and dense on a tiny one."""
+    """The auto similarity strategy picks dense only from a stated small
+    vocabulary; an unstated or large one picks sparse."""
     tok = tfidf_ops.tokenized(
         spark.read.parquet(f"{SF}/documents.parquet").select(
             F.col("doc_id").alias("id"), "text"
@@ -149,14 +158,14 @@ def test_dense_strategy_picked_only_for_small_vocab(spark):
     )
     idf = tfidf_ops.idf_table(tok)
     n_vocab = idf.count()
+    assert 0 < n_vocab <= sim.DENSE_VOCAB_THRESHOLD
     w = tfidf_ops.tfidf_weights(tok, idf)
     wa, wb = w.where(F.col("id") % 2 == 0), w.where(F.col("id") % 2 == 1)
-    auto_plan = plan_str(sim.cosine_similarity_join(wa, wb))
-    if n_vocab <= sim.DENSE_VOCAB_THRESHOLD:
-        # dense: broadcast cross join, no pair-level shuffle
-        assert "BroadcastNestedLoopJoin" in auto_plan
-    else:
-        assert "NestedLoopJoin" not in auto_plan
+    assert _is_dense_plan(sim.cosine_similarity_join(wa, wb, vocab_n=n_vocab))
+    assert not _is_dense_plan(sim.cosine_similarity_join(wa, wb))
+    assert not _is_dense_plan(
+        sim.cosine_similarity_join(wa, wb, vocab_n=sim.DENSE_VOCAB_THRESHOLD + 1)
+    )
 
 
 def test_tpch_q4_filter_pushed_and_preagg(spark):
