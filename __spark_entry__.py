@@ -148,19 +148,21 @@ def _weights_ab(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
 
 
 # bounded (token, idf) collections per (session id, sf_dir) -- one job each.
-# The strategy chooser only needs the vocab size up to the dense/sparse
-# cutoff, and the flat builder needs actual idf values only below
-# DENSE_UNROLL_MAX, so the collect is LIMITed: at most cutoff+1 rows come
-# back regardless of true vocabulary size (the driver-side analog of the
-# reference's broadcast idfDict, EntityResolution.scala:19, but bounded).
+# Every form decision reads the vocab size only up to DENSE_UNROLL_MAX
+# (the dense flat table; the bitmask's 63 is below it), and the flat
+# builder needs actual idf values only up to there, so the collect is
+# LIMITed: at most DENSE_UNROLL_MAX+1 rows come back regardless of true
+# vocabulary size (the driver-side analog of the reference's broadcast
+# idfDict, EntityResolution.scala:19, but bounded).
 _VOCAB_IDF: dict[tuple, tuple[SparkSession, tuple[int, list | None]]] = {}
 
 
 def _vocab_meta(spark: SparkSession, sf_dir: str) -> tuple[int, list | None]:
     """Returns (vocab_n_capped, vocab_idf_or_None): ``vocab_n_capped`` is
-    the exact vocabulary size when <= DENSE_VOCAB_THRESHOLD, else that
-    threshold + 1 (enough for every strategy decision); the (token, idf)
-    list (token-sorted) is present only when the flat-dense path applies.
+    the exact vocabulary size when <= DENSE_UNROLL_MAX, else
+    DENSE_UNROLL_MAX + 1 (enough for the dense-flat and bitmask
+    decisions); the (token, idf) list (token-sorted) is present only when
+    the dense flat table applies.
 
     Cache is keyed by sf_dir with the owning session stored alongside
     and identity-checked, mirroring _DF_CACHE: id(spark) alone collides
@@ -169,7 +171,7 @@ def _vocab_meta(spark: SparkSession, sf_dir: str) -> tuple[int, list | None]:
     slot = _VOCAB_IDF.get(key)
     hit = slot[1] if slot is not None and slot[0] is spark else None
     if hit is None:
-        cap = sim.DENSE_VOCAB_THRESHOLD + 1
+        cap = sim.DENSE_UNROLL_MAX + 1
         rows = _idf(spark, sf_dir).orderBy("token").limit(cap).collect()
         n = len(rows)
         pairs = (
@@ -187,13 +189,14 @@ def _vocab_n(spark: SparkSession, sf_dir: str) -> int:
 
 
 def _flats(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """Cached dense flat-vector table (side, id, norm, w0..) shared by the
-    candidate similarity join AND the all-pairs query. The two catalogs
-    are row-disjoint slices of ONE tokenized table, so the whole thing is
-    a single conditional-sum aggregation pass with side = id % 2 -- one
-    explode, ONE shuffle, no idf join, no pivot
-    (sim.dense_flat_table_from_tokens). None when the vocabulary is too
-    wide for the flat strategy."""
+    """Cached dense flat-vector table (side, id, w0.., norm) shared by the
+    candidate similarity join, the dot products AND the all-pairs query.
+    The two catalogs are row-disjoint slices of ONE tokenized table, so
+    the whole thing is a single conditional-sum aggregation pass with
+    side = id % 2 -- one explode, ONE shuffle, no idf join
+    (sim.dense_flat_table_from_tokens). The persist through _cached is
+    the plan barrier the dense operators require. None when the
+    vocabulary is empty or wider than DENSE_UNROLL_MAX."""
     _, pairs = _vocab_meta(spark, sf_dir)
     if pairs is None:
         return None
@@ -207,11 +210,17 @@ def _flats(spark: SparkSession, sf_dir: str) -> DataFrame | None:
 
 
 def _sims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cached candidate similarity table (a_id, b_id, sim). The form is
+    picked by the function called: the dense broadcast cross join over
+    the cached flat table when the vocabulary fits it (_flats), the
+    sparse token join otherwise. Both return the same pairs."""
+
     def build():
+        flats = _flats(spark, sf_dir)
+        if flats is not None:
+            return sim.dense_cosine_similarity(flats)
         wa, wb = _weights_ab(spark, sf_dir)
-        return sim.cosine_similarity_join(
-            wa, wb, vocab_n=_vocab_n(spark, sf_dir), flats=_flats(spark, sf_dir)
-        )
+        return sim.cosine_similarity_join(wa, wb)
 
     return _cached(spark, sf_dir, "sims", build)
 
@@ -308,13 +317,12 @@ def q_fast_cosine_join(spark, sf_dir):
 def q_cross_similarity(spark, sf_dir):
     wa, wb = _weights_ab(spark, sf_dir)
     ta, tb = _tok_ab(spark, sf_dir)
-    # dense vocab -> map-only direct form over the shared cached flat
-    # table (no pair-level shuffle); wide vocab -> left join against the
-    # cached token-blocked sims.
+    # vocabulary fits the flat table -> map-only direct form over the
+    # shared cached flats (no pair-level shuffle); wider -> left join
+    # against the cached token-blocked sims.
     out = sim.cross_cosine_similarity(
         wa, wb, ids_a=ta.select("id"), ids_b=tb.select("id"),
         sims=_sims(spark, sf_dir),
-        vocab_n=_vocab_n(spark, sf_dir),
         flats=_flats(spark, sf_dir),
     )
     return _round6(out, "sim")
@@ -341,13 +349,12 @@ def q_doc_similarity(spark, sf_dir):
 
 def q_dot_product(spark, sf_dir):
     """Sparse TF-IDF dot products per candidate pair (reference
-    calculateDotProduct, EntityResolution.scala:368-384). Same strategy
-    dispatch as the flagship cosine join (r11 optimization): on a dense
-    vocabulary the token equi-join explodes toward |pairs| * |vocab|
-    rows through an exchange, so the dot rides the shared cached flat
-    table map-only (dot > 0 <=> shares a token, weights strictly
-    positive -- the established fast_cosine_join equivalence); wide
-    vocabularies keep the sparse join."""
+    calculateDotProduct, EntityResolution.scala:368-384). Same two forms
+    as the flagship cosine join (_sims): when the vocabulary fits the
+    cached flat table the token equi-join would explode toward
+    |pairs| * |vocab| rows through an exchange, so the dot rides the
+    flats map-only (sim.dense_dot_products; dot > 0 <=> shares a token,
+    weights strictly positive); otherwise the sparse join."""
     flats = _flats(spark, sf_dir)
     if flats is not None:
         return _round6(sim.dense_dot_products(flats), "dot")

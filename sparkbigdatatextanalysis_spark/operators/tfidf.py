@@ -92,19 +92,17 @@ def idf_table(corpus_tok: DataFrame) -> DataFrame:
     )
 
 
-def tfidf_weights(tok_df: DataFrame, idf_df: DataFrame, broadcast_idf: bool = True) -> DataFrame:
+def tfidf_weights(tok_df: DataFrame, idf_df: DataFrame) -> DataFrame:
     """(id, tokens) x (token, idf) -> (id, token, weight = tf*idf).
 
     Replaces reference calculateTF_IDF / calculateTF_IDFBroadcast
     (EntityResolution.scala:340-366, ScalableEntityResolution.scala:264-277;
     the latter is O(|vocab|) per doc -- this join is O(|doc tokens|)).
-    Vocabulary is tiny relative to the corpus, so broadcast by default; at
-    extreme vocab sizes pass broadcast_idf=False for a shuffle join (AQE
-    will still pick broadcast if the stats allow).
+    Vocabulary is tiny relative to the corpus, so the idf side is
+    broadcast.
     """
     tf = term_frequencies(tok_df)
-    idf_side = F.broadcast(idf_df) if broadcast_idf else idf_df
-    return tf.join(idf_side, "token").select(
+    return tf.join(F.broadcast(idf_df), "token").select(
         "id", "token", (F.col("tf") * F.col("idf")).alias("weight")
     )
 

@@ -130,12 +130,15 @@ def test_bitmask_class_pairs_match_sparse_and_naive(spark, docs_a, docs_b):
         for j, sb in enumerate(docs_b)
         if sa & sb
     }
-    for strategy in ("bitmask", "sparse"):
+    # the stated vocabulary picks the form: its real size -> bitmask,
+    # unknown -> sparse
+    n_vocab = len(set().union(*docs_a, *docs_b))
+    for vocab_n in (n_vocab, None):
         got = {
             (r["a_id"], r["b_id"], r["n_common"])
-            for r in sim.common_token_pairs(idx_a, idx_b, strategy=strategy).collect()
+            for r in sim.common_token_pairs(idx_a, idx_b, vocab_n=vocab_n).collect()
         }
-        assert got == want, strategy
+        assert got == want, vocab_n
 
 
 SKEWED = st.lists(

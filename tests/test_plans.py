@@ -62,7 +62,7 @@ def test_sparse_similarity_join_never_nested_loop(spark):
     idf = tfidf_ops.idf_table(tok)
     w = tfidf_ops.tfidf_weights(tok, idf)
     wa, wb = w.where(F.col("id") % 2 == 0), w.where(F.col("id") % 2 == 1)
-    plan = plan_str(sim.cosine_similarity_join(wa, wb, strategy="sparse"))
+    plan = plan_str(sim.cosine_similarity_join(wa, wb))
     # No unbroadcast cartesian anywhere. (BroadcastNestedLoopJoin does
     # appear -- once per weights-lineage branch -- but only as the 1-row
     # corpus-size attach inside idf_table, never a pair-level cross.)
@@ -140,32 +140,27 @@ def test_latest_per_user_single_shuffle(spark):
 
 
 def _is_dense_plan(sims) -> bool:
-    """True when the analyzed plan of a cosine join is a dense strategy:
-    the sparse form multiplies the token equi-join's ``w_a`` x ``w_b``
-    columns, the dense forms pivoted per-doc columns or arrays.
+    """True when the analyzed plan of a cosine join is the dense form:
+    the sparse join multiplies the token equi-join's ``w_a`` x ``w_b``
+    columns, the dense form the flat table's per-doc columns.
     (BroadcastNestedLoopJoin cannot tell them apart: every TF-IDF plan
     carries one through idf_table's 1-row doc-count attach.)"""
     return "w_a#" not in sims._jdf.queryExecution().analyzed().toString()
 
 
 def test_dense_strategy_picked_only_for_small_vocab(spark):
-    """The auto similarity strategy picks dense only from a stated small
-    vocabulary; an unstated or large one picks sparse."""
+    """The entry module's candidate join plans dense on the fixture's small
+    vocabulary; cosine_similarity_join itself is always the sparse join."""
+    assert 0 < entry_mod._vocab_n(spark, SF) <= sim.DENSE_UNROLL_MAX
+    assert _is_dense_plan(entry_mod._sims(spark, SF))
     tok = tfidf_ops.tokenized(
         spark.read.parquet(f"{SF}/documents.parquet").select(
             F.col("doc_id").alias("id"), "text"
         )
     )
-    idf = tfidf_ops.idf_table(tok)
-    n_vocab = idf.count()
-    assert 0 < n_vocab <= sim.DENSE_VOCAB_THRESHOLD
-    w = tfidf_ops.tfidf_weights(tok, idf)
+    w = tfidf_ops.tfidf_weights(tok, tfidf_ops.idf_table(tok))
     wa, wb = w.where(F.col("id") % 2 == 0), w.where(F.col("id") % 2 == 1)
-    assert _is_dense_plan(sim.cosine_similarity_join(wa, wb, vocab_n=n_vocab))
     assert not _is_dense_plan(sim.cosine_similarity_join(wa, wb))
-    assert not _is_dense_plan(
-        sim.cosine_similarity_join(wa, wb, vocab_n=sim.DENSE_VOCAB_THRESHOLD + 1)
-    )
 
 
 def test_tpch_q4_filter_pushed_and_preagg(spark):

@@ -68,9 +68,9 @@ def test_blocked_gemm_string_ids(spark):
     assert got == {("doc-1", "doc-2", 1.0)}
 
 
-def test_dense_array_branch_keeps_zero_pairs(spark):
-    """cross_cosine_similarity through the array (non-flat) dense branch
-    must keep zero-dot pairs with sim 0.0."""
+def test_cross_similarity_wide_vocab_keeps_zero_pairs(spark):
+    """cross_cosine_similarity over a vocabulary wider than the dense
+    flat table (its join form) must keep zero-dot pairs with sim 0.0."""
     vocab = [f"t{i}" for i in range(300)]  # > DENSE_UNROLL_MAX
     wa = spark.createDataFrame(
         [(0, vocab[0], 1.0)], "id INT, token STRING, weight DOUBLE"
@@ -78,7 +78,7 @@ def test_dense_array_branch_keeps_zero_pairs(spark):
     wb = spark.createDataFrame(
         [(1, vocab[1], 1.0), (2, vocab[0], 1.0)], "id INT, token STRING, weight DOUBLE"
     )
-    out = sim._cosine_similarity_dense(wa, wb, vocab_n=300, keep_zero_pairs=True)
+    out = sim.cross_cosine_similarity(wa, wb)
     got = {(r["a_id"], r["b_id"], round(r["sim"], 6)) for r in out.collect()}
     assert got == {(0, 1, 0.0), (0, 2, 1.0)}
 
