@@ -13514,15 +13514,20 @@ def oracle_sql() -> dict[str, str]:
         JOIN nrm nb ON nb.source = source_b
     """
     # BFS: each hop replays as an unrolled frontier/reached CTE pair --
-    # exact set algebra, so levels are proven, not trusted.
+    # exact set algebra, so levels are proven, not trusted. MATERIALIZED:
+    # each hop reads the previous frontier AND reached set, so inlined
+    # CTEs re-expand every earlier hop (and the shingle self-join under
+    # `und`) exponentially -- 150 s at sf0.001 instead of 1 s.
     _bfs_levels_sql = []
     for h in range(1, 5):
         _bfs_levels_sql.append(
-            f"""l{h} AS (
+            f"""l{h} AS MATERIALIZED (
           SELECT DISTINCT t AS node FROM dirE JOIN l{h-1} ON s = l{h-1}.node
           WHERE t NOT IN (SELECT node FROM r{h-1})
         ),
-        r{h} AS (SELECT node FROM r{h-1} UNION ALL SELECT node FROM l{h})"""
+        r{h} AS MATERIALIZED (
+          SELECT node FROM r{h-1} UNION ALL SELECT node FROM l{h}
+        )"""
         )
     sqls["dedup_bfs_depths"] = f"""
         WITH {_DEDUP_BASE},
@@ -13533,7 +13538,7 @@ def oracle_sql() -> dict[str, str]:
           WHERE a.doc_id < b.doc_id
           GROUP BY 1, 2
         ),
-        und AS (
+        und AS MATERIALIZED (
           SELECT x, y FROM inter
           JOIN sizes na ON na.doc_id = x
           JOIN sizes nb ON nb.doc_id = y

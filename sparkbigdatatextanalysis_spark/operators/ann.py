@@ -1,24 +1,32 @@
 """Approximate-nearest-neighbor similarity search over embedding columns.
 
-Two paths, same exact-cosine rerank math:
+Four top-k searches, each returning (q_id, n_id, rank, cos) ranked by
+ONE window (:func:`_rank_topk`: 9-dp cosine desc, then neighbor id):
 
 * ``cosine_topk_bruteforce`` -- every query vector against every corpus
-  vector (crossJoin + zip_with dot product + window rank). O(n*q) exact
-  baseline; right answer at any scale where q is small or n fits a
-  partition-parallel sweep.
-* ``cosine_topk_lsh`` -- the 100 TB path: random-hyperplane (sign) LSH.
-  Signatures are computed map-only (one Arrow-batched int64 GEMM of the
+  vector (broadcast queries x streamed corpus, :func:`_broadcast_topk`).
+  O(n*q) exact baseline.
+* ``cosine_topk_quantized`` -- the same harness over the int8-quantized
+  corpus (exact integer-dot cosines of the rounded coordinates).
+* ``cosine_topk_lsh`` -- random-hyperplane (sign) LSH. Signatures are
+  computed map-only (one Arrow-batched int64 GEMM of the
   floor-quantized vectors against the +-1 plane matrix per batch --
   exact integer arithmetic, reproducible bit-for-bit in the DuckDB
   oracle). Candidates = equi-join on (band, bucket); exact cosine
-  rerank only within buckets, so cost ~ sum-of-bucket-sizes instead of
-  n per query. Bucket bit-width ADAPTS to the corpus count
-  (``adaptive_rows_per_band``): expected bucket size stays ~constant as
-  n grows, so the per-bucket join never degenerates quadratic.
+  rerank only within buckets. Bucket bit-width ADAPTS to the corpus
+  count (``adaptive_rows_per_band``), so expected bucket size stays
+  ~constant as n grows. Hyperplanes are deterministic +-1 matrices
+  from the same LCG used for MinHash params, embedded as literals in
+  both the Spark plan and the oracle SQL.
+* ``cosine_topk_ivf`` -- inverted file: Lloyd-refined centroids
+  (:func:`kmeans_centroids`) embedded as a plan literal, each vector
+  assigned to its closest centroid in-row, each query probing its
+  ``n_probe`` closest clusters and reranked exactly within them.
 
-Hyperplanes are deterministic +-1 matrices from the same LCG used for
-MinHash params, embedded as literals in both the Spark plan and the
-oracle SQL.
+The k-NN labelers compose a search with one shared vote stage:
+``knn_label_vote`` over the brute-force harness, ``knn_label_vote_ivf``
+over the same IVF kernel as ``cosine_topk_ivf`` (:func:`_ivf_topk`:
+probe, cluster join, exact rerank).
 """
 
 from __future__ import annotations
@@ -79,12 +87,6 @@ def _dot(a: Column, b: Column) -> Column:
     # shared implementation: functions.vector.vec_dot (identical fold
     # order, so results stay bit-exact with the DuckDB oracle)
     return vec_dot(a, b)
-
-
-def _int_dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, v: s + v
-    )
 
 
 def lsh_signatures(
@@ -171,6 +173,41 @@ def _norm_vecs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return emb.select(F.col(id_col).alias("id"), v.alias("v"), F.sqrt(_dot(v, v)).alias("norm"))
 
 
+def _as_queries(nv: DataFrame) -> DataFrame:
+    return nv.select(F.col("id").alias("q_id"), F.col("v").alias("qv"), F.col("norm").alias("qn"))
+
+
+def _as_neighbors(nv: DataFrame) -> DataFrame:
+    return nv.select(F.col("id").alias("n_id"), F.col("v").alias("nv"), F.col("norm").alias("nn"))
+
+
+def _query_vecs(nv: DataFrame, query_ids: DataFrame) -> DataFrame:
+    """(q_id, qv, qn) of the ids in the 1-column ``query_ids`` frame,
+    looked up with the (few) query ids broadcast -- never a broadcast
+    of the unfiltered corpus, which would collect every vector to the
+    driver."""
+    q = query_ids.select(F.col(query_ids.columns[0]).alias("id"))
+    return _as_queries(nv.join(F.broadcast(q), "id"))
+
+
+def _pair_cos() -> Column:
+    """Exact cosine of a (qv, qn) x (nv, nn) candidate row, rounded to
+    9 dp so ranks tie-break identically across engines."""
+    return F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 9)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, rank, cos): the top ``k`` of a (q_id, n_id, cos)
+    frame by (cos desc, n_id) -- the ONE neighbor-rank window of every
+    search here, so no two paths can drift on tie-breaks."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "n_id", "rank", "cos")
+    )
+
+
 def _broadcast_topk(
     qv: DataFrame, cand: DataFrame, score, k: int, drop_null_scores: bool = False,
     exclude_self: bool = True,
@@ -193,12 +230,7 @@ def _broadcast_topk(
     scored = scored.select("q_id", "n_id", score.alias("cos"))
     if drop_null_scores:
         scored = scored.where(F.col("cos").isNotNull())
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    return _rank_topk(scored, k)
 
 
 def cosine_topk_bruteforce(
@@ -213,15 +245,7 @@ def cosine_topk_bruteforce(
     Rank ties broken by neighbor id on the 9-dp-rounded cosine so results
     are deterministic across engines."""
     nv = _norm_vecs(emb, id_col, vec_col)
-    q = query_ids.withColumnRenamed(query_ids.columns[0], "q_id")
-    qv = nv.join(F.broadcast(q), nv.id == F.col("q_id")).select(
-        "q_id", F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
-    cand = nv.select(F.col("id").alias("n_id"), F.col("v").alias("nv"), F.col("norm").alias("nn"))
-    score = F.round(
-        _dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 9
-    )
-    return _broadcast_topk(qv, cand, score, k)
+    return _broadcast_topk(_query_vecs(nv, query_ids), _as_neighbors(nv), _pair_cos(), k)
 
 
 N_CENTROIDS = 16
@@ -326,7 +350,7 @@ def _best_centroid(v, norm, cents_arr):
 
 def _assign_from_lit(nv: DataFrame, cents_arr, extra_cols: tuple = ()) -> DataFrame:
     """ONE definition of corpus-to-centroid assignment over a literal
-    centroid array (shared by ivf_assignments, cosine_topk_ivf and
+    centroid array (shared by ivf_assignments, the IVF searches and
     dedup.semantic_dedup, so they cannot drift). NULL cluster arises
     only from an EMPTY centroid set (with any centroid present the
     score coalesces to -inf, never NULL); the filter reproduces the r3
@@ -445,13 +469,11 @@ def ivf_assignments(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = N_CENTROIDS,
     cents: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, cluster): inverted-file (IVF) coarse quantization. Pass
-    ``cents`` (c_id, cv, cn) -- e.g. :func:`kmeans_centroids` -- to
-    assign against refined centroids; default is the deterministic
-    first-``n_centroids``-by-id seed set.
+    """(id, cluster): inverted-file (IVF) coarse quantization against
+    the centroid table ``cents`` (c_id, cv, cn); when omitted it is
+    :func:`kmeans_centroids` over ``emb`` at its defaults.
 
     Assignment is a map-only in-row literal argmax (:func:`_cents_lit` /
     :func:`_best_centroid`): the centroid set is collected driver-side
@@ -461,10 +483,56 @@ def ivf_assignments(
     At 100 TB this is one narrow pass; the cluster column then
     partitions all downstream search.
     """
-    nv = _norm_vecs(emb, id_col, vec_col)
     if cents is None:
-        cents = _init_centroids(nv, n_centroids)
-    return _assign_from_lit(nv, _cents_lit(_collect_cents(cents)))
+        cents = kmeans_centroids(emb, id_col, vec_col)
+    return _assign_from_lit(_norm_vecs(emb, id_col, vec_col), _cents_lit(_collect_cents(cents)))
+
+
+def _ivf_index(nv: DataFrame, cents: DataFrame) -> tuple[Column, DataFrame]:
+    """The query-independent half of an IVF search: (centroid literal,
+    assignment (id, cluster, nv, nn)). The centroid set is tiny model
+    state, collected ONCE and embedded in both the assignment and the
+    probes; the assignment carries each vector and its norm, so the
+    candidate join never goes back to the corpus."""
+    cents_arr = _cents_lit(_collect_cents(cents))
+    assign = _assign_from_lit(
+        nv, cents_arr, extra_cols=(F.col("v").alias("nv"), F.col("norm").alias("nn"))
+    )
+    return cents_arr, assign
+
+
+def _ivf_topk(
+    qv: DataFrame,
+    cents_arr,
+    assign: DataFrame,
+    n_probe: int,
+    k: int,
+    exclude_self: bool = True,
+    broadcast_probes: bool = False,
+) -> DataFrame:
+    """The IVF probe, candidate join and exact rerank shared by
+    :func:`cosine_topk_ivf` and :func:`knn_label_vote_ivf`: (q_id, qv,
+    qn) queries x an :func:`_ivf_index` assignment -> (q_id, n_id, rank,
+    cos).
+
+    Each query's ``n_probe`` closest clusters come in-row, by the same
+    mechanism as the corpus argmax: reverse array_sort of the (cos,
+    neg_cid) structs is exactly the window's (cos DESC, c_id ASC) order,
+    and slice + explode replaces a row_number exchange. Candidates are
+    one equi-join on the cluster id, broadcasting the probe side when
+    ``broadcast_probes`` (a few queries) and a plain hash join otherwise
+    (query cardinality unbounded); ``exclude_self`` drops q_id == n_id."""
+    scores = _cent_scores(F.col("qv"), F.col("qn"), cents_arr)
+    top = F.slice(F.reverse(F.array_sort(scores)), 1, n_probe)
+    probes = qv.select(
+        "q_id", "qv", "qn", F.explode(F.transform(top, lambda s: -s["neg_cid"])).alias("cluster")
+    )
+    if broadcast_probes:
+        probes = F.broadcast(probes)
+    cand = probes.join(assign, "cluster")
+    if exclude_self:
+        cand = cand.where(F.col("q_id") != F.col("id"))
+    return _rank_topk(cand.select("q_id", F.col("id").alias("n_id"), _pair_cos().alias("cos")), k)
 
 
 def cosine_topk_ivf(
@@ -473,72 +541,26 @@ def cosine_topk_ivf(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = N_CENTROIDS,
     n_probe: int = N_PROBE,
-    refine_iters: int = KMEANS_ITERS,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF: each query probes its ``n_probe``
     closest centroids and reranks exactly only within those clusters --
     per-query work is bounded by the probed clusters' sizes instead of
     the corpus. Same output schema as the brute force; recall < 1 is the
-    trade, tunable with n_probe. Centroids are Lloyd-refined for
-    ``refine_iters`` rounds (:func:`kmeans_centroids`); 0 pins the raw
-    deterministic seed set. Pass ``cents`` (c_id, cv, cn) to reuse a
-    previously built (and typically persisted) centroid table -- the
-    index-build/query split every repeated-batch deployment wants."""
+    trade, tunable with n_probe. ``cents`` (c_id, cv, cn) is the
+    centroid table, typically built once by :func:`kmeans_centroids` and
+    reused across calls -- the index-build/query split every
+    repeated-batch deployment wants; when omitted it is
+    :func:`kmeans_centroids` over ``emb`` at its defaults."""
     nv = _norm_vecs(emb, id_col, vec_col)
     if cents is None:
-        if refine_iters > 0:
-            cents = kmeans_centroids(
-                emb, id_col, vec_col, n_centroids, n_iter=refine_iters
-            )
-        else:
-            cents = _init_centroids(nv, n_centroids)
-    # The centroid set is tiny model state: collect ONCE and embed as a
-    # literal in both the corpus assignment (shared _assign_from_lit
-    # definition -- same semantics as ivf_assignments) and the query
-    # probes.
-    cents_arr = _cents_lit(_collect_cents(cents))
+        cents = kmeans_centroids(emb, id_col, vec_col)
+    cents_arr, assign = _ivf_index(nv, cents)
     # persist: assignments feed every probed-cluster lookup.
-    assign = _assign_from_lit(nv, cents_arr).persist()
-
-    q = query_ids.withColumnRenamed(query_ids.columns[0], "q_id")
-    qv = nv.join(F.broadcast(q), nv.id == F.col("q_id")).select(
-        "q_id", F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
-    # In-row top-n_probe (same mechanism as the corpus argmax): reverse
-    # array_sort of the (cos, neg_cid) structs is exactly the window's
-    # (cos DESC, c_id ASC) order; slice + explode replaces the
-    # row_number exchange.
-    probes = qv.select(
-        "q_id",
-        F.slice(
-            F.reverse(F.array_sort(_cent_scores(F.col("qv"), F.col("qn"), cents_arr))),
-            1,
-            n_probe,
-        ).alias("_top"),
-    ).select(
-        "q_id", F.explode(F.transform("_top", lambda s: -s["neg_cid"])).alias("cluster")
-    )
-
-    cand = (
-        F.broadcast(probes)
-        .join(assign, "cluster")
-        .where(F.col("id") != F.col("q_id"))
-        .select("q_id", F.col("id").alias("n_id"))
-    )
-    cv = nv.select(F.col("id").alias("n_id"), F.col("v").alias("nv"), F.col("norm").alias("nn"))
-    scored = cand.join(F.broadcast(qv), "q_id").join(cv, "n_id").select(
-        "q_id",
-        "n_id",
-        F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 9).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
+    assign = assign.persist()
+    return _ivf_topk(
+        _query_vecs(nv, query_ids), cents_arr, assign, n_probe, k, broadcast_probes=True
     )
 
 
@@ -549,7 +571,6 @@ def cosine_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     rows_per_band: int | None = None,
-    multi_probe: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates limited to vectors sharing >=1 LSH
     band bucket with the query, then exact cosine rerank. Same output
@@ -557,63 +578,32 @@ def cosine_topk_lsh(
     Bucket width adapts to the corpus count (adaptive_rows_per_band)
     unless pinned via ``rows_per_band``.
 
-    ``multi_probe`` (Lv et al.'s multi-probe LSH, restricted to
-    single-bit perturbations): additionally probe every bucket at
-    Hamming distance 1 from each QUERY band key -- a near-miss on one
-    hyperplane sign no longer loses the candidate. The expansion is
-    query-side only (queries are few and broadcast), so the corpus
-    signature table, its shuffle, and the rerank shape are unchanged;
-    candidates grow by at most (1 + rows_per_band)x. Recall is
-    monotonically >= the single-probe run at equal parameters
-    (recall-tested); the alternative recall lever -- fewer rows per
-    band -- grows EVERY bucket corpus-side instead.
+    The query side signs only the query vectors (the corpus
+    semi-joined to the broadcast query ids, then the same map-only
+    GEMM), so no signature table is shared between the two sides of
+    the bucket join and nothing is persisted.
     """
     if rows_per_band is None:
         rows_per_band = adaptive_rows_per_band(emb.count())
-    # persist: sigs feeds both the query side and the corpus side of the
-    # bucket join; without the barrier the signature plan runs twice.
-    sigs = lsh_signatures(emb, id_col, vec_col, rows_per_band=rows_per_band).persist()
-    nv = _norm_vecs(emb, id_col, vec_col)
-    q = query_ids.withColumnRenamed(query_ids.columns[0], "q_id")
-    qsig = sigs.join(F.broadcast(q), sigs.id == F.col("q_id")).select("q_id", "band", "bucket")
-    if multi_probe:
-        flips = F.array(
-            F.lit(0), *[F.lit(1 << b) for b in range(rows_per_band)]
-        )
-        qsig = qsig.select(
-            "q_id",
-            "band",
-            F.explode(flips).alias("_flip"),
-            F.col("bucket").alias("_b0"),
-        ).select(
-            "q_id",
-            "band",
-            F.col("_b0").bitwiseXOR(F.col("_flip")).alias("bucket"),
-        )
+    q = query_ids.select(F.col(query_ids.columns[0]).alias(id_col))
+    qsig = lsh_signatures(
+        emb.join(F.broadcast(q), id_col, "left_semi"), id_col, vec_col,
+        rows_per_band=rows_per_band,
+    ).select(F.col("id").alias("q_id"), "band", "bucket")
+    sigs = lsh_signatures(emb, id_col, vec_col, rows_per_band=rows_per_band)
     pairs = (
         qsig.join(sigs, ["band", "bucket"])
         .where(F.col("q_id") != F.col("id"))
         .select("q_id", F.col("id").alias("n_id"))
         .distinct()
     )
-    # query vectors only -- broadcasting the unfiltered corpus table here
-    # would collect every vector to the driver (the bruteforce/IVF paths
-    # already filter; this one must too)
-    qv = nv.join(F.broadcast(q), nv.id == F.col("q_id")).select(
-        "q_id", F.col("v").alias("qv"), F.col("norm").alias("qn")
+    nv = _norm_vecs(emb, id_col, vec_col)
+    scored = (
+        pairs.join(F.broadcast(_query_vecs(nv, query_ids)), "q_id")
+        .join(_as_neighbors(nv), "n_id")
+        .select("q_id", "n_id", _pair_cos().alias("cos"))
     )
-    cv = nv.select(F.col("id").alias("n_id"), F.col("v").alias("nv"), F.col("norm").alias("nn"))
-    scored = pairs.join(F.broadcast(qv), "q_id").join(cv, "n_id").select(
-        "q_id",
-        "n_id",
-        F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 9).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    return _rank_topk(scored, k)
 
 
 def cosine_topk_quantized(
@@ -698,20 +688,9 @@ def knn_label_vote(
     if k < 1:
         raise ValueError(f"knn_label_vote: k must be >= 1, got {k}")
     labeled = corpus_emb.where(F.col(label_col).isNotNull())
-    nvq = _norm_vecs(queries_emb, id_col, vec_col).select(
-        F.col("id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-    )
-    nvc = _norm_vecs(labeled, id_col, vec_col).select(
-        F.col("id").alias("n_id"),
-        F.col("v").alias("nv"),
-        F.col("norm").alias("nn"),
-    )
-    score = F.round(
-        _dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 9
-    )
-    topk = _broadcast_topk(nvq, nvc, score, k, exclude_self=exclude_self)
+    nvq = _as_queries(_norm_vecs(queries_emb, id_col, vec_col))
+    nvc = _as_neighbors(_norm_vecs(labeled, id_col, vec_col))
+    topk = _broadcast_topk(nvq, nvc, _pair_cos(), k, exclude_self=exclude_self)
     return _vote_from_topk(topk, labeled, id_col, label_col)
 
 
@@ -758,9 +737,7 @@ def knn_label_vote_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
-    n_centroids: int = N_CENTROIDS,
     n_probe: int = N_PROBE,
-    refine_iters: int = KMEANS_ITERS,
     cents: DataFrame | None = None,
     exclude_self: bool = True,
 ) -> DataFrame:
@@ -769,71 +746,33 @@ def knn_label_vote_ivf(
     broadcast-queries cross join. This is the PRODUCTION shape for
     weak-labeling, where the UNLABELED query side is the big one:
 
-    - the index (Lloyd-refined centroids over the labeled corpus) is
-      bounded model state, collected once and embedded as a literal;
+    - the index (centroids over the labeled corpus) is bounded model
+      state, collected once and embedded as a literal;
     - corpus assignment AND query probing are both map-only in-row
       argmaxes over that literal -- neither side is broadcast or
       collected, so query cardinality is unbounded;
     - candidates come from ONE plain hash equi-join on the cluster id
       (shuffle ~ n_probe x queries + corpus; a hot cluster is an AQE
-      skew split, not a plan change), then the exact rerank and the
+      skew split, not a plan change), then the exact rerank
+      (:func:`_ivf_topk`, shared with :func:`cosine_topk_ivf`) and the
       shared deterministic vote.
 
-    Recall < 1 is the trade (n_probe tunes it); with
-    ``n_probe == n_centroids`` the candidate set equals brute force's
-    and the votes are IDENTICAL to :func:`knn_label_vote` -- pinned in
-    tests. Same output schema and id-space contract as the brute
-    force; pass ``cents`` to reuse a persisted index."""
+    ``cents`` (c_id, cv, cn) is the centroid table, typically a
+    persisted :func:`kmeans_centroids` build reused across calls; when
+    omitted it is :func:`kmeans_centroids` over the LABELED corpus at
+    its defaults. Recall < 1 is the trade (n_probe tunes it); when
+    ``n_probe`` covers every centroid the candidate set equals brute
+    force's and the votes are IDENTICAL to :func:`knn_label_vote` --
+    pinned in tests. Same output schema and id-space contract as the
+    brute force."""
     if k < 1:
         raise ValueError(f"knn_label_vote_ivf: k must be >= 1, got {k}")
     labeled = corpus_emb.where(F.col(label_col).isNotNull())
     if cents is None:
-        cents = kmeans_centroids(
-            labeled, id_col, vec_col, n_centroids, n_iter=refine_iters
-        )
-    cents_arr = _cents_lit(_collect_cents(cents))
-    nvc = _norm_vecs(labeled, id_col, vec_col)
-    assign = _assign_from_lit(
-        nvc,
-        cents_arr,
-        extra_cols=(F.col("v").alias("nv"), F.col("norm").alias("nn")),
-    )
-    nvq = _norm_vecs(queries_emb, id_col, vec_col)
-    probes = nvq.select(
-        F.col("id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.reverse(
-                        F.array_sort(
-                            _cent_scores(F.col("v"), F.col("norm"), cents_arr)
-                        )
-                    ),
-                    1,
-                    n_probe,
-                ),
-                lambda s: -s["neg_cid"],
-            )
-        ).alias("cluster"),
-    )
-    cand = probes.join(assign, "cluster")
-    if exclude_self:
-        cand = cand.where(F.col("q_id") != F.col("id"))
-    scored = cand.select(
-        "q_id",
-        F.col("id").alias("n_id"),
-        F.round(
-            _dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 9
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id")
-    )
+        cents = kmeans_centroids(labeled, id_col, vec_col)
+    cents_arr, assign = _ivf_index(_norm_vecs(labeled, id_col, vec_col), cents)
+    qv = _as_queries(_norm_vecs(queries_emb, id_col, vec_col))
+    topk = _ivf_topk(qv, cents_arr, assign, n_probe, k, exclude_self=exclude_self)
     return _vote_from_topk(topk, labeled, id_col, label_col)
 
 

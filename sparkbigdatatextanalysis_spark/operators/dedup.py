@@ -137,26 +137,6 @@ def minhash_signatures(sh: DataFrame, params=MINHASH_PARAMS) -> DataFrame:
     )
 
 
-def lsh_band_keys(sigs: DataFrame, bands: int = LSH_BANDS) -> DataFrame:
-    """(id, band, key): signature values of each band concatenated in
-    hash-function order into one join key. Takes the long (id, i, sig)
-    form; the pair pipeline uses :func:`lsh_band_keys_flat` instead."""
-    rows = MINHASH_K // bands
-    return (
-        sigs.withColumn("band", (F.col("i") / rows).cast("int"))
-        .groupBy("id", "band")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "sig"))),
-                    lambda s: s["sig"].cast("string"),
-                ),
-            ).alias("key")
-        )
-    )
-
-
 def lsh_band_keys_flat(
     flat: DataFrame, bands: int = LSH_BANDS, k: int = MINHASH_K
 ) -> DataFrame:

@@ -49,7 +49,7 @@ def _flats(spark, texts=TEXTS):
 
 def test_er_plan_builds_lazily_and_leaves_no_cache(spark):
     sc = spark.sparkContext
-    persisted = sc._jsc.getPersistentRDDs().size()
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
     wa, wb = _weights(spark)
     tok = _tokenized(spark)
     idx_a = sim.inverted_index(tok.where(F.col("id") % 2 == 0))
@@ -71,7 +71,9 @@ def test_er_plan_builds_lazily_and_leaves_no_cache(spark):
     assert len(first) == 101
     assert sorted(sims.collect()) == sorted(sims.collect())
     assert sorted(pairs.collect()) == sorted(pairs.collect())
-    assert sc._jsc.getPersistentRDDs().size() == persisted
+    # subset, not equality: Spark's context cleaner may meanwhile drop
+    # RDDs that earlier tests persisted and no longer reference
+    assert set(sc._jsc.getPersistentRDDs().keySet()) <= persisted
 
 
 def test_dense_flat_results_match_sparse(spark):

@@ -1,9 +1,8 @@
-"""MLlib library-path operators vs the exact hand-built ones.
+"""Recall and sanity checks of the approximate ANN paths (sign-LSH,
+IVF, int8-quantized) against the exact brute-force top-k.
 
-These are recall/sanity checks, not value-parity: the MLlib paths use
-log-IDF, hashed features, and probabilistic LSH (seeded, so the tests
-are deterministic), which is exactly why they sit outside the
-DuckDB-oracle surface.
+These bound recall rather than pin values: value parity of the gated
+ANN queries is the DuckDB oracle's job (tests/test_oracle_parity.py).
 """
 
 from __future__ import annotations
@@ -12,20 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkbigdatatextanalysis_spark.operators import ann as ann_ops
-from sparkbigdatatextanalysis_spark.operators import dedup as dd
-from sparkbigdatatextanalysis_spark.operators import mllib_similarity as ml
 
 from conftest import sf_dir
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    # unpersist on teardown: a lingering cached scan would make later
-    # plan tests resolve the parquet read to an InMemoryRelation,
-    # hiding PushedFilters (cache lookup matches by plan subsumption)
-    df = spark.read.parquet(f"{sf_dir('0.001')}/documents.parquet").cache()
-    yield df
-    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -33,35 +20,6 @@ def emb(spark):
     df = spark.read.parquet(f"{sf_dir('0.001')}/embeddings.parquet").cache()
     yield df
     df.unpersist()
-
-
-def test_tfidf_features_shape(spark, docs):
-    out = ml.tfidf_features(docs)
-    assert out.columns == ["id", "features"]
-    assert out.count() == docs.count()
-    row = out.first()
-    # vector is hashed-sparse with positive weights
-    assert row["features"].size == 1 << 18
-    assert all(v >= 0 for v in row["features"].values)
-
-
-def test_minhash_lsh_candidates_recall(spark, docs):
-    """Every exact high-Jaccard pair should be recalled by the seeded
-    MinHashLSH join at a permissive distance threshold."""
-    exact = {
-        (r["a_id"], r["b_id"])
-        for r in dd.ngram_jaccard_pairs(docs, min_jaccard=0.8).collect()
-    }
-    if not exact:
-        pytest.skip("no exact near-dup pairs at this SF")
-    lib = {
-        (r["a_id"], r["b_id"])
-        for r in ml.minhash_lsh_candidate_pairs(
-            docs, max_jaccard_distance=0.5, num_hash_tables=8
-        ).collect()
-    }
-    recalled = len(exact & lib) / len(exact)
-    assert recalled >= 0.9, (len(exact), len(lib), recalled)
 
 
 def test_adaptive_rows_per_band_rule():
@@ -121,62 +79,17 @@ def test_kmeans_ivf_recall_not_worse_than_seed(spark, emb):
         (r["q_id"], r["n_id"])
         for r in ann_ops.cosine_topk_bruteforce(emb, queries, k=5).collect()
     }
-    def recall(refine_iters):
+    def recall(n_iter):
+        cents = ann_ops.kmeans_centroids(emb, n_iter=n_iter)
         got = {
             (r["q_id"], r["n_id"])
             for r in ann_ops.cosine_topk_ivf(
-                emb, queries, k=5, refine_iters=refine_iters
+                emb, queries, k=5, cents=cents
             ).collect()
         }
         return len(exact & got) / len(exact)
     assert recall(ann_ops.KMEANS_ITERS) >= recall(0) - 0.2  # no collapse
     assert recall(ann_ops.KMEANS_ITERS) >= 0.3
-
-
-def test_brp_lsh_neighbors_overlap(spark, emb):
-    """Seeded BRP-LSH top-k should substantially overlap the exact
-    brute-force top-k (cosine ordering == euclidean on normalized)."""
-    queries = emb.select("vec_id").orderBy("vec_id").limit(5)
-    exact = {
-        (r["q_id"], r["n_id"])
-        for r in ann_ops.cosine_topk_bruteforce(emb, queries, k=5).collect()
-    }
-    lib = {
-        (r["q_id"], r["n_id"])
-        for r in ml.brp_lsh_neighbors(emb, queries, k=5).collect()
-    }
-    overlap = len(exact & lib) / len(exact)
-    assert overlap >= 0.6, (len(exact), len(lib), overlap)
-
-
-def test_multi_probe_lsh_recall_not_worse(spark, emb):
-    """Multi-probe (Hamming-1 query buckets) must recall AT LEAST every
-    single-probe result at identical parameters -- the candidate set is
-    a superset by construction -- and measurably improve recall on this
-    hard (near-background-cosine) corpus."""
-    queries = emb.select("vec_id").orderBy("vec_id").limit(5)
-    exact = {
-        (r["q_id"], r["n_id"])
-        for r in ann_ops.cosine_topk_bruteforce(emb, queries, k=5).collect()
-    }
-    single = {
-        (r["q_id"], r["n_id"])
-        for r in ann_ops.cosine_topk_lsh(
-            emb, queries, k=5, rows_per_band=8
-        ).collect()
-    }
-    multi = {
-        (r["q_id"], r["n_id"])
-        for r in ann_ops.cosine_topk_lsh(
-            emb, queries, k=5, rows_per_band=8, multi_probe=True
-        ).collect()
-    }
-    r_single = len(exact & single) / len(exact)
-    r_multi = len(exact & multi) / len(exact)
-    # Only the superset property is guaranteed by construction; strict
-    # improvement depends on the fixture/plane seed and would couple the
-    # test to data regeneration.
-    assert r_multi >= r_single, (r_single, r_multi)
 
 
 def test_ivf_recall_vs_exact_sf01(spark):
@@ -222,3 +135,23 @@ def test_quantized_topk_recall_vs_exact(spark):
     }
     recall = len(exact & quant) / len(exact)
     assert recall >= 0.85, recall
+
+
+def test_lsh_and_knn_ivf_leave_no_cache_behind(spark, emb):
+    """Neither the LSH search nor the IVF labeler persists anything:
+    two calls each add no persistent RDD to the session and return
+    identical rows."""
+    emb.count()  # materialize the fixture's own cache first
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    queries = emb.select("vec_id").orderBy("vec_id").limit(5)
+    odd, even = emb.where(F.col("vec_id") % 2 == 1), emb.where(F.col("vec_id") % 2 == 0)
+    for run in (
+        lambda: ann_ops.cosine_topk_lsh(emb, queries, k=5),
+        lambda: ann_ops.knn_label_vote_ivf(odd, even, k=5),
+    ):
+        first, second = sorted(run().collect()), sorted(run().collect())
+        assert first and first == second
+        # subset, not equality: Spark's context cleaner may meanwhile
+        # drop RDDs that earlier tests persisted and no longer reference
+        assert set(jsc.getPersistentRDDs().keySet()) <= before

@@ -264,15 +264,18 @@ def test_doc_fingerprint_equal_for_equal_docs(spark):
 def test_ivf_topk_matches_bruteforce_within_probed_clusters(spark, small_emb):
     qids = small_emb.select("vec_id").where(F.col("vec_id") < 2)
     bf = ann.cosine_topk_bruteforce(small_emb, qids, k=3)
-    ivf = ann.cosine_topk_ivf(small_emb, qids, k=3, n_centroids=2, n_probe=2)
+    cents = ann.kmeans_centroids(small_emb, n_centroids=2)
+    ivf = ann.cosine_topk_ivf(small_emb, qids, k=3, n_probe=2, cents=cents)
     got = {(r["q_id"], r["n_id"], r["rank"]) for r in ivf.collect()}
-    # n_probe == n_centroids probes everything -> IVF must equal brute force
+    # n_probe == centroid count probes everything -> IVF must equal brute force
     expected = {(r["q_id"], r["n_id"], r["rank"]) for r in bf.collect()}
     assert got == expected
 
 
 def test_ivf_assignments_cover_all_vectors_once(spark, small_emb):
-    a = ann.ivf_assignments(small_emb, n_centroids=2)
+    # the unrefined first-2-by-id seed set: cluster ids are vec ids 0, 1
+    cents = ann.kmeans_centroids(small_emb, n_centroids=2, n_iter=0)
+    a = ann.ivf_assignments(small_emb, cents=cents)
     rows = a.collect()
     assert len(rows) == small_emb.count()
     assert len({r["id"] for r in rows}) == len(rows)

@@ -247,7 +247,14 @@ BUDGETS = {
     # is therefore invisible to this downstream-plan audit -- its
     # assignment/means stages are pinned separately in
     # test_ivf_internal_stage_budgets below.
-    "ann_topk_ivf": (7, 2),
+    # 7 -> 4: the assignment carries (v, norm) and the broadcast probe
+    # table carries the query vectors, so the candidates are scored
+    # straight out of the cluster join. Gone: the join back to the
+    # corpus and the second query-vector lookup, each of which read
+    # its own fanned-out scan (3 exchanges, 3 broadcasts at this
+    # scale). The ceiling is the measured count so the re-join cannot
+    # return.
+    "ann_topk_ivf": (4, 2),
     "common_token_pairs": (31, 0),
     "cosine_similarity": (31, 0),
     # --- r6 additions: the ExactSubstr subtraction half + the two
@@ -545,9 +552,12 @@ BUDGETS = {
     "docs_perplexity_buckets": (16, 5),
     # ANN recall curve: brute-force truth + THREE IVF probe levels in
     # one plan; the persisted truth/assignment subtrees flatten per
-    # consumer (executed exchanges ~15, each probe level a bounded
-    # per-query window over its probed clusters)
-    "embeddings_ann_recall_curve": (47, 24),
+    # consumer (each probe level a bounded per-query window over its
+    # probed clusters). Measured 38/15 since the IVF corpus re-join
+    # went (47/24 before): per probe level 3 exchanges and 3 broadcasts
+    # fewer, as in ann_topk_ivf -- the query vectors ride the one
+    # broadcast probe table and nothing re-reads the corpus.
+    "embeddings_ann_recall_curve": (38, 15),
     # Mann-Kendall: monthly agg feeds the pair self-join (bounded side
     # broadcast) + the tie groupBy; executed count 6 (two consumers of
     # the unpersisted monthly agg)
@@ -595,8 +605,15 @@ BUDGETS = {
     "dedup_bcubed_eval": (8, 5),
     # quantization audit: two documented brute-force passes (float topk
     # + quant topk, the hubness baseline shape) + pair equi-joins over
-    # the persisted quant table
-    "embeddings_quantization_error": (20, 11),
+    # the persisted quant table. 20 -> 24 with the shared all-vectors
+    # float baseline (_bf_topk_all): `scored` has two consumers (the
+    # per-rank stats and the overlap semi-join), so the cached
+    # baseline's subtree (rank window + 3 scan fan-outs) prints twice,
+    # and the semi-join's runtime bloom-filter subquery adds 2 more.
+    # 15 of the 24 are local-mode scan fan-outs; the data-proportional
+    # hash/single exchanges are 9, and the baseline executes once per
+    # session.
+    "embeddings_quantization_error": (24, 11),
     # debounce: ONE (user,type) exchange shared by lag window, burst
     # cumsum and the burst agg
     "events_debounce": (1, 0),

@@ -71,7 +71,15 @@ def test_sparse_similarity_join_never_nested_loop(spark):
     assert any(j in plan for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
 
 
-def test_no_row_python_udf_anywhere(spark):
+@pytest.fixture(scope="module")
+def all_plans(spark) -> dict[str, str]:
+    """Formatted physical plan of every declared query, built once for
+    the whole-surface checks below (building all of them is the bulk of
+    this module's run time)."""
+    return {name: plan_str(fn(spark, SF)) for name, fn in entry_mod.queries().items()}
+
+
+def test_no_row_python_udf_anywhere(all_plans):
     """Every declared query plan must stay JVM-side except the multimodal
     Arrow/mapInPandas operators (and streaming helpers built for batch)."""
     # ann_topk_lsh / dedup_embedding_lsh: sign-LSH signatures are one
@@ -98,9 +106,7 @@ def test_no_row_python_udf_anywhere(spark):
     # on the running state of all PRIOR rows), so the key group is the
     # parallelism unit by construction
     allowed_grouped = {"dedup_embedding", "events_anomaly"}
-    for name, fn in entry_mod.queries().items():
-        df = fn(spark, SF)
-        plan = plan_str(df)
+    for name, plan in all_plans.items():
         assert "BatchEvalPython" not in plan, f"row UDF in {name}"
         if name not in allowed_python:
             assert "ArrowEvalPython" not in plan, f"pandas UDF in {name}"
@@ -109,14 +115,13 @@ def test_no_row_python_udf_anywhere(spark):
             assert "FlatMapGroupsInPandas" not in plan, f"applyInPandas in {name}"
 
 
-def test_no_unbroadcast_cartesian_anywhere(spark):
+def test_no_unbroadcast_cartesian_anywhere(all_plans):
     """No declared query may plan a CartesianProduct (an UNBROADCAST
     pair-level cross). BroadcastNestedLoopJoin is permitted: it appears
     as the 1-row corpus-size attach and as the intentional
     broadcast-side cross of the dense/brute-force strategies, both of
     which stream the big side exactly once."""
-    for name, fn in entry_mod.queries().items():
-        plan = plan_str(fn(spark, SF))
+    for name, plan in all_plans.items():
         assert "CartesianProduct" not in plan, f"cartesian in {name}"
 
 

@@ -32,8 +32,8 @@ def test_hubness_over_ivf_full_probe_equals_bruteforce(spark):
             emb,
             qids,
             k=5,
-            n_centroids=ann_ops.N_CENTROIDS,
             n_probe=ann_ops.N_CENTROIDS,
+            cents=ann_ops.kmeans_centroids(emb, n_centroids=ann_ops.N_CENTROIDS),
         ).collect()
     }
     assert bf == ivf
@@ -84,8 +84,8 @@ def test_triplet_margin_over_ivf_neighbors_full_probe(spark):
             emb,
             qids,
             k=k,
-            n_centroids=ann_ops.N_CENTROIDS,
             n_probe=ann_ops.N_CENTROIDS,
+            cents=ann_ops.kmeans_centroids(emb, n_centroids=ann_ops.N_CENTROIDS),
         ).collect()
     )
     assert bf == ivf and len(bf) > 0
@@ -108,8 +108,8 @@ def test_mmr_pool_over_ivf_full_probe_equals_bruteforce(spark):
         emb,
         qids,
         k=entrymod._MMR_POOL,
-        n_centroids=ann_ops.N_CENTROIDS,
         n_probe=ann_ops.N_CENTROIDS,
+        cents=ann_ops.kmeans_centroids(emb, n_centroids=ann_ops.N_CENTROIDS),
     ).collect()
     got = {(int(r["n_id"]), round(float(r["cos"]), 9)) for r in ivf}
     assert got == set(pool)

@@ -297,8 +297,8 @@ def test_ann_recall_monotone_and_full_probe_exact(spark):
             emb,
             qids,
             k=entrymod.ANN_K,
-            n_centroids=ann_ops.N_CENTROIDS,
             n_probe=ann_ops.N_CENTROIDS,
+            cents=ann_ops.kmeans_centroids(emb, n_centroids=ann_ops.N_CENTROIDS),
         ).collect()
     }
     assert full == truth
