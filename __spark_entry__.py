@@ -3993,7 +3993,7 @@ def q_embeddings_knn_label_ivf(spark, sf_dir):
     """The at-scale twin of embeddings_knn_label (operators/ann.py::
     knn_label_vote_ivf, r9 verdict item 4): same odd-queries /
     even-labeled-corpus split, but neighbors come from the IVF probe --
-    literal-centroid map-only assignment on BOTH sides, candidates from
+    map-only in-row centroid ranking on BOTH sides, candidates from
     one plain hash equi-join on the cluster id -- so neither the query
     nor the corpus side is ever broadcast or collected (the brute-force
     gate streams the corpus past broadcast queries; this shape is the
@@ -7518,10 +7518,9 @@ def q_embeddings_ann_recall_curve(spark, sf_dir):
     baseline at gate scale; at 100 TB the truth is a sampled query
     subset (the blocking_quality truth_sample_rate pattern) while the
     IVF side IS the production path. Centroids come from the shared
-    cached index build; the three probe levels re-run assignment
-    against the same literal centroid table (production would share
-    the persisted assignment across probe levels -- the per-level cost
-    here is one map-only pass each)."""
+    cached index build; the three probe levels share one persisted
+    IVF index (it depends on neither n_probe nor k), so the corpus is
+    ranked against the centroids once."""
     emb = _emb(spark, sf_dir)
     cents = _cached(
         spark, sf_dir, "ivf_cents", lambda: ann_ops.kmeans_centroids(emb)
@@ -8359,14 +8358,14 @@ def q_embeddings_quantization_error(spark, sf_dir):
             ).alias("_qcos"),
         )
     )
+    # a left join against the quantized top-k (one row per pair, so no
+    # fan-out) counts the overlap in the same aggregation, so `scored`
+    # is read once
     qtop = ann_ops.cosine_topk_quantized(emb, qids, k=ANN_K).select(
-        "q_id", "n_id"
+        "q_id", "n_id", F.lit(1).alias("_in")
     )
     err = F.round(F.abs(F.col("cos") - F.col("_qcos")), 12)
-    inq = scored.join(qtop, ["q_id", "n_id"], "left_semi").groupBy(
-        "rank"
-    ).agg(F.count(F.lit(1)).cast("long").alias("_n_in"))
-    per = scored.groupBy("rank").agg(
+    per = scored.join(qtop, ["q_id", "n_id"], "left").groupBy("rank").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.round(
             F.sum(err.cast("decimal(38,12)")).cast("double")
@@ -8374,16 +8373,15 @@ def q_embeddings_quantization_error(spark, sf_dir):
             9,
         ).alias("mean_abs_err"),
         F.round(F.max(err), 9).alias("max_abs_err"),
+        F.count("_in").alias("_n_in"),
     )
-    return per.join(F.broadcast(inq), "rank", "left").select(
+    return per.select(
         "rank",
         "n_pairs",
         "mean_abs_err",
         "max_abs_err",
         F.round(
-            F.coalesce(F.col("_n_in"), F.lit(0)).cast("double")
-            / F.col("n_pairs").cast("double"),
-            9,
+            F.col("_n_in").cast("double") / F.col("n_pairs").cast("double"), 9
         ).alias("quant_topk_overlap"),
     )
 

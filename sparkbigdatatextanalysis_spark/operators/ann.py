@@ -18,10 +18,13 @@ ONE window (:func:`_rank_topk`: 9-dp cosine desc, then neighbor id):
   ~constant as n grows. Hyperplanes are deterministic +-1 matrices
   from the same LCG used for MinHash params, embedded as literals in
   both the Spark plan and the oracle SQL.
-* ``cosine_topk_ivf`` -- inverted file: Lloyd-refined centroids
-  (:func:`kmeans_centroids`) embedded as a plan literal, each vector
-  assigned to its closest centroid in-row, each query probing its
-  ``n_probe`` closest clusters and reranked exactly within them.
+* ``cosine_topk_ivf`` -- inverted file over Lloyd-refined centroids
+  (:func:`kmeans_centroids`). The centroid table is read as ONE
+  broadcast row; each vector ranks every centroid in-row, keeps the
+  ranked list and is assigned to the head of it. That index is cached
+  once per (corpus, centroids); each query probes the first
+  ``n_probe`` clusters of its own cached list and is reranked exactly
+  within them.
 
 The k-NN labelers compose a search with one shared vote stage:
 ``knn_label_vote`` over the brute-force harness, ``knn_label_vote_ivf``
@@ -32,6 +35,7 @@ probe, cluster join, exact rerank).
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -350,8 +354,9 @@ def _best_centroid(v, norm, cents_arr):
 
 def _assign_from_lit(nv: DataFrame, cents_arr, extra_cols: tuple = ()) -> DataFrame:
     """ONE definition of corpus-to-centroid assignment over a literal
-    centroid array (shared by ivf_assignments, the IVF searches and
-    dedup.semantic_dedup, so they cannot drift). NULL cluster arises
+    centroid array (shared by ivf_assignments, dedup and pipeline, so
+    they cannot drift; the IVF searches' :func:`_ivf_index` takes the
+    same argmax from its broadcast centroid row). NULL cluster arises
     only from an EMPTY centroid set (with any centroid present the
     score coalesces to -inf, never NULL); the filter reproduces the r3
     crossJoin form's zero-row output there. ``extra_cols`` pass nv
@@ -383,6 +388,21 @@ def _lloyd_means(assign: DataFrame) -> DataFrame:
             ).alias("m")
         )
     )
+
+
+@contextmanager
+def _job_description(df: DataFrame, desc: str):
+    """Run the block's Spark jobs under ``desc`` (the operator's eager
+    action, as the UI and job listeners name it), then restore the
+    caller's description -- NULL included -- so the session is left as
+    it was found."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def kmeans_centroids(
@@ -421,14 +441,16 @@ def kmeans_centroids(
     Each Lloyd pass runs EAGERLY at build time (it must: the next pass's
     plan embeds its numbers), so the returned frame's lineage is just a
     k-row local relation -- downstream consumers never re-execute the
-    refinement, cache or no cache.
+    refinement, cache or no cache. Each of those collects runs under a
+    job description naming the operator and the pass.
 
     ``c_id`` is surfaced as BIGINT (ids are embedded as integer
     literals; non-integer id columns would need a keyed variant).
     """
     nv = _norm_vecs(emb, id_col, vec_col)
-    cur = _collect_cents(_init_centroids(nv, n_centroids))
-    for _ in range(n_iter):
+    with _job_description(emb, "kmeans_centroids: seed centroids"):
+        cur = _collect_cents(_init_centroids(nv, n_centroids))
+    for it in range(n_iter):
         if not cur:
             break  # empty corpus: nothing to refine, return empty set
         assign = nv.select(
@@ -437,7 +459,9 @@ def kmeans_centroids(
         )
         means = _lloyd_means(assign)
         by_cid: dict[int, dict[int, float | None]] = {}
-        for r in means.collect():
+        with _job_description(emb, f"kmeans_centroids: Lloyd pass {it + 1} of {n_iter}"):
+            mean_rows = means.collect()
+        for r in mean_rows:
             by_cid.setdefault(int(r["c_id"]), {})[int(r["pos"])] = (
                 None if r["m"] is None else float(r["m"])
             )
@@ -488,23 +512,40 @@ def ivf_assignments(
     return _assign_from_lit(_norm_vecs(emb, id_col, vec_col), _cents_lit(_collect_cents(cents)))
 
 
-def _ivf_index(nv: DataFrame, cents: DataFrame) -> tuple[Column, DataFrame]:
-    """The query-independent half of an IVF search: (centroid literal,
-    assignment (id, cluster, nv, nn)). The centroid set is tiny model
-    state, collected ONCE and embedded in both the assignment and the
-    probes; the assignment carries each vector and its norm, so the
-    candidate join never goes back to the corpus."""
-    cents_arr = _cents_lit(_collect_cents(cents))
-    assign = _assign_from_lit(
-        nv, cents_arr, extra_cols=(F.col("v").alias("nv"), F.col("norm").alias("nn"))
+def _rank_cents(df: DataFrame, v: str, norm: str, cents: DataFrame) -> DataFrame:
+    """``df`` plus ``_rk``: every centroid's (cos, neg_cid) score of the
+    row's vector, best first -- reverse array_sort of the structs is
+    exactly the (cos DESC, c_id ASC) order of :func:`_cent_scores`.
+
+    The centroid table arrives as ONE broadcast row holding the whole
+    set as an array: the centroids are read as data, so nothing is
+    collected to the driver and no literal is embedded in the plan."""
+    row = cents.agg(F.collect_list(F.struct("c_id", "cv", "cn")).alias("_cents"))
+    rk = F.reverse(F.array_sort(_cent_scores(F.col(v), F.col(norm), F.col("_cents"))))
+    return df.crossJoin(F.broadcast(row)).withColumn("_rk", rk).drop("_cents")
+
+
+def _ivf_index(nv: DataFrame, cents: DataFrame) -> DataFrame:
+    """The query-independent half of an IVF search: (id, cluster, _rk,
+    nv, nn). Each vector carries its ranked centroid list ``_rk``
+    (:func:`_rank_cents`), its cluster (the head of that list, the same
+    argmax as :func:`_best_centroid`), and the vector and its norm, so
+    the candidate join never goes back to the corpus. It depends on
+    neither ``n_probe`` nor ``k``: one index serves every request over
+    the same (corpus, centroids). An empty centroid set leaves every
+    cluster NULL, so nothing joins and searches return no row."""
+    return _rank_cents(nv, "v", "norm", cents).select(
+        "id",
+        (-F.get("_rk", 0)["neg_cid"]).alias("cluster"),
+        "_rk",
+        F.col("v").alias("nv"),
+        F.col("norm").alias("nn"),
     )
-    return cents_arr, assign
 
 
 def _ivf_topk(
     qv: DataFrame,
-    cents_arr,
-    assign: DataFrame,
+    index: DataFrame,
     n_probe: int,
     k: int,
     exclude_self: bool = True,
@@ -512,24 +553,19 @@ def _ivf_topk(
 ) -> DataFrame:
     """The IVF probe, candidate join and exact rerank shared by
     :func:`cosine_topk_ivf` and :func:`knn_label_vote_ivf`: (q_id, qv,
-    qn) queries x an :func:`_ivf_index` assignment -> (q_id, n_id, rank,
-    cos).
+    qn, _rk) queries x an :func:`_ivf_index` -> (q_id, n_id, rank, cos).
 
-    Each query's ``n_probe`` closest clusters come in-row, by the same
-    mechanism as the corpus argmax: reverse array_sort of the (cos,
-    neg_cid) structs is exactly the window's (cos DESC, c_id ASC) order,
-    and slice + explode replaces a row_number exchange. Candidates are
-    one equi-join on the cluster id, broadcasting the probe side when
-    ``broadcast_probes`` (a few queries) and a plain hash join otherwise
-    (query cardinality unbounded); ``exclude_self`` drops q_id == n_id."""
-    scores = _cent_scores(F.col("qv"), F.col("qn"), cents_arr)
-    top = F.slice(F.reverse(F.array_sort(scores)), 1, n_probe)
-    probes = qv.select(
-        "q_id", "qv", "qn", F.explode(F.transform(top, lambda s: -s["neg_cid"])).alias("cluster")
-    )
+    Each query probes the first ``n_probe`` clusters of its ranked
+    centroid list; slice + explode replaces a row_number exchange.
+    Candidates are one equi-join on the cluster id, broadcasting the
+    probe side when ``broadcast_probes`` (a few queries) and a plain
+    hash join otherwise (query cardinality unbounded); ``exclude_self``
+    drops q_id == n_id."""
+    probe = F.transform(F.slice("_rk", 1, n_probe), lambda s: -s["neg_cid"])
+    probes = qv.select("q_id", "qv", "qn", F.explode(probe).alias("cluster"))
     if broadcast_probes:
         probes = F.broadcast(probes)
-    cand = probes.join(assign, "cluster")
+    cand = probes.join(index.select("cluster", "id", "nv", "nn"), "cluster")
     if exclude_self:
         cand = cand.where(F.col("q_id") != F.col("id"))
     return _rank_topk(cand.select("q_id", F.col("id").alias("n_id"), _pair_cos().alias("cos")), k)
@@ -552,16 +588,22 @@ def cosine_topk_ivf(
     centroid table, typically built once by :func:`kmeans_centroids` and
     reused across calls -- the index-build/query split every
     repeated-batch deployment wants; when omitted it is
-    :func:`kmeans_centroids` over ``emb`` at its defaults."""
-    nv = _norm_vecs(emb, id_col, vec_col)
+    :func:`kmeans_centroids` over ``emb`` at its defaults.
+
+    Building the search runs no Spark job. The :func:`_ivf_index` frame
+    is persisted, and since it depends only on (``emb``, ``cents``),
+    every request with the same two frames -- whatever its queries,
+    ``k`` or ``n_probe`` -- reuses the one cached index. The queries
+    are the index rows of the broadcast query ids, so their ranked
+    centroid lists come from the cache too."""
     if cents is None:
         cents = kmeans_centroids(emb, id_col, vec_col)
-    cents_arr, assign = _ivf_index(nv, cents)
-    # persist: assignments feed every probed-cluster lookup.
-    assign = assign.persist()
-    return _ivf_topk(
-        _query_vecs(nv, query_ids), cents_arr, assign, n_probe, k, broadcast_probes=True
+    index = _ivf_index(_norm_vecs(emb, id_col, vec_col), cents).persist()
+    q = query_ids.select(F.col(query_ids.columns[0]).alias("id"))
+    qv = index.join(F.broadcast(q), "id").select(
+        F.col("id").alias("q_id"), F.col("nv").alias("qv"), F.col("nn").alias("qn"), "_rk"
     )
+    return _ivf_topk(qv, index, n_probe, k, broadcast_probes=True)
 
 
 def cosine_topk_lsh(
@@ -747,10 +789,11 @@ def knn_label_vote_ivf(
     weak-labeling, where the UNLABELED query side is the big one:
 
     - the index (centroids over the labeled corpus) is bounded model
-      state, collected once and embedded as a literal;
-    - corpus assignment AND query probing are both map-only in-row
-      argmaxes over that literal -- neither side is broadcast or
-      collected, so query cardinality is unbounded;
+      state, broadcast as one row (:func:`_rank_cents`);
+    - corpus assignment AND query probing both rank the centroids
+      in-row with that one expression -- neither the query nor the
+      corpus side is broadcast or collected, so query cardinality is
+      unbounded;
     - candidates come from ONE plain hash equi-join on the cluster id
       (shuffle ~ n_probe x queries + corpus; a hot cluster is an AQE
       skew split, not a plan change), then the exact rerank
@@ -770,9 +813,9 @@ def knn_label_vote_ivf(
     labeled = corpus_emb.where(F.col(label_col).isNotNull())
     if cents is None:
         cents = kmeans_centroids(labeled, id_col, vec_col)
-    cents_arr, assign = _ivf_index(_norm_vecs(labeled, id_col, vec_col), cents)
-    qv = _as_queries(_norm_vecs(queries_emb, id_col, vec_col))
-    topk = _ivf_topk(qv, cents_arr, assign, n_probe, k, exclude_self=exclude_self)
+    index = _ivf_index(_norm_vecs(labeled, id_col, vec_col), cents)
+    qv = _rank_cents(_as_queries(_norm_vecs(queries_emb, id_col, vec_col)), "qv", "qn", cents)
+    topk = _ivf_topk(qv, index, n_probe, k, exclude_self=exclude_self)
     return _vote_from_topk(topk, labeled, id_col, label_col)
 
 

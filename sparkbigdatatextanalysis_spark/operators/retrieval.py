@@ -10,20 +10,20 @@ search/RAG retrieval actually needs.
         ln(1 + (N - df_t + 0.5) / (df_t + 0.5))
         * tf_td * (k1 + 1) / (tf_td + k1 * (1 - b + b * dl_d / avgdl))
 
-Scale shape: the corpus explode is PRUNED to the query's terms before
-anything aggregates -- the scored row set is (matching docs x query
-terms), not the corpus -- and the document length rides through the
-explode so no join back to the full corpus is ever needed. One partial
-aggregation builds (doc, term) tfs, a second (term-count-sized) one the
-dfs; corpus-level stats (N, avgdl) and the per-term dfs attach as
-broadcasts. Top-k goes through a rank window over the small scored set.
+Scale shape (single query): ONE aggregate over the corpus yields N,
+avgdl and every query term's df; that one-row table broadcasts into the
+documents where ``arrays_overlap(tokens, q)`` holds, and each term's tf
+is counted in-row, so the scored row set is the matching documents,
+never (document x term) rows, and no join goes back to the corpus.
+Top-k is a TakeOrdered cut over the scored set. The batch form explodes
+once, pruned to the union of its queries' terms (see
+:func:`bm25_batch_scores`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
 
 
 def _check_params(fn: str, k1: float, b: float) -> None:
@@ -31,56 +31,25 @@ def _check_params(fn: str, k1: float, b: float) -> None:
         raise ValueError(f"{fn}: need k1 >= 0 and 0 <= b <= 1, got {k1}, {b}")
 
 
-def _exploded(tok_df: DataFrame, id_col: str, tokens_col: str) -> DataFrame:
-    """(_id, _dl, _t): the corpus explode with the doc length riding
-    along (so no join back to the full corpus is ever needed). Callers
-    prune to their query terms IMMEDIATELY (isin for a literal list,
-    broadcast left_semi for a query table)."""
-    return tok_df.select(
-        F.col(id_col).alias("_id"),
-        F.size(tokens_col).alias("_dl"),
-        F.explode(tokens_col).alias("_t"),
-    )
+def _corpus_stats(tokens: Column) -> tuple[Column, Column]:
+    """(_n, _avgdl) aggregate columns: N and avgdl over the SAME row set
+    -- F.size(NULL) is NULL (or -1 under legacy sizeOfNull) and avg()
+    skips NULLs, so a bare avg(size(tokens)) would drop NULL-token rows
+    from avgdl while count(*) keeps them in N, skewing IDF vs the
+    documented formula (r4 advice). A NULL/empty token array is an empty
+    document: length 0, counted in both stats."""
+    dl = F.when(tokens.isNull(), F.lit(0)).otherwise(F.size(tokens))
+    return F.count(F.lit(1)).alias("_n"), F.avg(dl).alias("_avgdl")
 
 
-def _tf_dfs(ex: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(doc, term) tfs from one partial agg; per-term dfs (document
-    frequency = docs containing the term) from a second, term-sized one."""
-    tf = ex.groupBy("_id", "_t").agg(
-        F.count(F.lit(1)).alias("_tf"), F.first("_dl").alias("_dl")
-    )
-    dfs = tf.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    return tf, dfs
-
-
-def _corpus_stats(tok_df: DataFrame, tokens_col: str) -> DataFrame:
-    """(_n, _avgdl): N and avgdl over the SAME row set -- F.size(NULL)
-    is NULL (or -1 under legacy sizeOfNull) and avg() skips NULLs, so a
-    bare avg(size(tokens)) would drop NULL-token rows from avgdl while
-    count(*) keeps them in N, skewing IDF vs the documented formula
-    (r4 advice). A NULL/empty token array is an empty document: length
-    0, counted in both stats."""
-    dl = F.when(F.col(tokens_col).isNull(), F.lit(0)).otherwise(
-        F.size(tokens_col)
-    )
-    return tok_df.agg(
-        F.count(F.lit(1)).alias("_n"), F.avg(dl).alias("_avgdl")
-    )
-
-
-def _term_score(k1: float, b: float):
-    """The Okapi/+1-smoothed-IDF per-(doc, term) score expression over
-    the joined (_tf, _dl, _df, _n, _avgdl) columns -- ONE definition
+def _term_score(
+    tf: Column, dl: Column, df: Column, n: Column, avgdl: Column, k1: float, b: float
+) -> Column:
+    """The Okapi/+1-smoothed-IDF per-(doc, term) score -- ONE definition
     shared by the single-query and batch forms so the formula cannot
     drift between them (r5 review finding)."""
-    idf = F.log(
-        (F.col("_n") - F.col("_df") + 0.5) / (F.col("_df") + 0.5) + 1.0
-    )
-    return (
-        idf
-        * (F.col("_tf") * (k1 + 1.0))
-        / (F.col("_tf") + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl")))
-    )
+    idf = F.log((n - df + 0.5) / (df + 0.5) + 1.0)
+    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def bm25_scores(
@@ -96,21 +65,31 @@ def bm25_scores(
     cross-engine comparison: ln and the final sum differ in low-order
     bits between engines); ``n_matched`` counts distinct matched terms.
     Duplicate query terms are deduplicated (scoring a term twice would
-    double its contribution)."""
+    double its contribution).
+
+    One aggregate over ``tok_df`` gives N, avgdl (:func:`_corpus_stats`)
+    and each term's df; its one row is broadcast into the documents that
+    share a term with the query. Each term's tf is counted in-row and
+    the per-term scores are summed in query-term order."""
     q = list(dict.fromkeys(query_tokens))
     if not q:
         raise ValueError("bm25_scores: query_tokens must be non-empty")
     _check_params("bm25_scores", k1, b)
-    ex = _exploded(tok_df, id_col, tokens_col).where(F.col("_t").isin(q))
-    tf, dfs = _tf_dfs(ex)
-    stats = _corpus_stats(tok_df, tokens_col)
-    return (
-        tf.join(F.broadcast(dfs), "_t")
-        .crossJoin(F.broadcast(stats))
-        .select("_id", _term_score(k1, b).alias("_s"))
-        .groupBy("_id")
-        .agg(F.count(F.lit(1)).alias("n_matched"), F.sum("_s").alias("score"))
-        .select(F.col("_id").alias(id_col), "n_matched", "score")
+    toks = F.col(tokens_col)
+    dfs = [F.count(F.when(F.array_contains(toks, t), 1)).alias(f"_df{i}") for i, t in enumerate(q)]
+    stats = tok_df.agg(*_corpus_stats(toks), *dfs)
+    docs = tok_df.where(F.arrays_overlap(toks, F.array(*map(F.lit, q))))
+    score = n_matched = F.lit(0)
+    for i, t in enumerate(q):
+        # F.filter builds its lambda right here, so closing over the
+        # loop's term is safe; it must take ONE argument (a second one
+        # is bound to the element index)
+        tf = F.size(F.filter(toks, lambda x: x == t))
+        s = _term_score(tf, F.size(toks), F.col(f"_df{i}"), F.col("_n"), F.col("_avgdl"), k1, b)
+        score = score + F.when(tf > 0, s).otherwise(0.0)
+        n_matched = n_matched + (tf > 0).cast("long")
+    return docs.crossJoin(F.broadcast(stats)).select(
+        F.col(id_col), n_matched.alias("n_matched"), score.alias("score")
     )
 
 
@@ -179,12 +158,16 @@ def bm25_batch_scores(
         F.col(query_id_col).alias("_qid"), F.col(term_col).alias("_t")
     ).distinct()
     _check_params("bm25_batch_scores", k1, b)
-    # prune against qt's terms directly: left_semi tolerates duplicate
-    # build-side keys (no fan-out), so a second distinct would only add
-    # a shuffle stage and a broadcast job for nothing
-    ex = _exploded(tok_df, id_col, tokens_col).join(
-        F.broadcast(qt.select("_t")), "_t", "left_semi"
-    )
+    # the corpus explode, with the doc length riding along (no join
+    # back to the corpus), pruned against qt's terms directly:
+    # left_semi tolerates duplicate build-side keys (no fan-out), so a
+    # second distinct would only add a shuffle stage and a broadcast
+    # job for nothing
+    ex = tok_df.select(
+        F.col(id_col).alias("_id"),
+        F.size(tokens_col).alias("_dl"),
+        F.explode(tokens_col).alias("_t"),
+    ).join(F.broadcast(qt.select("_t")), "_t", "left_semi")
     # dfs is an aggregate OF tf, so the explode+prune+tf subtree
     # evaluates once per consumer (twice per action: the broadcast df
     # build and the scoring path). r12 measured a lazy localCheckpoint
@@ -194,13 +177,19 @@ def bm25_batch_scores(
     # sync. At 100 TB the caller passes a persisted/bucketed token
     # table and the same overlap argument holds per §2.1 (the df build
     # is term-count-sized and rides the broadcast).
-    tf, dfs = _tf_dfs(ex)
-    stats = _corpus_stats(tok_df, tokens_col)
+    tf = ex.groupBy("_id", "_t").agg(
+        F.count(F.lit(1)).alias("_tf"), F.first("_dl").alias("_dl")
+    )
+    dfs = tf.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
+    stats = tok_df.agg(*_corpus_stats(F.col(tokens_col)))
+    score = _term_score(
+        F.col("_tf"), F.col("_dl"), F.col("_df"), F.col("_n"), F.col("_avgdl"), k1, b
+    )
     return (
         tf.join(F.broadcast(dfs), "_t")
         .crossJoin(F.broadcast(stats))
         .join(F.broadcast(qt), "_t")
-        .select("_qid", "_id", _term_score(k1, b).alias("_s"))
+        .select("_qid", "_id", score.alias("_s"))
         .groupBy("_qid", "_id")
         .agg(F.count(F.lit(1)).alias("n_matched"), F.sum("_s").alias("score"))
         .select(

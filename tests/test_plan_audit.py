@@ -206,16 +206,21 @@ BUDGETS = {
     "docs_line_dedup": (4, 1),
     # token-budget downsampling: one per-shard hash-order sort window
     "docs_token_budget": (1, 0),
-    # BM25: cache-free flattening shows the _tok fan-out + stats/df agg
-    # feeds of the two broadcasts + tf/df/score partial aggs + the
-    # k-row rank exchange; the scored set itself is query-term-pruned
-    "docs_bm25_topk": (8, 2),
-    # r5 batch form: SAME scan count as the single-query plan (the
-    # no-extra-corpus-pass claim, pinned below in
-    # test_bm25_batch_no_extra_corpus_pass); the +5 exchanges over the
-    # single form are the tiny query-table distincts feeding its
-    # broadcasts, the per-(query, doc) score agg, and grouped_topk's
-    # two bounded rank windows
+    # BM25: ONE aggregate gives N, avgdl and every query term's df
+    # (its SinglePartition exchange feeds the one broadcast row), and
+    # tf is counted in-row over the docs sharing a query term, so the
+    # explode, the tf/df/score aggregations and their exchanges are
+    # gone (8 -> 3, broadcasts 2 -> 1). The other 2 are the cached
+    # _tok subtree's local-mode scan fan-out, printed once per
+    # consumer (stats and scoring). The TakeOrdered cut is already one
+    # partition, so the k-row rank window adds no exchange.
+    "docs_bm25_topk": (3, 1),
+    # r5 batch form: the corpus explodes once for all queries, pruned
+    # to the union of their terms; the exchanges are the _tok fan-out
+    # per consumer, the tiny query-table distincts feeding its
+    # broadcasts, the tf/df/stats/per-(query, doc) score aggs, and
+    # grouped_topk's two bounded rank windows. The single-query form
+    # no longer shares this shape (one stats aggregate, tf in-row).
     "docs_bm25_batch": (13, 5),
     # checkpointed cluster point + the argmax groupBy and rep join
     "dedup_best_rep": (2, 2),
@@ -254,7 +259,13 @@ BUDGETS = {
     # its own fanned-out scan (3 exchanges, 3 broadcasts at this
     # scale). The ceiling is the measured count so the re-join cannot
     # return.
-    "ann_topk_ivf": (4, 2),
+    # 4 -> 6, broadcasts 2 -> 4: the centroids are read as data, ONE
+    # broadcast row of the k-row table (a SinglePartition exchange
+    # into an IdentityBroadcast), instead of a collected plan literal.
+    # The cached index subtree prints once per consumer (the query
+    # rows and the candidate side), so that exchange and broadcast
+    # print twice; nothing added runs over the corpus.
+    "ann_topk_ivf": (6, 4),
     "common_token_pairs": (31, 0),
     "cosine_similarity": (31, 0),
     # --- r6 additions: the ExactSubstr subtraction half + the two
@@ -500,11 +511,15 @@ BUDGETS = {
     # and the 7-day union-merge agg (fan-out is over |days| sketch
     # rows, never user rows)
     "events_dau_wau_sketch": (7, 2),
-    # knn IVF: map-only literal-centroid assignment on BOTH sides, one
+    # knn IVF: map-only in-row centroid ranking on BOTH sides, one
     # plain cluster-key equi-join (deliberately NOT broadcast -- query
     # cardinality is unbounded in production), rank window, shared
-    # vote aggs + final joins
-    "embeddings_knn_label_ivf": (8, 4),
+    # vote aggs + final joins. 8 -> 12, broadcasts 4 -> 8: each side
+    # crosses the one broadcast centroid row (a SinglePartition
+    # exchange of the k-row aggregate into an IdentityBroadcast), and
+    # the neighbor table prints twice (votes and totals): 2 x 2 more
+    # of each. Nothing added runs over the corpus.
+    "embeddings_knn_label_ivf": (12, 8),
     # streaming verdict gate: the micro-batch runs EAGERLY at query
     # construction (ann_topk_ivf precedent); the audited plan is the
     # flags-sink parquet read-back
@@ -557,7 +572,11 @@ BUDGETS = {
     # went (47/24 before): per probe level 3 exchanges and 3 broadcasts
     # fewer, as in ann_topk_ivf -- the query vectors ride the one
     # broadcast probe table and nothing re-reads the corpus.
-    "embeddings_ann_recall_curve": (38, 15),
+    # 38 -> 44, broadcasts 15 -> 21: per probe level, the centroid
+    # row's SinglePartition exchange and broadcast print once per
+    # consumer of the cached index (query rows, candidates): 3 x 2
+    # more of each. The three levels execute one cached index.
+    "embeddings_ann_recall_curve": (44, 21),
     # Mann-Kendall: monthly agg feeds the pair self-join (bounded side
     # broadcast) + the tie groupBy; executed count 6 (two consumers of
     # the unpersisted monthly agg)
@@ -613,7 +632,14 @@ BUDGETS = {
     # 15 of the 24 are local-mode scan fan-outs; the data-proportional
     # hash/single exchanges are 9, and the baseline executes once per
     # session.
-    "embeddings_quantization_error": (24, 11),
+    # 24 -> 13, broadcasts 11 -> 6: the overlap is counted in the same
+    # aggregation through a left join against the quantized top-k (one
+    # row per pair, no fan-out), so `scored` is read once. Gone: the
+    # second print of the cached baseline subtree, the semi-join and
+    # its bloom-filter subquery, and the per-rank overlap aggregate
+    # with its broadcast join. The left join's two hash exchanges over
+    # the |queries| x k pair tables are new; AQE may broadcast either.
+    "embeddings_quantization_error": (13, 6),
     # debounce: ONE (user,type) exchange shared by lag window, burst
     # cumsum and the burst agg
     "events_debounce": (1, 0),

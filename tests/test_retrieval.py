@@ -59,6 +59,30 @@ def test_bm25_matches_reference(spark):
         assert got[did][1] == pytest.approx(s, rel=1e-12)
 
 
+def test_bm25_matches_reference_on_edge_corpus(spark):
+    """A NULL token array and an empty one (both documents of length 0,
+    counted in N and avgdl), a term repeated inside one doc, a query
+    term no doc contains and a duplicated query term."""
+    corpus = {
+        0: ["hash", "hash", "hash", "join"],
+        1: None,
+        2: [],
+        3: ["join", "sort", "hash"],
+        4: ["sort"],
+    }
+    tok = spark.createDataFrame(list(corpus.items()), "id LONG, tokens ARRAY<STRING>")
+    query = ["hash", "absent", "join", "hash"]
+    got = {
+        r["id"]: (r["n_matched"], r["score"])
+        for r in rt.bm25_scores(tok, query, K1, B).collect()
+    }
+    ref = _ref_bm25({d: t or [] for d, t in corpus.items()}, query)
+    assert set(got) == set(ref) == {0, 3}
+    for did, (m, s) in ref.items():
+        assert got[did][0] == m
+        assert got[did][1] == pytest.approx(s, rel=1e-12)
+
+
 def test_bm25_rare_term_outranks_common(spark):
     # idf('dup') >> idf('hash'): the doc holding the rare term must top
     # the ranking even though others match the common term more often
