@@ -39,9 +39,11 @@ def tokenize(col: Column | str) -> Column:
 
 
 def remove_stopwords(tokens: Column, stopwords: list[str] | None = None) -> Column:
-    """Order-preserving, duplicate-preserving stopword filter."""
-    stop = F.lit(stopwords if stopwords is not None else ENGLISH_STOPWORDS)
-    return F.filter(tokens, lambda t: ~F.array_contains(stop, t))
+    """Order-preserving, duplicate-preserving stopword filter. The word
+    list is an ``IN`` list, which the optimizer turns into a hashed set
+    lookup (``INSET``) instead of a scan of the whole list per token."""
+    stop = stopwords if stopwords is not None else ENGLISH_STOPWORDS
+    return F.filter(tokens, lambda t: ~t.isin(stop))
 
 
 def tokenize_no_stopwords(col: Column | str, stopwords: list[str] | None = None) -> Column:

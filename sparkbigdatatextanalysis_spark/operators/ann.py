@@ -358,8 +358,11 @@ def _assign_from_lit(nv: DataFrame, cents_arr, extra_cols: tuple = ()) -> DataFr
     they cannot drift; the IVF searches' :func:`_ivf_index` takes the
     same argmax from its broadcast centroid row). NULL cluster arises
     only from an EMPTY centroid set (with any centroid present the
-    score coalesces to -inf, never NULL); the filter reproduces the r3
-    crossJoin form's zero-row output there. ``extra_cols`` pass nv
+    score coalesces to -inf, never NULL), so the filter tests the
+    literal's size instead of the cluster: it folds to a constant and
+    reproduces the r3 crossJoin form's zero-row output there, where a
+    ``cluster IS NOT NULL`` filter would be pushed below the projection
+    and run the argmax twice per row. ``extra_cols`` pass nv
     columns through the same projection -- the cluster id is computed
     IN-ROW, so consumers that need (cluster, v, norm) together must
     never re-join the assignment onto the corpus (that would add two
@@ -368,7 +371,7 @@ def _assign_from_lit(nv: DataFrame, cents_arr, extra_cols: tuple = ()) -> DataFr
         "id",
         _best_centroid(F.col("v"), F.col("norm"), cents_arr).alias("cluster"),
         *extra_cols,
-    ).where(F.col("cluster").isNotNull())
+    ).where(F.size(cents_arr) > 0)
 
 
 def _lloyd_means(assign: DataFrame) -> DataFrame:
@@ -533,10 +536,14 @@ def _ivf_index(nv: DataFrame, cents: DataFrame) -> DataFrame:
     the candidate join never goes back to the corpus. It depends on
     neither ``n_probe`` nor ``k``: one index serves every request over
     the same (corpus, centroids). An empty centroid set leaves every
-    cluster NULL, so nothing joins and searches return no row."""
+    ranked list empty and every cluster -1; no probe list names it, so
+    nothing joins and searches return no row. The cluster is never
+    NULL: a nullable join key would make the optimizer infer
+    ``isnotnull(cluster)`` and push it into the centroid cross join of
+    an unpersisted index, ranking every vector twice."""
     return _rank_cents(nv, "v", "norm", cents).select(
         "id",
-        (-F.get("_rk", 0)["neg_cid"]).alias("cluster"),
+        F.coalesce(-F.get("_rk", 0)["neg_cid"], F.lit(-1).cast("long")).alias("cluster"),
         "_rk",
         F.col("v").alias("nv"),
         F.col("norm").alias("nn"),

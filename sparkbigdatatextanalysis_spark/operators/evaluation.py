@@ -4,15 +4,16 @@ Replaces the reference's driver-side evaluation machinery -- the
 stringly-keyed left outer join (EntityResolution.scala:230-280), the
 101-bin histogram accumulator (VectorAccumulatorParam.scala,
 ScalableEntityResolution.scala:38-48,161-171) and the driver-loop
-threshold sweep (ScalableEntityResolution.scala:172-259) -- with three
-declarative queries: a left join + grouped aggregate, a groupBy-floor
-histogram, and a window cumulative sum. All scale-out: the only small
-result is the final 101-row metrics table itself.
+threshold sweep (ScalableEntityResolution.scala:172-259) -- with
+declarative queries: a left join + grouped aggregate for the gold
+split, and for the sweep a full outer join against the gold table feeding
+ONE aggregation keyed by threshold. All scale-out: the only small result
+is the final 101-row metrics table itself.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,69 +44,57 @@ def threshold_sweep(
     Semantics (reference falsepos/falseneg/truepos, ScalableEntity-
     Resolution.scala:222-259): a PREDICTED duplicate at threshold t is a
     candidate pair with sim >= t; gold pairs missing from the candidates
-    count with sim 0.0. Computed by binning both the all-pairs and the
-    gold-pairs similarity distributions once, then a descending cumulative
-    sum over the 101-row bin table -- the sweep costs one window over a
-    tiny table instead of 101 filter-count jobs.
+    count with sim 0.0. ``sims`` holds each pair once (as every
+    similarity join here emits it). Computed in one pass over each
+    input and ONE aggregation keyed by threshold -- no cumulative
+    window, no global gather, and no 101 filter-count jobs.
     """
-    # ONE pass over the (big) similarity table: tag each candidate pair
-    # gold/non-gold with a broadcast join, then a single partial-aggregated
-    # groupBy(bin) counting all pairs and the gold-tagged ones. Everything
-    # after operates on the <= n+2 row bin grid, inside the same query: no
-    # persisted table, no second aggregation over the pairs.
-    # Gold pairs the candidate join never produced count as sim 0.0
-    # (reference gs_value default): their count is |gold| - |matched|,
-    # folded into bin 0 arithmetically -- into BOTH distributions. A
-    # missing gold pair deemed to exist with sim 0.0 is also a predicted
-    # positive at threshold 0, so it must enter cnt_all as well as
-    # cnt_dup; folding it into cnt_dup alone makes tp exceed pred_pos at
-    # threshold 0 (negative fp, precision > 1). Assumes gold pairs are
-    # distinct (they are in every gold-standard fixture).
-    # Pairs with a NULL or negative sim are never predicted positive but
-    # are still candidates, so they land in a sentinel bin -1: it counts
-    # toward |matched| and sorts after every real bin in the descending
-    # cumulative sums, then is dropped from the output.
-    g = gold.select("a_id", "b_id", F.lit(1).alias("_gold"))
-    bin_col = F.greatest(
-        F.least(
-            F.floor(F.col("sim") * n_thresholds).cast("long"),
-            F.lit(n_thresholds).cast("long"),
-        ),
-        F.lit(-1).cast("long"),
+    # A full outer join on the pair key tags every candidate gold or
+    # non-gold and keeps the gold pairs the candidate join never
+    # produced. The candidate side arrives hash-partitioned on (a_id,
+    # b_id) from the similarity aggregation, so only gold is shuffled.
+    # A missing gold pair counts with sim 0.0 (reference gs_value
+    # default): it sits in bin 0, a predicted positive at threshold 0 as
+    # well as a true one (counting it as a true positive alone makes tp
+    # exceed pred_pos there -- negative fp, precision > 1). A NULL or
+    # negative sim sits in the sentinel bin -1: still a candidate, never
+    # a predicted positive.
+    # A pair in bin k is a predicted positive at thresholds 0..k, so it
+    # emits one row per threshold it passes, and a gold pair one row per
+    # threshold, so that every threshold counts |gold|. The
+    # partial-aggregated groupBy(t) then yields pred_pos, tp and |gold|
+    # per threshold; the n+1 grid rows make every threshold appear even
+    # when no pair reaches it.
+    g = gold.select("a_id", "b_id", F.lit(True).alias("_gold"))
+    s = sims.select("a_id", "b_id", "sim", F.lit(True).alias("_cand"))
+    n = F.lit(n_thresholds).cast("long")
+    zero = F.lit(0).cast("long")
+    # greatest() skips NULL, so a NULL sim clamps to -1 like a negative
+    bin_col = F.when(F.col("_cand").isNull(), zero).otherwise(
+        F.least(F.greatest(F.floor(F.col("sim") * n_thresholds), F.lit(-1).cast("long")), n)
     )
-    by_bin = (
-        sims.join(F.broadcast(g), ["a_id", "b_id"], "left")
-        .groupBy(bin_col.alias("bin"))
-        .agg(F.count("*").alias("cnt_all"), F.count("_gold").alias("cnt_matched"))
+    passed = F.when(F.col("_gold"), F.sequence(zero, n)).when(
+        F.col("bin") >= 0, F.sequence(zero, F.col("bin"))
     )
-    grid = sims.sparkSession.range(-1, n_thresholds + 1).select(
-        F.col("id").alias("bin")
+    per_threshold = (
+        s.join(g, ["a_id", "b_id"], "full")
+        .select(bin_col.alias("bin"), "_gold")
+        .select(F.explode(passed).alias("t"), (F.col("t") <= F.col("bin")).alias("_pred"), "_gold")
     )
-    n_dups = gold.agg(F.count("*").alias("n_dups"))
-
-    w_all = Window.partitionBy()
-    w = Window.orderBy(F.col("bin").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    grid = sims.sparkSession.range(0, n_thresholds + 1, 1, 1).select(
+        F.col("id").alias("t"), F.lit(False).alias("_pred"), F.lit(None).cast("boolean").alias("_gold")
     )
-    missing = F.when(
-        F.col("bin") == 0, F.col("n_dups") - F.sum("cnt_matched").over(w_all)
-    ).otherwise(0)
     binned = (
-        grid.join(by_bin, "bin", "left")
-        .na.fill(0, ["cnt_all", "cnt_matched"])
-        .crossJoin(F.broadcast(n_dups))
-        .select(
-            "bin",
-            "n_dups",
-            (F.col("cnt_all") + missing).alias("cnt_all"),
-            (F.col("cnt_matched") + missing).alias("cnt_dup"),
+        per_threshold.unionByName(grid)
+        .groupBy("t")
+        .agg(
+            F.count_if("_pred").alias("pred_pos"),
+            F.count_if(F.col("_pred") & F.col("_gold")).alias("tp"),
+            F.count("_gold").alias("n_dups"),
         )
-        .withColumn("pred_pos", F.sum("cnt_all").over(w))
-        .withColumn("tp", F.sum("cnt_dup").over(w))
-        .where(F.col("bin") >= 0)
     )
     return binned.select(
-        (F.col("bin") / n_thresholds).alias("threshold"),
+        (F.col("t") / n_thresholds).alias("threshold"),
         F.col("tp"),
         (F.col("pred_pos") - F.col("tp")).alias("fp"),
         (F.col("n_dups") - F.col("tp")).alias("fn"),

@@ -6,17 +6,19 @@ of broadcasting whole TF-IDF matrices to the driver and back, the cosine
 similarity of every candidate pair sharing >=1 token is ONE relational
 plan:
 
+    w_a = weight / norm over (PARTITION BY id)   (each side; the weights
+                                                  arrive id-partitioned,
+                                                  so no exchange)
     weights_a JOIN weights_b ON token     (candidate generation = the
                                            inverted-index equi-join)
-    GROUP BY (a_id, b_id): dot = sum(w_a * w_b)
-    JOIN norms_a, norms_b                 (broadcast)
-    sim = dot / (norm_a * norm_b)
+    GROUP BY (a_id, b_id): sim = sum(w_a * w_b)
 
 Catalyst handles pushdown/pruning; AQE handles the Zipfian token skew the
 join inherits (stopword removal already kills the worst offenders). At
-100 TB the same plan holds: the token join is a shuffle on ``token``,
-partial map-side aggregation shrinks the pair stream, and the norm joins
-broadcast (norms are one row per doc id).
+100 TB the same plan holds: the norm is a per-doc window on the
+partitioning the weights already have, the token join is a sort-merge
+join on ``token`` (AQE splits a hot token), and partial map-side
+aggregation shrinks the pair stream. No norm table is built or joined.
 
 The naive quadratic path (reference EntityResolution.scala:133-157) is
 kept for parity/small data as an explicit crossJoin.
@@ -36,7 +38,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import term_frequencies_map, tokenize_no_stopwords
-from .tfidf import norms as _norms
 
 
 def inverted_index(tok_df: DataFrame) -> DataFrame:
@@ -170,11 +171,25 @@ def dot_products(weights_a: DataFrame, weights_b: DataFrame) -> DataFrame:
     """
     a = weights_a.select("token", F.col("id").alias("a_id"), F.col("weight").alias("w_a"))
     b = weights_b.select("token", F.col("id").alias("b_id"), F.col("weight").alias("w_b"))
+    # One physical join: a sort-merge join on token, whose hot tokens
+    # AQE splits. Left to AQE, a small side is turned into a broadcast
+    # only after both sides have been shuffled -- one more Spark job per
+    # call, and a build side that depends on which shuffle finished
+    # first, so the generated code (and the codegen cache) varies.
     return (
-        a.join(b, "token")
+        a.hint("merge").join(b, "token")
         .groupBy("a_id", "b_id")
         .agg(F.sum(F.col("w_a") * F.col("w_b")).alias("dot"))
     )
+
+
+def _unit_weights(weights: DataFrame) -> DataFrame:
+    """(id, token, weight) -> the same rows with each weight divided by
+    its doc's L2 norm. The norm is a window over ``id``: on the
+    ``id``-partitioned weights that :func:`tfidf.tfidf_weights` emits it
+    sorts within partitions and adds no exchange."""
+    norm = F.sqrt(F.sum(F.col("weight") * F.col("weight")).over(Window.partitionBy("id")))
+    return weights.select("id", "token", (F.col("weight") / norm).alias("weight"))
 
 
 def cosine_similarity_join(weights_a: DataFrame, weights_b: DataFrame) -> DataFrame:
@@ -183,17 +198,17 @@ def cosine_similarity_join(weights_a: DataFrame, weights_b: DataFrame) -> DataFr
     calculateSimilaritiesFullDataset + fastCosinusSimilarity
     (ScalableEntityResolution.scala:107-129,298-319, bugs fixed).
 
-    Inputs are exploded TF-IDF tables (id, token, weight). The plan is
-    the sparse explode-join-aggregate (shuffle on token, partial map-side
-    agg, norms broadcast): right at every vocabulary size, and building
-    it runs no Spark job. On a tiny vocabulary, where the join output
-    grows toward |pairs| * |vocab| rows, use :func:`dense_cosine_similarity`.
+    Inputs are exploded TF-IDF tables (id, token, weight). Each side is
+    pre-normalized to unit length (:func:`_unit_weights`), so the cosine
+    is the dot product of the unit vectors, summed straight out of the
+    token equi-join: one shuffle on token, partial map-side agg, and no
+    norm aggregate or norm join. Right at every vocabulary size, and
+    building it runs no Spark job. On a tiny vocabulary, where the join
+    output grows toward |pairs| * |vocab| rows, use
+    :func:`dense_cosine_similarity`.
     """
-    dots = dot_products(weights_a, weights_b)
-    na = _norms(weights_a).select(F.col("id").alias("a_id"), F.col("norm").alias("norm_a"))
-    nb = _norms(weights_b).select(F.col("id").alias("b_id"), F.col("norm").alias("norm_b"))
-    return dots.join(F.broadcast(na), "a_id").join(F.broadcast(nb), "b_id").select(
-        "a_id", "b_id", (F.col("dot") / (F.col("norm_a") * F.col("norm_b"))).alias("sim")
+    return dot_products(_unit_weights(weights_a), _unit_weights(weights_b)).select(
+        "a_id", "b_id", F.col("dot").alias("sim")
     )
 
 

@@ -605,7 +605,6 @@ def _bucketed_prefix(
     sum_cols: list[str],
     n_buckets: int,
     relative_error: float = 0.0,
-    part_cols: list[str] | None = None,
 ) -> DataFrame:
     """Exact INCLUSIVE cumulative sums of ``sum_cols`` over the
     distinct-value table ``per`` (column ``_v`` + long counters),
@@ -618,18 +617,10 @@ def _bucketed_prefix(
     prefix-sum into offsets (the only unbounded window, over that
     n_buckets-row table) and the within-bucket cumulative sums are
     bucket-partitioned. Offsets + local prefix = the exact global
-    prefix on every row. Returns (*part_cols, _v, _cum_<col>...).
-    ``per`` should be persisted by the caller (three consumers).
-
-    ``part_cols`` (r12) runs N INDEPENDENT decompositions in ONE pass:
-    cuts group by the partition columns (one tiny aggregate instead of
-    one per decomposition), offsets and within-bucket prefixes
-    partition by them -- spearman_rho folds its two per-column rank
-    passes into one this way, halving the cut/bucket/window exchanges
-    with per-partition results identical to separate calls."""
+    prefix on every row. Returns (_v, _cum_<col>...). ``per`` should
+    be persisted by the caller (three consumers)."""
     from pyspark.sql import Window
 
-    part_cols = list(part_cols or [])
     # ONE array-percentile aggregate, not n_buckets-1 scalar ones: each
     # exact percentile() instance buffers the full _v column in its own
     # aggregation buffer, so 31 separate calls held 31 copies of the
@@ -646,38 +637,26 @@ def _bucketed_prefix(
         )
     else:
         arr = F.expr(f"percentile(_v, array({', '.join(map(str, pcts))}))")
-    cut_cols = [
-        F.element_at(F.col("_carr"), i).alias(f"_c{i}")
-        for i in range(1, n_buckets)
-    ]
+    cuts = per.agg(arr.alias("_carr")).select(
+        *[
+            F.element_at(F.col("_carr"), i).alias(f"_c{i}")
+            for i in range(1, n_buckets)
+        ]
+    )
     bucket = sum(
         (F.col("_v") > F.col(f"_c{i}")).cast("long")
         for i in range(1, n_buckets)
     )
-    if part_cols:
-        cuts = per.groupBy(*part_cols).agg(arr.alias("_carr")).select(
-            *part_cols, *cut_cols
-        )
-        bp = (
-            per.join(F.broadcast(cuts), part_cols)
-            .withColumn("_bk", bucket)
-            .drop(*[f"_c{i}" for i in range(1, n_buckets)])
-        )
-    else:
-        cuts = per.agg(arr.alias("_carr")).select(*cut_cols)
-        bp = (
-            per.crossJoin(F.broadcast(cuts))
-            .withColumn("_bk", bucket)
-            .drop(*[f"_c{i}" for i in range(1, n_buckets)])
-        )
-    woff = (
-        Window.partitionBy(*part_cols) if part_cols else Window
-    ).orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
+    bp = (
+        per.crossJoin(F.broadcast(cuts))
+        .withColumn("_bk", bucket)
+        .drop(*[f"_c{i}" for i in range(1, n_buckets)])
+    )
+    woff = Window.orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
     offs = (
-        bp.groupBy(*part_cols, "_bk")
+        bp.groupBy("_bk")
         .agg(*[F.sum(c).alias(f"_b{c}") for c in sum_cols])
         .select(
-            *part_cols,
             "_bk",
             *[
                 F.coalesce(F.sum(f"_b{c}").over(woff), F.lit(0)).alias(
@@ -687,11 +666,10 @@ def _bucketed_prefix(
             ],
         )
     )
-    wloc = Window.partitionBy(*part_cols, "_bk").orderBy("_v").rowsBetween(
+    wloc = Window.partitionBy("_bk").orderBy("_v").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    return bp.join(F.broadcast(offs), part_cols + ["_bk"]).select(
-        *part_cols,
+    return bp.join(F.broadcast(offs), "_bk").select(
         "_v",
         *[
             (F.col(f"_off{c}") + F.sum(c).over(wloc)).alias(f"_cum{c}")
@@ -988,50 +966,35 @@ def spearman_rho(
     single result row. NULL in either column drops the row (pairwise-
     complete). ``n_buckets``/``relative_error`` as in ks_two_sample.
     Returns one row: (n, spearman_rho) -- NULL rho when a rank
-    variance is 0 (a constant column) or n == 0.
-
-    The two rank decompositions run as ONE side-tagged
-    :func:`_bucketed_prefix` pass (r12): the x and y values union with
-    a side column and every cut/bucket/window stage partitions by it,
-    halving the rank-phase exchanges vs two independent passes.
-    Both columns therefore rank on their union-coerced common numeric
-    type; values exactly representable in that type (any long/double
-    mix below 2^53 -- the practical case) rank identically to the
-    per-column form."""
+    variance is 0 (a constant column) or n == 0. Each column ranks in
+    its own pass on its own type: a side-tagged union of the two would
+    coerce both to a common type (merging distinct longs above 2^53 or
+    decimals) and, measured at sf0.001, run more stages, not fewer."""
     d = (
         df.where(F.col(x).isNotNull() & F.col(y).isNotNull())
         .select(F.col(x).alias("_x"), F.col(y).alias("_y"))
         .persist()
     )
-    u = d.select(F.lit(0).alias("_s"), F.col("_x").alias("_v")).unionByName(
-        d.select(F.lit(1).alias("_s"), F.col("_y").alias("_v"))
-    )
-    per = (
-        u.groupBy("_s", "_v")
-        .agg(F.count(F.lit(1)).cast("long").alias("_c"))
-        .persist()
-    )
-    cum = _bucketed_prefix(
-        per, ["_c"], n_buckets, relative_error, part_cols=["_s"]
-    )
-    dbl = cum.join(per, ["_s", "_v"]).select(
-        "_s",
-        "_v",
-        (
-            F.lit(2) * (F.col("_cum_c") - F.col("_c"))
-            + F.col("_c")
-            + F.lit(1)
+
+    def dbl_ranks(col: str) -> DataFrame:
+        per = (
+            d.groupBy(col)
+            .agg(F.count(F.lit(1)).cast("long").alias("_c"))
+            .select(F.col(col).alias("_v"), "_c")
+            .persist()
         )
-        .cast("decimal(18,0)")
-        .alias("_r"),
-    )
-    rx = dbl.where(F.col("_s") == 0).select(
-        F.col("_v").alias("_x"), F.col("_r").alias("_r_x")
-    )
-    ry = dbl.where(F.col("_s") == 1).select(
-        F.col("_v").alias("_y"), F.col("_r").alias("_r_y")
-    )
-    ranked = d.join(rx, "_x").join(ry, "_y")
+        cum = _bucketed_prefix(per, ["_c"], n_buckets, relative_error)
+        return cum.join(per, "_v").select(
+            F.col("_v").alias(col),
+            (
+                F.lit(2) * (F.col("_cum_c") - F.col("_c"))
+                + F.col("_c")
+                + F.lit(1)
+            )
+            .cast("decimal(18,0)")
+            .alias(f"_r{col}"),
+        )
+    ranked = d.join(dbl_ranks("_x"), "_x").join(dbl_ranks("_y"), "_y")
     rx, ry = F.col("_r_x"), F.col("_r_y")
     m = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -22,7 +22,7 @@ Semantic parity notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize, remove_stopwords
@@ -56,39 +56,48 @@ def corpus_union(*token_dfs: DataFrame) -> DataFrame:
 def term_frequencies(tok_df: DataFrame) -> DataFrame:
     """(id, tokens) -> (id, token, tf) with tf = count(token)/size(tokens).
 
-    explode -> partial-aggregated groupBy; the map-side combine keeps the
-    shuffle at |distinct (id, token)| not |tokens|.
+    The exploded tokens are distributed by ``id`` and aggregated there,
+    so the output (and the weights built on it) comes out
+    ``id``-partitioned: a per-doc window or aggregate downstream (the
+    norm inside :func:`similarity.cosine_similarity_join`) costs no
+    second exchange.
     """
     return (
         tok_df.select("id", F.size("tokens").alias("n_tokens"), F.explode("tokens").alias("token"))
+        .repartition("id")
         .groupBy("id", "n_tokens", "token")
         .agg((F.count("*") / F.col("n_tokens")).alias("tf"))
         .select("id", "token", "tf")
     )
 
 
-def doc_count(corpus: DataFrame) -> DataFrame:
-    """One-row DataFrame(n BIGINT) -- kept as a plan node (broadcastable),
-    not a driver value, so IDF stays a single declarative plan."""
-    return corpus.agg(F.count("*").alias("n_docs"))
-
-
 def idf_table(corpus_tok: DataFrame) -> DataFrame:
     """(id, tokens)* -> (token, df, idf) with idf = N/df (non-log).
 
-    ``array_distinct`` BEFORE explode pre-aggregates per doc (the
-    reference's per-doc ``distinct``, EntityResolution.scala:117), so the
-    shuffle carries one row per (doc, distinct token). The corpus size
-    joins in as a broadcast single-row cross join -- no collect().
+    ONE aggregation over the exploded corpus gives both df and N: each
+    doc contributes its distinct tokens (``array_distinct`` BEFORE
+    explode is the reference's per-doc ``distinct``,
+    EntityResolution.scala:117) plus one sentinel entry at position 0,
+    whose count is the corpus size -- docs whose token array is NULL or
+    empty count in N too. N reaches every token row through a window
+    over the vocabulary-sized aggregate (one small single-partition
+    exchange), so the corpus is scanned once, with no collect() and no
+    broadcast.
     """
-    df_counts = (
-        corpus_tok.select(F.explode(F.array_distinct("tokens")).alias("token"))
-        .groupBy("token")
+    entries = F.concat(
+        F.array(F.lit(None)),
+        F.array_distinct(F.coalesce("tokens", F.array())),
+    )
+    counts = (
+        corpus_tok.select(F.posexplode(entries).alias("pos", "token"))
+        .groupBy((F.col("pos") == 0).alias("_doc"), "token")
         .agg(F.count("*").alias("df"))
     )
-    n = doc_count(corpus_tok)
-    return df_counts.crossJoin(F.broadcast(n)).select(
-        "token", "df", (F.col("n_docs") / F.col("df")).alias("idf")
+    n_docs = F.max(F.when(F.col("_doc"), F.col("df"))).over(Window.partitionBy())
+    return (
+        counts.select("_doc", "token", "df", n_docs.alias("n_docs"))
+        .where(~F.col("_doc"))
+        .select("token", "df", (F.col("n_docs") / F.col("df")).alias("idf"))
     )
 
 
@@ -99,7 +108,8 @@ def tfidf_weights(tok_df: DataFrame, idf_df: DataFrame) -> DataFrame:
     (EntityResolution.scala:340-366, ScalableEntityResolution.scala:264-277;
     the latter is O(|vocab|) per doc -- this join is O(|doc tokens|)).
     Vocabulary is tiny relative to the corpus, so the idf side is
-    broadcast.
+    broadcast and the weights keep :func:`term_frequencies`' ``id``
+    partitioning.
     """
     tf = term_frequencies(tok_df)
     return tf.join(F.broadcast(idf_df), "token").select(

@@ -39,6 +39,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # AQE numbers whole-stage codegen stages in the order their query
+        # stages finish; with the id in the generated class name,
+        # identical stage code misses the codegen cache and is
+        # recompiled on every run of the same plan.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

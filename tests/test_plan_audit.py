@@ -95,8 +95,11 @@ BUDGETS = {
     # counts once per self-join side; EXECUTED plan has FEWER
     # exchanges than before (the join itself is now exchange-free)
     "dedup_minhash_lsh": (7, 1),
-    # TF-IDF weights: fan-out + tf/idf/df aggs; IDF joins broadcast
-    "tfidf_vectors": (6, 2),
+    # TF-IDF weights: fan-out + tf (distributed by id) + the one df/N
+    # agg and its single-partition window; the IDF joins broadcast.
+    # (6, 2) -> (5, 1): idf_table counts N in its df aggregation, so the
+    # doc-count agg and its broadcast are gone.
+    "tfidf_vectors": (5, 1),
     # n_steps user-keyed joins with monotonically shrinking inputs
     "funnel_conversion": (9, 3),
     # --- second batch (measured cache-free; pipelines that normally
@@ -129,12 +132,21 @@ BUDGETS = {
     "user_type_pivot": (2, 0),
     "corpus_bigrams": (2, 0),
     "doc_fingerprint": (3, 0),
-    "idf_dict": (4, 0),
+    # idf_dict / l2_norm / idf_histogram / doc_similarity /
+    # cosine_similarity: measured at sf0.001 when idf_table began
+    # counting N inside its df aggregation (one doc-count agg fewer per
+    # idf lineage; (4, 7, 10, 7, 31) before)
+    "idf_dict": (3, 0),
     "gold_join_eval": (6, 0),
-    "l2_norm": (7, 0),
-    "threshold_sweep": (17, 0),
+    "l2_norm": (5, 0),
+    # the sims lineage + the gold join + ONE groupBy(threshold) over
+    # the in-row threshold fan-out. Measured 5 alone and 8 right after
+    # fast_cosine_join (9 before, in that order; the count
+    # depends on the state an earlier audit leaves): the grid join, bin
+    # agg, gold count and both windows are gone
+    "threshold_sweep": (8, 0),
     "docs_unigram_logprob": (7, 0),
-    "idf_histogram": (10, 0),
+    "idf_histogram": (6, 0),
     "dedup_ngram_jaccard": (11, 0),
     "train_test_ngram_overlap": (12, 0),
     # --- third batch: the full 94-key surface. The big ceilings are
@@ -179,7 +191,7 @@ BUDGETS = {
     # scan; the underlying LSH+CC chain is pinned separately in
     # test_dedup_cluster_chain_budget
     "dedup_near_clusters": (0, 0),
-    "doc_similarity": (7, 0),
+    "doc_similarity": (4, 0),
     "curation_pipeline": (1, 0),  # r4: consumes the checkpointed cluster point
     "ann_topk_lsh": (8, 5),
     "dot_product": (15, 0),
@@ -267,7 +279,7 @@ BUDGETS = {
     # print twice; nothing added runs over the corpus.
     "ann_topk_ivf": (6, 4),
     "common_token_pairs": (31, 0),
-    "cosine_similarity": (31, 0),
+    "cosine_similarity": (25, 0),
     # --- r6 additions: the ExactSubstr subtraction half + the two
     # incremental daily-ingest contracts, gated with the history half
     # built INLINE (so the audit sees both halves' pipelines flattened
@@ -446,8 +458,9 @@ BUDGETS = {
     # documented single-partition window over days, never rows)
     "events_cumulative_users": (3, 0),
     # keyterms: the shared TF-IDF weights lineage (tok fan-out, tf agg,
-    # idf agg + broadcast back) + the per-doc rank window
-    "docs_keyterms": (7, 2),
+    # idf agg + broadcast back) + the per-doc rank window.
+    # (7, 2) -> (5, 1): the doc-count agg and its broadcast are gone
+    "docs_keyterms": (5, 1),
     # knn: broadcast queries x streamed corpus (no corpus shuffle);
     # rank window, vote agg, total agg + the final joins
     "embeddings_knn_label": (8, 4),
@@ -560,7 +573,9 @@ BUDGETS = {
     # spearman: TWO bucketed-prefix rank decompositions (each per's
     # persisted subtree counts per consumer, the docs_length_ks
     # flattening x2) + the rank join-backs + one moment agg; executed
-    # exchanges ~12
+    # exchanges ~12. The side-tagged one-pass form (44, 30) ran 42
+    # stages against these 40 at sf0.001 and coerced both columns to
+    # one type; it was reverted, not re-pinned.
     "orders_spearman_price_items": (34, 20),
     # perplexity deciles: the cached unigram-LM subtree (counted per
     # consumer) + cuts agg (broadcast) + bounded bucket agg
@@ -602,7 +617,12 @@ BUDGETS = {
     # the audited surface is the final round (hub groupBy + edge join +
     # two bounded aggs) over the persisted edge table + the degree join
     # +fan-out exchange (r11 wide scan; no-op on cluster splits)
-    "user_brand_hits": (3, 3),
+    # 3 -> 4: the hash repartition on u in front of the edge cache
+    # prints in this cache-free plan; it is what lets every ferried
+    # round's groupBy(u) and join on u reuse the cached partitioning.
+    # Executed at sf0.001: 29 jobs warm / 39 cold with it, 37 / 46
+    # without it.
+    "user_brand_hits": (4, 3),
     # overlap curve: 3 shingle builds x (distinct train/test + semi-join
     # + two aggs), persisted te audited per consumer; executed shape is
     # one hash-join family per curve point
@@ -769,8 +789,10 @@ BUDGETS = {
     # source centroids: the PERSISTED centroid table feeds 3 consumers
     # (norms + both join sides) and the auditor counts the cached
     # TF-IDF lineage per consumer -- executed count is ~8 (weights agg
-    # + centroid agg + token join + pair agg + norm joins)
-    "sources_similarity_matrix": (37, 18),
+    # + centroid agg + token join + pair agg + norm joins).
+    # (37, 18) -> (33, 14): each flattened idf lineage lost its
+    # doc-count agg and broadcast (N is counted in the df aggregation)
+    "sources_similarity_matrix": (33, 14),
     # BFS: hops ran EAGERLY at build (localCheckpoint per hop, the
     # CC/k-core discipline); the gated surface aggregates the
     # checkpointed reached table + the anti-join remainder

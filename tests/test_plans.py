@@ -63,9 +63,8 @@ def test_sparse_similarity_join_never_nested_loop(spark):
     w = tfidf_ops.tfidf_weights(tok, idf)
     wa, wb = w.where(F.col("id") % 2 == 0), w.where(F.col("id") % 2 == 1)
     plan = plan_str(sim.cosine_similarity_join(wa, wb))
-    # No unbroadcast cartesian anywhere. (BroadcastNestedLoopJoin does
-    # appear -- once per weights-lineage branch -- but only as the 1-row
-    # corpus-size attach inside idf_table, never a pair-level cross.)
+    # No unbroadcast cartesian anywhere (idf_table attaches the corpus
+    # size through a window over its own aggregate, not a join).
     assert "CartesianProduct" not in plan
     # Candidate generation must be an equi-join (shuffle or broadcast hash).
     assert any(j in plan for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"))
@@ -118,9 +117,9 @@ def test_no_row_python_udf_anywhere(all_plans):
 def test_no_unbroadcast_cartesian_anywhere(all_plans):
     """No declared query may plan a CartesianProduct (an UNBROADCAST
     pair-level cross). BroadcastNestedLoopJoin is permitted: it appears
-    as the 1-row corpus-size attach and as the intentional
-    broadcast-side cross of the dense/brute-force strategies, both of
-    which stream the big side exactly once."""
+    as the 1-row scalar attach of several statistics queries and as the
+    intentional broadcast-side cross of the dense/brute-force
+    strategies, all of which stream the big side exactly once."""
     for name, plan in all_plans.items():
         assert "CartesianProduct" not in plan, f"cartesian in {name}"
 
@@ -148,8 +147,8 @@ def _is_dense_plan(sims) -> bool:
     """True when the analyzed plan of a cosine join is the dense form:
     the sparse join multiplies the token equi-join's ``w_a`` x ``w_b``
     columns, the dense form the flat table's per-doc columns.
-    (BroadcastNestedLoopJoin cannot tell them apart: every TF-IDF plan
-    carries one through idf_table's 1-row doc-count attach.)"""
+    (A BroadcastNestedLoopJoin cannot tell them apart: the dense form's
+    pair cross is one, and so is any scalar attach a caller adds.)"""
     return "w_a#" not in sims._jdf.queryExecution().analyzed().toString()
 
 
