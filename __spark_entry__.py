@@ -32,6 +32,8 @@ from sparkbigdatatextanalysis_spark.functions.hashing import (
 )
 from sparkbigdatatextanalysis_spark.functions import text as text_fns
 from sparkbigdatatextanalysis_spark.functions.text import ENGLISH_STOPWORDS
+from sparkbigdatatextanalysis_spark.functions.sql import sql_double
+from sparkbigdatatextanalysis_spark.functions.vector import vec_dot
 from sparkbigdatatextanalysis_spark.operators import ann as ann_ops
 from sparkbigdatatextanalysis_spark.operators import dedup as dd
 from sparkbigdatatextanalysis_spark.operators import evaluation as ev
@@ -342,7 +344,7 @@ def q_doc_similarity(spark, sf_dir):
         F.map_from_entries(F.collect_list(F.struct("token", "idf"))).alias("idf_map")
     )
     out = texts.crossJoin(idf_map).select(
-        sim.document_similarity(F.col("text_a"), F.col("text_b"), F.col("idf_map")).alias("sim")
+        sim.document_similarity("text_a", "text_b", F.col("idf_map")).alias("sim")
     )
     return _round6(out, "sim")
 
@@ -5178,9 +5180,7 @@ def q_embeddings_cluster_inertia(spark, sf_dir):
     )
     cents_arr = ann_ops._cents_lit(ann_ops._collect_cents(cents))
     nv = ann_ops._norm_vecs(emb, "vec_id", "embedding")
-    best = F.array_max(
-        ann_ops._cent_scores(F.col("v"), F.col("norm"), cents_arr)
-    )
+    best = F.expr(f"array_max({ann_ops._cent_scores('v', 'norm', cents_arr)})")
     sel = nv.select(
         (-best["neg_cid"]).cast("long").alias("cluster"),
         best["cos"].alias("_cos"),
@@ -5573,12 +5573,10 @@ def q_embeddings_remove_top_component(spark, sf_dir):
         float(r["component"])
         for r in sorted(u.collect(), key=lambda r: r["pos"])
     ]
-    ulit = F.array(*[F.lit(x) for x in comps])
-    v = F.col("embedding").cast("array<double>")
-    from sparkbigdatatextanalysis_spark.operators.ann import _dot
-
-    proj = F.round(_dot(v, ulit), 9)
-    n2 = _dot(v, v)
+    ulit = "array(" + ", ".join(sql_double(x) for x in comps) + ")"
+    v = "CAST(embedding AS ARRAY<DOUBLE>)"
+    proj = F.round(vec_dot(v, ulit), 9)
+    n2 = vec_dot(v, v)
     return emb.select(
         "vec_id",
         proj.alias("proj"),
@@ -5836,10 +5834,8 @@ def _mmr_pool(spark, sf_dir):
     nv = ann_ops._norm_vecs(_emb(spark, sf_dir), "vec_id", "embedding")
     qrow = nv.orderBy("id").limit(1).collect()[0]
     q_id, qv, qn = qrow["id"], [float(x) for x in qrow["v"]], float(qrow["norm"])
-    qlit = F.array(*[F.lit(x) for x in qv])
-    rel = F.round(
-        ann_ops._dot(F.col("v"), qlit) / (F.lit(qn) * F.col("norm")), 9
-    )
+    qlit = "array(" + ", ".join(sql_double(x) for x in qv) + ")"
+    rel = F.round(vec_dot("v", qlit) / (F.lit(qn) * F.col("norm")), 9)
     cands = (
         nv.where(F.col("id") != q_id)
         .select("id", "v", "norm", rel.alias("rel"))
@@ -5888,7 +5884,7 @@ def _mmr_select(spark, sf_dir):
             "_a",
             "_b",
             F.round(
-                ann_ops._dot(F.col("_va"), F.col("_vb"))
+                vec_dot("_va", "_vb")
                 / (F.col("_na") * F.col("_nb")),
                 9,
             ).alias("_s"),
@@ -5946,10 +5942,8 @@ def q_embeddings_mmr_topk(spark, sf_dir):
             F.col("vec_id") == vid, F.round(F.lit(score), 6)
         ).otherwise(score_expr)
     nv = ann_ops._norm_vecs(_emb(spark, sf_dir), "vec_id", "embedding")
-    qlit = F.array(*[F.lit(x) for x in qv])
-    rel = F.round(
-        ann_ops._dot(F.col("v"), qlit) / (F.lit(qn) * F.col("norm")), 9
-    )
+    qlit = "array(" + ", ".join(sql_double(x) for x in qv) + ")"
+    rel = F.round(vec_dot("v", qlit) / (F.lit(qn) * F.col("norm")), 9)
     return (
         nv.where(F.col("id").isin(ids))
         .select(F.col("id").alias("vec_id"), rel.alias("relevance"))
@@ -6884,9 +6878,9 @@ def q_embeddings_triplet_margin(spark, sf_dir):
     margins are differences of two 9-dp-rounded cosines, per-label
     means through DECIMAL."""
     emb = _emb(spark, sf_dir)
-    v = F.col("embedding").cast("array<double>")
+    v = "CAST(embedding AS ARRAY<DOUBLE>)"
     nv = emb.select(
-        "vec_id", "label", v.alias("v"), F.sqrt(ann_ops._dot(v, v)).alias("n")
+        "vec_id", "label", F.expr(v).alias("v"), F.sqrt(vec_dot(v, v)).alias("n")
     )
     q = nv.select(
         F.col("vec_id").alias("q_id"),
@@ -6895,7 +6889,7 @@ def q_embeddings_triplet_margin(spark, sf_dir):
         F.col("n").alias("qn"),
     )
     cos = F.round(
-        ann_ops._dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("n")), 9
+        vec_dot("qv", "v") / (F.col("qn") * F.col("n")), 9
     )
     scored = (
         F.broadcast(q)
@@ -7625,12 +7619,10 @@ def q_embeddings_anisotropy(spark, sf_dir):
     before the order-insensitive DECIMAL fold; each dim's sum rounds
     to a 9 dp double, squares in fixed shape, rounds 12 dp, and
     DECIMAL-sums again -- no engine-order float fold anywhere."""
-    from sparkbigdatatextanalysis_spark.functions.vector import vec_dot
-
     emb = _emb(spark, sf_dir).where(F.col("embedding").isNotNull())
-    v = F.col("embedding").cast("array<double>")
+    v = "CAST(embedding AS ARRAY<DOUBLE>)"
     nv = emb.select(
-        v.alias("_v"), F.sqrt(vec_dot(v, v)).alias("_norm")
+        F.expr(v).alias("_v"), F.sqrt(vec_dot(v, v)).alias("_norm")
     ).where(F.col("_norm") > 0)
     u = nv.select(
         F.transform("_v", lambda x: x / F.col("_norm")).alias("_u")
@@ -7649,7 +7641,7 @@ def q_embeddings_anisotropy(spark, sf_dir):
     tot = u.agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
         F.sum(
-            F.round(vec_dot(F.col("_u"), F.col("_u")), 12).cast(
+            F.round(vec_dot("_u", "_u"), 12).cast(
                 "decimal(38,12)"
             )
         ).cast("double").alias("_t"),
@@ -8114,8 +8106,8 @@ def q_embeddings_silhouette(spark, sf_dir):
     )
     cents_arr = ann_ops._cents_lit(ann_ops._collect_cents(cents))
     nv = ann_ops._norm_vecs(emb, "vec_id", "embedding")
-    scores = ann_ops._cent_scores(F.col("v"), F.col("norm"), cents_arr)
-    srt = F.reverse(F.array_sort(scores))
+    scores = ann_ops._cent_scores("v", "norm", cents_arr)
+    srt = F.expr(f"reverse(array_sort({scores}))")
     sel = nv.select(
         (-srt[0]["neg_cid"]).cast("long").alias("cluster"),
         srt[0]["cos"].alias("_own"),

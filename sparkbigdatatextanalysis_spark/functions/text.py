@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sql import sql_str
+
 # Standard English stopword set (127 words), matching the reference's
 # stopwords.txt fixture so TF/IDF goldens carry over. Order irrelevant.
 ENGLISH_STOPWORDS: list[str] = sorted(
@@ -32,22 +34,38 @@ ENGLISH_STOPWORDS: list[str] = sorted(
 TOKEN_SPLIT_PATTERN = r"\W+"
 
 
-def tokenize(col: Column | str) -> Column:
+def _tokens_sql(col: str) -> str:
+    return f"filter(split(lower({col}), {sql_str(TOKEN_SPLIT_PATTERN)}), x -> x != '')"
+
+
+def _no_stopwords_sql(tokens: str, stopwords: list[str] | None) -> str:
+    stop = stopwords if stopwords is not None else ENGLISH_STOPWORDS
+    if not stop:
+        return tokens
+    return f"filter({tokens}, t -> NOT t IN ({', '.join(map(sql_str, stop))}))"
+
+
+# The three tokenizer functions take ``col`` as SQL text -- a column
+# name, or any STRING / ARRAY<STRING> expression -- and each returns one
+# ``F.expr``. Assembled literal by literal through the Column API, the
+# 127-word stopword list alone costs about 500 py4j round trips.
+
+
+def tokenize(col: str) -> Column:
     """lower -> split ``\\W+`` -> drop empties. Returns ARRAY<STRING>."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(col), TOKEN_SPLIT_PATTERN), lambda x: x != "")
+    return F.expr(_tokens_sql(col))
 
 
-def remove_stopwords(tokens: Column, stopwords: list[str] | None = None) -> Column:
+def remove_stopwords(tokens: str, stopwords: list[str] | None = None) -> Column:
     """Order-preserving, duplicate-preserving stopword filter. The word
     list is an ``IN`` list, which the optimizer turns into a hashed set
-    lookup (``INSET``) instead of a scan of the whole list per token."""
-    stop = stopwords if stopwords is not None else ENGLISH_STOPWORDS
-    return F.filter(tokens, lambda t: ~t.isin(stop))
+    lookup (``INSET``) instead of a scan of the whole list per token.
+    Each word is hex-encoded (:func:`sql_str`)."""
+    return F.expr(_no_stopwords_sql(tokens, stopwords))
 
 
-def tokenize_no_stopwords(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    return remove_stopwords(tokenize(col), stopwords)
+def tokenize_no_stopwords(col: str, stopwords: list[str] | None = None) -> Column:
+    return F.expr(_no_stopwords_sql(_tokens_sql(col), stopwords))
 
 
 def strip_quotes(col: Column | str) -> Column:

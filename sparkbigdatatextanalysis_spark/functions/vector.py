@@ -5,6 +5,11 @@ aggregate / transform) -- one row in, one scalar out, no explode, no
 shuffle, no Python. This is the hot path for embedding similarity at
 scale: a brute-force top-k over N vectors is a (pruned) join producing
 N*Q rows, each evaluating these expressions in codegen.
+
+Each kernel is defined once, as SQL text over SQL array expressions (a
+column name is one), so a caller can splice it into a larger expression
+and build the whole thing with one ``F.expr`` -- one py4j call, where
+the same tree assembled Column by Column costs dozens.
 """
 
 from __future__ import annotations
@@ -13,34 +18,41 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _as_double(v: Column) -> Column:
-    return F.transform(v, lambda x: x.cast("double"))
+def _as_double(v: str) -> str:
+    return f"transform({v}, x -> CAST(x AS DOUBLE))"
 
 
-def vec_dot(a: Column, b: Column) -> Column:
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of sum(a[i]*b[i]), folded left to right from 0.0 (the
+    fold order the DuckDB oracles replay bit for bit)."""
+    return (
+        f"aggregate(zip_with({_as_double(a)}, {_as_double(b)}, (x, y) -> x * y), "
+        "0D, (acc, x) -> acc + x)"
+    )
+
+
+def _norm_sql(a: str) -> str:
+    """SQL text of the L2 norm, the same left fold as :func:`dot_sql`."""
+    return (
+        f"sqrt(aggregate(transform({_as_double(a)}, x -> x * x), "
+        "0D, (acc, x) -> acc + x))"
+    )
+
+
+def vec_dot(a: str, b: str) -> Column:
     """Sparse-free dot product: sum(a[i]*b[i]) (reference semantics of
     calculateDotProduct, EntityResolution.scala:368-384, for the dense case).
     """
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return F.expr(dot_sql(a, b))
 
 
-def vec_norm(a: Column) -> Column:
+def vec_norm(a: str) -> Column:
     """L2 norm (reference calculateNorm, EntityResolution.scala:386-393)."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(_as_double(a), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    return F.expr(_norm_sql(a))
 
 
-def vec_cosine(a: Column, b: Column) -> Column:
+def vec_cosine(a: str, b: str) -> Column:
     """dot/(|a||b|); NaN when a norm is zero, matching the reference's
     unguarded division (EntityResolution.scala:395-404).
     """
-    return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
+    return F.expr(f"{dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")

@@ -37,10 +37,11 @@ from __future__ import annotations
 import math
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import vec_dot
+from ..functions.sql import sql_double
+from ..functions.vector import dot_sql, vec_dot
 
 from ..serde import ship_by_value
 
@@ -87,10 +88,10 @@ def _lcg_planes(n_planes: int = N_PLANES_MAX, dim: int = 64) -> list[list[int]]:
 HYPERPLANES: list[list[int]] = _lcg_planes()
 
 
-def _dot(a: Column, b: Column) -> Column:
-    # shared implementation: functions.vector.vec_dot (identical fold
-    # order, so results stay bit-exact with the DuckDB oracle)
-    return vec_dot(a, b)
+def _cos_sql(dot: str, norms: str) -> str:
+    """SQL text of a 9-dp cosine. ``try_divide`` makes a zero norm give
+    NULL, where ANSI division would fail the whole query."""
+    return f"round(try_divide({dot}, {norms}), 9)"
 
 
 def lsh_signatures(
@@ -113,7 +114,8 @@ def lsh_signatures(
     explicitly to pin the plan.
     """
     if rows_per_band is None:
-        rows_per_band = adaptive_rows_per_band(emb.count())
+        with _job_description(emb, "lsh_signatures: corpus size for rows_per_band"):
+            rows_per_band = adaptive_rows_per_band(emb.count())
     plane_rows = [list(p) for p in planes[: bands * rows_per_band]]
     dim = len(plane_rows[0])
     n_bands, rpb, quant = bands, rows_per_band, QUANT
@@ -173,8 +175,10 @@ def lsh_signatures(
 
 
 def _norm_vecs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    v = F.col(vec_col).cast("array<double>")
-    return emb.select(F.col(id_col).alias("id"), v.alias("v"), F.sqrt(_dot(v, v)).alias("norm"))
+    """(id, v, norm): the vector as ARRAY<DOUBLE> and its L2 norm, in
+    one projection built from one expression list."""
+    v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    return emb.selectExpr(f"`{id_col}` AS id", f"{v} AS v", f"sqrt({dot_sql(v, v)}) AS norm")
 
 
 def _as_queries(nv: DataFrame) -> DataFrame:
@@ -194,22 +198,19 @@ def _query_vecs(nv: DataFrame, query_ids: DataFrame) -> DataFrame:
     return _as_queries(nv.join(F.broadcast(q), "id"))
 
 
-def _pair_cos() -> Column:
-    """Exact cosine of a (qv, qn) x (nv, nn) candidate row, rounded to
-    9 dp so ranks tie-break identically across engines."""
-    return F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn")), 9)
+def _pair_cos() -> str:
+    """SQL text of the exact cosine of a (qv, qn) x (nv, nn) candidate
+    row, rounded to 9 dp so ranks tie-break identically across engines.
+    A zero-norm vector scores NULL, which ranks after every cosine."""
+    return _cos_sql(dot_sql("qv", "nv"), "qn * nn")
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     """(q_id, n_id, rank, cos): the top ``k`` of a (q_id, n_id, cos)
     frame by (cos desc, n_id) -- the ONE neighbor-rank window of every
     search here, so no two paths can drift on tie-breaks."""
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "cos")
-    )
+    rank = "row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank"
+    return scored.selectExpr("q_id", "n_id", rank, "cos").where(f"rank <= {int(k)}")
 
 
 def _broadcast_topk(
@@ -249,7 +250,7 @@ def cosine_topk_bruteforce(
     Rank ties broken by neighbor id on the 9-dp-rounded cosine so results
     are deterministic across engines."""
     nv = _norm_vecs(emb, id_col, vec_col)
-    return _broadcast_topk(_query_vecs(nv, query_ids), _as_neighbors(nv), _pair_cos(), k)
+    return _broadcast_topk(_query_vecs(nv, query_ids), _as_neighbors(nv), F.expr(_pair_cos()), k)
 
 
 N_CENTROIDS = 16
@@ -288,24 +289,12 @@ def _collect_cents(cents: DataFrame) -> list[tuple[int, list[float], float]]:
     ]
 
 
-def _dlit(x: float | None) -> str:
-    """Shortest-round-trip double literal for a generated SQL expression
-    (repr is exact for IEEE doubles; Spark's parser is correctly
-    rounded, so the value survives bit-for-bit). None -> NULL, so a
-    degenerate component poisons only its own centroid's score."""
-    if x is None:
-        return "CAST(NULL AS DOUBLE)"
-    if not math.isfinite(x):
-        raise ValueError(f"non-finite centroid component: {x}")
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
-def _cents_lit(cents: list[tuple[int, list[float], float]]):
+def _cents_lit(cents: list[tuple[int, list[float], float]]) -> str:
     """The whole (tiny) centroid set as ONE literal array<struct<c_id,
-    cv, cn>> expression. Centroids are model parameters, not data: k x
-    dim doubles ship inside the plan itself, so scoring a vector against
-    every centroid is a per-row expression -- the argmax that used to be
-    `crossJoin + row_number() over (partition by id)` (an Exchange of
+    cv, cn>> expression, as SQL text. Centroids are model parameters,
+    not data: k x dim doubles ship inside the plan itself, so scoring a
+    vector against every centroid is a per-row expression -- the argmax
+    that used to be `crossJoin + row_number() over (partition by id)` (an Exchange of
     |corpus| x k rows, paid per Lloyd pass: the r3 judge's flagged IVF
     scale-killer) is now map-only with ZERO corpus movement and zero
     exchanges of any kind. Built as one SQL string: ~k*(dim+2) literals
@@ -315,44 +304,39 @@ def _cents_lit(cents: list[tuple[int, list[float], float]]):
         # downstream struct-field lambdas would fail analysis; with the
         # proper type the argmax yields NULL and callers emit 0 rows
         # (the empty-corpus behavior of the r3 window form)
-        return F.expr(
-            "CAST(array() AS ARRAY<STRUCT<c_id: BIGINT, "
-            "cv: ARRAY<DOUBLE>, cn: DOUBLE>>)"
-        )
+        return "CAST(array() AS ARRAY<STRUCT<c_id: BIGINT, cv: ARRAY<DOUBLE>, cn: DOUBLE>>)"
     parts = []
     for cid, cv, cn in cents:
-        arr = ", ".join(_dlit(x) for x in cv)
+        arr = ", ".join(sql_double(x) for x in cv)
         parts.append(
             f"named_struct('c_id', CAST({int(cid)} AS BIGINT), "
-            f"'cv', array({arr}), 'cn', {_dlit(cn)})"
+            f"'cv', array({arr}), 'cn', {sql_double(cn)})"
         )
-    return F.expr("array(" + ", ".join(parts) + ")")
+    return "array(" + ", ".join(parts) + ")"
 
 
-def _cent_scores(v, norm, cents_arr):
-    """array<struct<cos, neg_cid>> over the in-row centroid set: cosine
-    rounded to 9 dp (the oracle's comparison precision) with NULL -> -inf
-    so zero-norm rows order exactly like the window's NULLS-LAST desc.
-    Struct max/sort then reproduces (cos DESC, c_id ASC) tie-breaks:
-    greater cos wins, equal cos -> greater neg_cid = smaller c_id."""
-    return F.transform(
-        cents_arr,
-        lambda c: F.struct(
-            F.coalesce(
-                F.round(_dot(v, c["cv"]) / (norm * c["cn"]), 9),
-                F.lit(float("-inf")),
-            ).alias("cos"),
-            (-c["c_id"]).alias("neg_cid"),
-        ),
+def _cent_scores(v: str, norm: str, cents_arr: str) -> str:
+    """SQL text of array<struct<cos, neg_cid>> over the in-row centroid
+    set ``cents_arr`` for the vector ``v`` of norm ``norm``: cosine
+    rounded to 9 dp (the oracle's comparison precision) with NULL ->
+    -inf, so zero-norm rows and zero-norm centroids order exactly like
+    the window's NULLS-LAST desc instead of failing on a division by
+    zero. Struct max/sort then reproduces (cos DESC, c_id ASC)
+    tie-breaks: greater cos wins, equal cos -> greater neg_cid = smaller
+    c_id."""
+    cos = _cos_sql(dot_sql(v, "c.cv"), f"{norm} * c.cn")
+    return (
+        f"transform({cents_arr}, c -> named_struct("
+        f"'cos', coalesce({cos}, CAST('-Infinity' AS DOUBLE)), 'neg_cid', -c.c_id))"
     )
 
 
-def _best_centroid(v, norm, cents_arr):
-    """In-row argmax cluster id (see :func:`_cent_scores`)."""
-    return -F.array_max(_cent_scores(v, norm, cents_arr))["neg_cid"]
+def _best_centroid(v: str, norm: str, cents_arr: str) -> str:
+    """SQL text of the in-row argmax cluster id (see :func:`_cent_scores`)."""
+    return f"-array_max({_cent_scores(v, norm, cents_arr)}).neg_cid"
 
 
-def _assign_from_lit(nv: DataFrame, cents_arr, extra_cols: tuple = ()) -> DataFrame:
+def _assign_from_lit(nv: DataFrame, cents_arr: str, extra_cols: tuple = ()) -> DataFrame:
     """ONE definition of corpus-to-centroid assignment over a literal
     centroid array (shared by ivf_assignments, dedup and pipeline, so
     they cannot drift; the IVF searches' :func:`_ivf_index` takes the
@@ -367,11 +351,9 @@ def _assign_from_lit(nv: DataFrame, cents_arr, extra_cols: tuple = ()) -> DataFr
     IN-ROW, so consumers that need (cluster, v, norm) together must
     never re-join the assignment onto the corpus (that would add two
     corpus-wide exchanges for data already co-resident in the row)."""
-    return nv.select(
-        "id",
-        _best_centroid(F.col("v"), F.col("norm"), cents_arr).alias("cluster"),
-        *extra_cols,
-    ).where(F.size(cents_arr) > 0)
+    return nv.selectExpr(
+        "id", f"{_best_centroid('v', 'norm', cents_arr)} AS cluster", *extra_cols
+    ).where(f"size({cents_arr}) > 0")
 
 
 def _lloyd_means(assign: DataFrame) -> DataFrame:
@@ -456,10 +438,7 @@ def kmeans_centroids(
     for it in range(n_iter):
         if not cur:
             break  # empty corpus: nothing to refine, return empty set
-        assign = nv.select(
-            _best_centroid(F.col("v"), F.col("norm"), _cents_lit(cur)).alias("c_id"),
-            "v",
-        )
+        assign = nv.selectExpr(f"{_best_centroid('v', 'norm', _cents_lit(cur))} AS c_id", "v")
         means = _lloyd_means(assign)
         by_cid: dict[int, dict[int, float | None]] = {}
         with _job_description(emb, f"kmeans_centroids: Lloyd pass {it + 1} of {n_iter}"):
@@ -523,9 +502,9 @@ def _rank_cents(df: DataFrame, v: str, norm: str, cents: DataFrame) -> DataFrame
     The centroid table arrives as ONE broadcast row holding the whole
     set as an array: the centroids are read as data, so nothing is
     collected to the driver and no literal is embedded in the plan."""
-    row = cents.agg(F.collect_list(F.struct("c_id", "cv", "cn")).alias("_cents"))
-    rk = F.reverse(F.array_sort(_cent_scores(F.col(v), F.col(norm), F.col("_cents"))))
-    return df.crossJoin(F.broadcast(row)).withColumn("_rk", rk).drop("_cents")
+    row = cents.selectExpr("collect_list(struct(c_id, cv, cn)) AS _cents")
+    rk = f"reverse(array_sort({_cent_scores(v, norm, '_cents')}))"
+    return df.crossJoin(F.broadcast(row)).withColumn("_rk", F.expr(rk)).drop("_cents")
 
 
 def _ivf_index(nv: DataFrame, cents: DataFrame) -> DataFrame:
@@ -541,12 +520,12 @@ def _ivf_index(nv: DataFrame, cents: DataFrame) -> DataFrame:
     NULL: a nullable join key would make the optimizer infer
     ``isnotnull(cluster)`` and push it into the centroid cross join of
     an unpersisted index, ranking every vector twice."""
-    return _rank_cents(nv, "v", "norm", cents).select(
+    return _rank_cents(nv, "v", "norm", cents).selectExpr(
         "id",
-        F.coalesce(-F.get("_rk", 0)["neg_cid"], F.lit(-1).cast("long")).alias("cluster"),
+        "coalesce(-get(_rk, 0).neg_cid, CAST(-1 AS BIGINT)) AS cluster",
         "_rk",
-        F.col("v").alias("nv"),
-        F.col("norm").alias("nn"),
+        "v AS nv",
+        "norm AS nn",
     )
 
 
@@ -568,14 +547,15 @@ def _ivf_topk(
     probe side when ``broadcast_probes`` (a few queries) and a plain
     hash join otherwise (query cardinality unbounded); ``exclude_self``
     drops q_id == n_id."""
-    probe = F.transform(F.slice("_rk", 1, n_probe), lambda s: -s["neg_cid"])
-    probes = qv.select("q_id", "qv", "qn", F.explode(probe).alias("cluster"))
+    probes = qv.selectExpr(
+        "q_id", "qv", "qn", f"explode(transform(slice(_rk, 1, {int(n_probe)}), s -> -s.neg_cid)) AS cluster"
+    )
     if broadcast_probes:
         probes = F.broadcast(probes)
     cand = probes.join(index.select("cluster", "id", "nv", "nn"), "cluster")
     if exclude_self:
-        cand = cand.where(F.col("q_id") != F.col("id"))
-    return _rank_topk(cand.select("q_id", F.col("id").alias("n_id"), _pair_cos().alias("cos")), k)
+        cand = cand.where("q_id != id")
+    return _rank_topk(cand.selectExpr("q_id", "id AS n_id", f"{_pair_cos()} AS cos"), k)
 
 
 def cosine_topk_ivf(
@@ -606,10 +586,8 @@ def cosine_topk_ivf(
     if cents is None:
         cents = kmeans_centroids(emb, id_col, vec_col)
     index = _ivf_index(_norm_vecs(emb, id_col, vec_col), cents).persist()
-    q = query_ids.select(F.col(query_ids.columns[0]).alias("id"))
-    qv = index.join(F.broadcast(q), "id").select(
-        F.col("id").alias("q_id"), F.col("nv").alias("qv"), F.col("nn").alias("qn"), "_rk"
-    )
+    q = query_ids.selectExpr(f"`{query_ids.columns[0]}` AS id")
+    qv = index.join(F.broadcast(q), "id").selectExpr("id AS q_id", "nv AS qv", "nn AS qn", "_rk")
     return _ivf_topk(qv, index, n_probe, k, broadcast_probes=True)
 
 
@@ -633,7 +611,8 @@ def cosine_topk_lsh(
     the bucket join and nothing is persisted.
     """
     if rows_per_band is None:
-        rows_per_band = adaptive_rows_per_band(emb.count())
+        with _job_description(emb, "cosine_topk_lsh: corpus size for rows_per_band"):
+            rows_per_band = adaptive_rows_per_band(emb.count())
     q = query_ids.select(F.col(query_ids.columns[0]).alias(id_col))
     qsig = lsh_signatures(
         emb.join(F.broadcast(q), id_col, "left_semi"), id_col, vec_col,
@@ -650,7 +629,7 @@ def cosine_topk_lsh(
     scored = (
         pairs.join(F.broadcast(_query_vecs(nv, query_ids)), "q_id")
         .join(_as_neighbors(nv), "n_id")
-        .select("q_id", "n_id", _pair_cos().alias("cos"))
+        .selectExpr("q_id", "n_id", f"{_pair_cos()} AS cos")
     )
     return _rank_topk(scored, k)
 
@@ -739,7 +718,7 @@ def knn_label_vote(
     labeled = corpus_emb.where(F.col(label_col).isNotNull())
     nvq = _as_queries(_norm_vecs(queries_emb, id_col, vec_col))
     nvc = _as_neighbors(_norm_vecs(labeled, id_col, vec_col))
-    topk = _broadcast_topk(nvq, nvc, _pair_cos(), k, exclude_self=exclude_self)
+    topk = _broadcast_topk(nvq, nvc, F.expr(_pair_cos()), k, exclude_self=exclude_self)
     return _vote_from_topk(topk, labeled, id_col, label_col)
 
 
@@ -875,8 +854,8 @@ def top_principal_component(
     cur = [float(c0)] * dim
     out = None
     for it in range(n_iter):
-        vlit = F.array(*[F.lit(float(x)) for x in cur])
-        s = F.round(_dot(F.col("v"), vlit), 9)
+        vlit = "array(" + ", ".join(sql_double(float(x)) for x in cur) + ")"
+        s = F.round(vec_dot("v", vlit), 9)
         terms = v.select(
             s.alias("_s"), F.posexplode(F.col("v")).alias("pos", "val")
         )

@@ -333,19 +333,10 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _dot(a: Column, b: Column) -> Column:
-    # shared implementation: functions.vector.vec_dot (identical fold
-    # order, so results stay bit-exact with the DuckDB oracle)
-    return vec_dot(a, b)
-
-
 def embedding_norms(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    v = F.col(vec_col).cast("array<double>")
-    return emb.select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        F.sqrt(_dot(v, v)).alias("norm"),
-    )
+    from .ann import _norm_vecs
+
+    return _norm_vecs(emb, id_col, vec_col)
 
 
 def embedding_near_dup_pairs(
@@ -371,7 +362,7 @@ def embedding_near_dup_pairs(
         .select(
             "a_id",
             "b_id",
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
+            (vec_dot("va", "vb") / (F.col("na") * F.col("nb"))).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
     )
@@ -544,7 +535,7 @@ def embedding_near_dup_pairs_lsh(
         .select(
             "a_id",
             "b_id",
-            (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
+            (vec_dot("va", "vb") / (F.col("na") * F.col("nb"))).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
     )
@@ -1304,7 +1295,7 @@ def semantic_dedup(
             "_a",
             "_b",
             (
-                _dot(F.col("_va"), F.col("_vb"))
+                vec_dot("_va", "_vb")
                 / (F.col("_na") * F.col("_nb"))
             ).alias("cos"),
         )
@@ -1405,7 +1396,7 @@ def incremental_semantic_dedup(
         near_hist = (
             av.join(h, "cluster")
             .where(
-                _dot(F.col("v"), F.col("_hv")) / (F.col("norm") * F.col("_hn"))
+                vec_dot("v", "_hv") / (F.col("norm") * F.col("_hn"))
                 >= threshold
             )
             .select(F.col("id").alias("_nh_id"))
@@ -1430,7 +1421,7 @@ def incremental_semantic_dedup(
         a.join(b, "cluster")
         .where(F.col("_a") < F.col("_b"))
         .where(
-            _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+            vec_dot("_va", "_vb") / (F.col("_na") * F.col("_nb"))
             >= threshold
         )
         .select(F.col("_b").alias("_nb_id"))

@@ -332,7 +332,7 @@ def embedding_decontamination(
     cluster in SCALE.md.
     """
     from .ann import _assign_from_lit, _cents_lit, _collect_cents, _norm_vecs
-    from .dedup import _dot
+    from ..functions.vector import vec_dot
 
     lit = _cents_lit(_collect_cents(cents))
     tr = _assign_from_lit(
@@ -344,7 +344,7 @@ def embedding_decontamination(
     probes = pr.select(
         "cluster", F.col("v").alias("_pv"), F.col("norm").alias("_pn")
     )
-    cos = _dot(F.col("v"), F.col("_pv")) / (F.col("norm") * F.col("_pn"))
+    cos = vec_dot("v", "_pv") / (F.col("norm") * F.col("_pn"))
     hits = (
         tr.join(F.broadcast(probes), "cluster")
         .select("id", cos.alias("_cos"))

@@ -22,8 +22,10 @@ once, pruned to the union of its queries' terms (see
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.sql import sql_double, sql_str
 
 
 def _check_params(fn: str, k1: float, b: float) -> None:
@@ -31,25 +33,27 @@ def _check_params(fn: str, k1: float, b: float) -> None:
         raise ValueError(f"{fn}: need k1 >= 0 and 0 <= b <= 1, got {k1}, {b}")
 
 
-def _corpus_stats(tokens: Column) -> tuple[Column, Column]:
-    """(_n, _avgdl) aggregate columns: N and avgdl over the SAME row set
-    -- F.size(NULL) is NULL (or -1 under legacy sizeOfNull) and avg()
-    skips NULLs, so a bare avg(size(tokens)) would drop NULL-token rows
-    from avgdl while count(*) keeps them in N, skewing IDF vs the
-    documented formula (r4 advice). A NULL/empty token array is an empty
-    document: length 0, counted in both stats."""
-    dl = F.when(tokens.isNull(), F.lit(0)).otherwise(F.size(tokens))
-    return F.count(F.lit(1)).alias("_n"), F.avg(dl).alias("_avgdl")
+def _corpus_stats(tokens: str) -> tuple[str, str]:
+    """(_n, _avgdl) aggregate expressions (SQL text) over the token
+    array ``tokens``: N and avgdl over the SAME row set -- size(NULL) is
+    NULL (or -1 under legacy sizeOfNull) and avg() skips NULLs, so a
+    bare avg(size(tokens)) would drop NULL-token rows from avgdl while
+    count(*) keeps them in N, skewing IDF vs the documented formula (r4
+    advice). A NULL/empty token array is an empty document: length 0,
+    counted in both stats."""
+    dl = f"CASE WHEN {tokens} IS NULL THEN 0 ELSE size({tokens}) END"
+    return "count(1) AS _n", f"avg({dl}) AS _avgdl"
 
 
-def _term_score(
-    tf: Column, dl: Column, df: Column, n: Column, avgdl: Column, k1: float, b: float
-) -> Column:
-    """The Okapi/+1-smoothed-IDF per-(doc, term) score -- ONE definition
-    shared by the single-query and batch forms so the formula cannot
-    drift between them (r5 review finding)."""
-    idf = F.log((n - df + 0.5) / (df + 0.5) + 1.0)
-    return idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+def _term_score(tf: str, dl: str, df: str, n: str, avgdl: str, k1: float, b: float) -> str:
+    """SQL text of the Okapi/+1-smoothed-IDF per-(doc, term) score --
+    ONE definition shared by the single-query and batch forms so the
+    formula cannot drift between them (r5 review finding). The operand
+    order and grouping are the evaluation order of the score, so both
+    forms round identically."""
+    idf = f"ln(({n} - {df} + 0.5D) / ({df} + 0.5D) + 1.0D)"
+    norm = f"(({dl} * {sql_double(b)}) / {avgdl} + {sql_double(1.0 - b)}) * {sql_double(k1)}"
+    return f"({idf} * ({tf} * {sql_double(k1 + 1.0)})) / ({tf} + {norm})"
 
 
 def bm25_scores(
@@ -68,28 +72,40 @@ def bm25_scores(
     double its contribution).
 
     One aggregate over ``tok_df`` gives N, avgdl (:func:`_corpus_stats`)
-    and each term's df; its one row is broadcast into the documents that
-    share a term with the query. Each term's tf is counted in-row and
-    the per-term scores are summed in query-term order."""
+    and the array ``_dfs`` of each query term's df; its one row is
+    broadcast into the documents that share a term with the query.
+    Each term's tf is counted in-row once, into ``_tfs`` (one (tf, df)
+    struct per query term), and one ``aggregate`` over it sums the
+    per-term scores in query-term order from 0.0. The query is one
+    literal array whose terms are hex-encoded
+    (:func:`functions.sql.sql_str`), so no query text reaches the SQL
+    parser, and the request is built from a handful of py4j calls
+    whatever the number of terms."""
     q = list(dict.fromkeys(query_tokens))
     if not q:
         raise ValueError("bm25_scores: query_tokens must be non-empty")
     _check_params("bm25_scores", k1, b)
-    toks = F.col(tokens_col)
-    dfs = [F.count(F.when(F.array_contains(toks, t), 1)).alias(f"_df{i}") for i, t in enumerate(q)]
-    stats = tok_df.agg(*_corpus_stats(toks), *dfs)
-    docs = tok_df.where(F.arrays_overlap(toks, F.array(*map(F.lit, q))))
-    score = n_matched = F.lit(0)
-    for i, t in enumerate(q):
-        # F.filter builds its lambda right here, so closing over the
-        # loop's term is safe; it must take ONE argument (a second one
-        # is bound to the element index)
-        tf = F.size(F.filter(toks, lambda x: x == t))
-        s = _term_score(tf, F.size(toks), F.col(f"_df{i}"), F.col("_n"), F.col("_avgdl"), k1, b)
-        score = score + F.when(tf > 0, s).otherwise(0.0)
-        n_matched = n_matched + (tf > 0).cast("long")
-    return docs.crossJoin(F.broadcast(stats)).select(
-        F.col(id_col), n_matched.alias("n_matched"), score.alias("score")
+    toks = f"`{tokens_col}`"
+    terms = [sql_str(t) for t in q]
+    qarr = "array(" + ", ".join(terms) + ")"
+    dfs = ", ".join(f"count(CASE WHEN array_contains({toks}, {t}) THEN 1 END)" for t in terms)
+    stats = tok_df.selectExpr(*_corpus_stats(toks), f"array({dfs}) AS _dfs")
+    # lambda variables carry a leading underscore: a lambda variable
+    # shadows a column of the same name inside the lambda's body
+    tfs = (
+        f"zip_with({qarr}, _dfs, (_t, _df) -> "
+        f"named_struct('tf', size(filter({toks}, _x -> _x = _t)), 'df', _df))"
+    )
+    s = _term_score("_e.tf", f"size({toks})", "_e.df", "_n", "_avgdl", k1, b)
+    return (
+        tok_df.where(f"arrays_overlap({toks}, {qarr})")
+        .crossJoin(F.broadcast(stats))
+        .selectExpr(f"`{id_col}`", toks, "_n", "_avgdl", f"{tfs} AS _tfs")
+        .selectExpr(
+            f"`{id_col}`",
+            "aggregate(_tfs, 0L, (_acc, _e) -> _acc + CAST(_e.tf > 0 AS BIGINT)) AS n_matched",
+            f"aggregate(_tfs, 0D, (_acc, _e) -> _acc + IF(_e.tf > 0, {s}, 0D)) AS score",
+        )
     )
 
 
@@ -116,12 +132,11 @@ def bm25_topk(
     materialize the rank), a k-row exchange."""
     scored = bm25_scores(tok_df, query_tokens, k1, b, id_col, tokens_col)
     top = (
-        scored.select(id_col, "n_matched", F.round("score", round_to).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
+        scored.selectExpr(f"`{id_col}`", "n_matched", f"round(score, {int(round_to)}) AS score")
+        .orderBy(F.desc("score"), id_col)
         .limit(k)
     )
-    w = Window.orderBy(F.col("score").desc(), F.col(id_col))
-    return top.withColumn("rank", F.row_number().over(w))
+    return top.selectExpr("*", f"row_number() OVER (ORDER BY score DESC, `{id_col}`) AS rank")
 
 
 def bm25_batch_scores(
@@ -181,10 +196,8 @@ def bm25_batch_scores(
         F.count(F.lit(1)).alias("_tf"), F.first("_dl").alias("_dl")
     )
     dfs = tf.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    stats = tok_df.agg(*_corpus_stats(F.col(tokens_col)))
-    score = _term_score(
-        F.col("_tf"), F.col("_dl"), F.col("_df"), F.col("_n"), F.col("_avgdl"), k1, b
-    )
+    stats = tok_df.selectExpr(*_corpus_stats(f"`{tokens_col}`"))
+    score = F.expr(_term_score("_tf", "_dl", "_df", "_n", "_avgdl", k1, b))
     return (
         tf.join(F.broadcast(dfs), "_t")
         .crossJoin(F.broadcast(stats))

@@ -37,6 +37,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sql import sql_str
 from ..functions.text import term_frequencies_map, tokenize_no_stopwords
 
 
@@ -219,10 +220,6 @@ def cosine_similarity_join(weights_a: DataFrame, weights_b: DataFrame) -> DataFr
 DENSE_UNROLL_MAX = 256
 
 
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
 def dense_flat_table_from_tokens(
     tok_df: DataFrame,
     vocab_idf: list[tuple[str, float]],
@@ -260,7 +257,7 @@ def dense_flat_table_from_tokens(
     )
     counts = [
         F.expr(
-            f"SUM(CASE WHEN token = {_sql_str(t)} THEN 1 ELSE 0 END)"
+            f"SUM(CASE WHEN token = {sql_str(t)} THEN 1 ELSE 0 END)"
         ).alias(f"c{i}")
         for i, (t, _) in enumerate(vocab_idf)
     ]
@@ -400,8 +397,8 @@ def pair_similarity_lookup(sims: DataFrame, a_id: str, b_id: str) -> DataFrame:
 
 
 def document_similarity(
-    text_a: Column | str,
-    text_b: Column | str,
+    text_a: str,
+    text_b: str,
     idf_map: Column,
     stopwords: list[str] | None = None,
 ) -> Column:
@@ -414,7 +411,7 @@ def document_similarity(
     (the closed-world corpus makes this unreachable in the pipeline).
     Entirely higher-order functions -- no UDF, no shuffle.
     """
-    def _weights(text: Column | str) -> Column:
+    def _weights(text: str) -> Column:
         tf = term_frequencies_map(tokenize_no_stopwords(text, stopwords))
         return F.map_from_arrays(
             F.map_keys(tf),

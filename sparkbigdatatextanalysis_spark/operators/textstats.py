@@ -32,7 +32,7 @@ def _marker_hits(tokens: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens, lambda t: F.array_contains(F.lit(words), t)))
 
 
-def language_scores(text_col: Column | str = "text") -> dict[str, Column]:
+def language_scores(text_col: str = "text") -> dict[str, Column]:
     toks = tokenize(text_col)
     return {lang: _marker_hits(toks, words) for lang, words in LANG_MARKERS.items()}
 
@@ -187,7 +187,7 @@ def curation_rules(
     than baked into a WHERE so downstream can re-threshold without a
     second corpus pass.
     """
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(f"`{text_col}`")
     n_tokens = F.size(toks)
     alpha = F.filter(toks, lambda t: t.rlike("[a-z]"))
     n_alpha = F.size(alpha)

@@ -22,10 +22,10 @@ Semantic parity notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import tokenize, remove_stopwords
+from ..functions.text import tokenize, tokenize_no_stopwords
 
 
 def tokenized(
@@ -38,9 +38,8 @@ def tokenized(
     """(id, text) -> (id, tokens ARRAY<STRING>). Reference getTokens
     (EntityResolution.scala:22-34): one narrow projection, no shuffle.
     """
-    toks: Column = tokenize(text_col)
-    if not keep_stopwords:
-        toks = remove_stopwords(toks, stopwords)
+    text = f"`{text_col}`"
+    toks = tokenize(text) if keep_stopwords else tokenize_no_stopwords(text, stopwords)
     return docs.select(F.col(id_col).alias("id"), toks.alias("tokens"))
 
 

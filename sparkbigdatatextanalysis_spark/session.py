@@ -44,6 +44,15 @@ def get_spark(
         # identical stage code misses the codegen cache and is
         # recompiled on every run of the same plan.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # PySpark's DataFrame debugging records the Python call site of
+        # every Column and functions.* call: about four extra py4j round
+        # trips each, plus a walk of the Python stack. Building one
+        # search request or ER job made hundreds of such calls, which
+        # cost about as much CPU as running it. Off, an analysis or
+        # runtime error keeps its error class and message but loses the
+        # "== DataFrame ==" block naming the Python line that built the
+        # failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

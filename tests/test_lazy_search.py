@@ -112,7 +112,7 @@ def test_ivf_probe_lists_equal_literal_form(emb, cents):
         return F.array(*[F.slice(ranked, 1, p) for p in range(1, n + 1)]).alias("probes")
 
     lit = ann._cents_lit(ann._collect_cents(cents))
-    literal = F.reverse(F.array_sort(ann._cent_scores(F.col("v"), F.col("norm"), lit)))
+    literal = F.expr(f"reverse(array_sort({ann._cent_scores('v', 'norm', lit)}))")
     want = {r["id"]: r["probes"] for r in nv.select("id", probe_lists(literal)).collect()}
     idx = ann._ivf_index(nv, cents)
     got = {r["id"]: r["probes"] for r in idx.select("id", probe_lists(F.col("_rk"))).collect()}
@@ -145,3 +145,48 @@ def test_kmeans_passes_run_under_named_descriptions(spark, emb):
     }
     ann.kmeans_centroids(emb, n_iter=1)
     assert sc.getLocalProperty("spark.job.description") is None
+
+
+def test_lsh_count_runs_under_named_description(spark, emb):
+    """The eager corpus count that sizes the LSH buckets names the
+    operator, and the caller's description comes back afterwards (none
+    included)."""
+    sc = spark.sparkContext
+    group = "test-lsh-description"
+    sc.setJobGroup(group, "caller description")
+    try:
+        ann.cosine_topk_lsh(emb, spark.range(1), k=3)
+        restored = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert restored == "caller description"
+    store = sc._jsc.sc().statusStore()
+    descs = {
+        store.job(i).description().get()
+        for i in sc.statusTracker().getJobIdsForGroup(group)
+    }
+    assert descs == {"cosine_topk_lsh: corpus size for rows_per_band"}
+    ann.cosine_topk_lsh(emb, spark.range(1), k=3)
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
+def test_zero_vector_scores_null_and_ranks_last(spark):
+    """An all-zero vector has norm 0. Under ANSI division its cosines
+    would fail the query; they are NULL instead: the zero vector ranks
+    after every real neighbor, scores NULL as a query, and the centroid
+    argmax treats it as -inf against every centroid."""
+    rows = [(0, [0.0, 0.0, 0.0])] + [(i, [1.0, float(i), float(i % 3)]) for i in range(1, 9)]
+    zemb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = ann.kmeans_centroids(zemb, n_centroids=2)
+    assert cents.count() == 2
+    q = spark.range(0, 2)
+    bf = sorted(ann.cosine_topk_bruteforce(zemb, q, k=8).collect())
+    ivf = ann.cosine_topk_ivf(zemb, q, k=8, n_probe=2, cents=cents)
+    try:
+        assert sorted(ivf.collect()) == bf
+    finally:
+        ann._ivf_index(ann._norm_vecs(zemb, "vec_id", "embedding"), cents).unpersist()
+    assert [r["cos"] for r in bf if r["q_id"] == 0] == [None] * 8
+    from_one = sorted((r["rank"], r["n_id"], r["cos"]) for r in bf if r["q_id"] == 1)
+    assert from_one[-1][1:] == (0, None)
+    assert all(c is not None for _, _, c in from_one[:-1])

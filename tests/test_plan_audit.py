@@ -893,8 +893,6 @@ def test_ivf_internal_stage_budgets(spark):
     * one Lloyd pass's mean aggregation (_lloyd_means) is ONE
       partial-agg shuffle of (cluster, dim) rows.
     """
-    from pyspark.sql import functions as F
-
     from sparkbigdatatextanalysis_spark.operators import ann
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -904,11 +902,8 @@ def test_ivf_internal_stage_budgets(spark):
 
     nv = ann._norm_vecs(emb, "vec_id", "embedding")
     cur = ann._collect_cents(ann._init_centroids(nv, ann.N_CENTROIDS))
-    assign = nv.select(
-        ann._best_centroid(
-            F.col("v"), F.col("norm"), ann._cents_lit(cur)
-        ).alias("c_id"),
-        "v",
+    assign = nv.selectExpr(
+        f"{ann._best_centroid('v', 'norm', ann._cents_lit(cur))} AS c_id", "v"
     )
     m = audit_plan(ann._lloyd_means(assign))
     assert m.shuffle_exchanges <= 1, m

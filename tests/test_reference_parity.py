@@ -126,7 +126,7 @@ def test_document_similarity_golden(spark, small):
         F.map_from_entries(F.collect_list(F.struct("token", "idf"))).alias("m")
     )
     row = idf_map.select(
-        document_similarity(F.lit("Adobe Photoshop"), F.lit("Adobe Illustrator"), F.col("m")).alias("sim")
+        document_similarity("'Adobe Photoshop'", "'Adobe Illustrator'", F.col("m")).alias("sim")
     ).first()
     assert row["sim"] == pytest.approx(0.0577243382163, abs=1e-6)
 

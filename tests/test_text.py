@@ -9,15 +9,16 @@ from pyspark.sql import functions as F
 
 from sparkbigdatatextanalysis_spark.functions.text import (
     ENGLISH_STOPWORDS,
+    remove_stopwords,
     term_frequencies_map,
     tokenize,
     tokenize_no_stopwords,
 )
 
 
-def _tokens(spark, s: str, stop=False) -> list[str]:
-    expr = tokenize_no_stopwords(F.lit(s)) if stop else tokenize(F.lit(s))
-    return spark.range(1).select(expr.alias("t")).first()["t"]
+def _tokens(spark, s: str, stop=False, stopwords=None) -> list[str]:
+    expr = tokenize_no_stopwords("s", stopwords) if stop else tokenize("s")
+    return spark.createDataFrame([(s,)], "s string").select(expr.alias("t")).first()["t"]
 
 
 def test_tokenize_empty(spark):
@@ -57,10 +58,30 @@ def test_stopword_filter_preserves_duplicates(spark):
     assert r == ["spark", "spark", "spark"]
 
 
+def test_tokenize_quote_backslash_non_ascii(spark):
+    # \W splits on the quote and the backslash; Java's \w is ASCII-only,
+    # so non-ASCII letters split words too, exactly as before
+    r = _tokens(spark, "O'Brien's back\\slash naïve SELECT 東京", stop=True)
+    assert r == ["o", "brien", "back", "slash", "na", "ve", "select"]
+
+
+def test_custom_stopwords_are_literals_not_sql(spark):
+    """Custom stopwords holding a quote, a backslash, non-ASCII text or
+    a SQL keyword filter exactly those tokens: each word is a literal,
+    never SQL text."""
+    stop = ["it's", "a\\b", "naïve", "select", "') OR TRUE --"]
+    expr = remove_stopwords("t", stop)
+    toks = ["it's", "a\\b", "naïve", "select", "') OR TRUE --", "from", "it", "s", "naive"]
+    got = spark.createDataFrame([(toks,)], "t array<string>").select(expr.alias("t")).first()["t"]
+    assert got == ["from", "it", "s", "naive"]
+    assert _tokens(spark, "Select the FROM where", stop=True, stopwords=["select", "where"]) == ["the", "from"]
+    assert _tokens(spark, "keep every word", stop=True, stopwords=[]) == ["keep", "every", "word"]
+
+
 def test_term_frequencies(spark):
     row = (
         spark.range(1)
-        .select(term_frequencies_map(tokenize(F.lit("This is test Test and this is another test test."))).alias("tf"))
+        .select(term_frequencies_map(tokenize("'This is test Test and this is another test test.'")).alias("tf"))
         .first()["tf"]
     )
     assert row == pytest.approx(
