@@ -3276,7 +3276,7 @@ def q_docs_line_dedup(spark, sf_dir):
 
 def q_docs_hashed_embeddings(spark, sf_dir):
     """Model-free hashed document embeddings
-    (operators/vectors.py::hashed_doc_embeddings): signed feature
+    (operators/vectors.py::hashed_doc_components): signed feature
     hashing of the stopword-filtered tokens into 64 dims, L2-normalized.
     Output exploded to (doc_id, pos, component) so the driver hashes
     every coordinate. Components are bit-identical across engines: the
@@ -5178,7 +5178,9 @@ def q_embeddings_cluster_inertia(spark, sf_dir):
     cents = _cached(
         spark, sf_dir, "ivf_cents", lambda: ann_ops.kmeans_centroids(emb)
     )
-    cents_arr = ann_ops._cents_lit(ann_ops._collect_cents(cents))
+    cents_arr = ann_ops._cents_lit(
+        ann_ops._collect_cents(cents, "embeddings_cluster_inertia: collect centroids")
+    )
     nv = ann_ops._norm_vecs(emb, "vec_id", "embedding")
     best = F.expr(f"array_max({ann_ops._cent_scores('v', 'norm', cents_arr)})")
     sel = nv.select(
@@ -8104,7 +8106,9 @@ def q_embeddings_silhouette(spark, sf_dir):
     cents = _cached(
         spark, sf_dir, "ivf_cents", lambda: ann_ops.kmeans_centroids(emb)
     )
-    cents_arr = ann_ops._cents_lit(ann_ops._collect_cents(cents))
+    cents_arr = ann_ops._cents_lit(
+        ann_ops._collect_cents(cents, "embeddings_silhouette: collect centroids")
+    )
     nv = ann_ops._norm_vecs(emb, "vec_id", "embedding")
     scores = ann_ops._cent_scores("v", "norm", cents_arr)
     srt = F.expr(f"reverse(array_sort({scores}))")

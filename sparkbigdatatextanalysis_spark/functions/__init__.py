@@ -1,19 +1,13 @@
 from .text import (
     ENGLISH_STOPWORDS,
-    remove_stopwords,
-    strip_quotes,
     term_frequencies_map,
     tokenize,
 )
-from .vector import vec_cosine, vec_dot, vec_norm
+from .vector import vec_dot
 
 __all__ = [
     "ENGLISH_STOPWORDS",
     "tokenize",
-    "remove_stopwords",
-    "strip_quotes",
     "term_frequencies_map",
     "vec_dot",
-    "vec_norm",
-    "vec_cosine",
 ]

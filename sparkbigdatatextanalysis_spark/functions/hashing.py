@@ -21,16 +21,6 @@ MERSENNE31 = 2_147_483_647  # 2^31 - 1, modulus for the char fold
 HASH_BASE = 131
 
 
-def char_fold_hash(col: Column | str) -> Column:
-    """Polynomial rolling hash of a string -> BIGINT in [0, 2^31-1)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.aggregate(
-        F.split(col, ""),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * HASH_BASE + F.ascii(c)) % MERSENNE31,
-    )
-
-
 def string_hash31(col: Column | str) -> Column:
     """md5-derived string hash -> BIGINT in [0, 2^31-1).
 
@@ -67,7 +57,9 @@ def string_hash32_sql(expr: str, offset: int = 1) -> str:
 
 
 def char_fold_hash_sql(expr: str) -> str:
-    """DuckDB SQL fragment computing the same hash as :func:`char_fold_hash`."""
+    """DuckDB SQL fragment of the character fold
+    ``acc <- (acc * 131 + ascii(c)) mod (2^31 - 1)``, the same fold
+    ``operators.multimodal`` applies to payload bytes."""
     return (
         f"list_reduce(list_prepend(0::BIGINT, "
         f"[ascii(c)::BIGINT for c in string_split({expr}, '')]), "

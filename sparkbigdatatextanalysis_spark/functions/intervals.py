@@ -1,6 +1,5 @@
-"""Shared "N unit" interval parsing for operators that take a time span
-(gap_fill buckets, heartbeat gaps). One grammar, one validator -- so the
-dialects cannot drift between operators."""
+""""N unit" interval parsing for operators that take a time span
+(gap_fill buckets): one grammar, one validator."""
 
 from __future__ import annotations
 

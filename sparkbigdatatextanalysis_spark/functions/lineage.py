@@ -1,4 +1,4 @@
-"""Storage release for iterative-loop DataFrames.
+"""Session hygiene for operators: storage release and named eager jobs.
 
 ``DataFrame.unpersist()`` only removes entries the SQL cacheManager
 registered (i.e. ``persist()`` results). A ``localCheckpoint`` stores
@@ -12,11 +12,15 @@ is unchanged by ``unpersist`` after ``localCheckpoint``).
 :func:`release` frees BOTH kinds: when the plan is the bare checkpoint
 result (a ``LogicalRDD`` leaf), it unpersists the backing RDD directly;
 otherwise it falls back to the ordinary ``unpersist``.
+
+:func:`job_description` names the Spark jobs of an operator's eager
+action and restores the caller's description afterwards.
 """
 
 from __future__ import annotations
 
 import logging
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -50,3 +54,18 @@ def release(df: DataFrame) -> None:
         df.unpersist()
     except Exception:
         pass
+
+
+@contextmanager
+def job_description(df: DataFrame, desc: str):
+    """Run the block's Spark jobs under ``desc`` (the operator's eager
+    action, as the UI and job listeners name it), then restore the
+    caller's description -- NULL included -- so the session is left as
+    it was found."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

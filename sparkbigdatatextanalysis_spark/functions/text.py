@@ -45,7 +45,7 @@ def _no_stopwords_sql(tokens: str, stopwords: list[str] | None) -> str:
     return f"filter({tokens}, t -> NOT t IN ({', '.join(map(sql_str, stop))}))"
 
 
-# The three tokenizer functions take ``col`` as SQL text -- a column
+# The two tokenizer functions take ``col`` as SQL text -- a column
 # name, or any STRING / ARRAY<STRING> expression -- and each returns one
 # ``F.expr``. Assembled literal by literal through the Column API, the
 # 127-word stopword list alone costs about 500 py4j round trips.
@@ -56,22 +56,12 @@ def tokenize(col: str) -> Column:
     return F.expr(_tokens_sql(col))
 
 
-def remove_stopwords(tokens: str, stopwords: list[str] | None = None) -> Column:
-    """Order-preserving, duplicate-preserving stopword filter. The word
-    list is an ``IN`` list, which the optimizer turns into a hashed set
-    lookup (``INSET``) instead of a scan of the whole list per token.
-    Each word is hex-encoded (:func:`sql_str`)."""
-    return F.expr(_no_stopwords_sql(tokens, stopwords))
-
-
 def tokenize_no_stopwords(col: str, stopwords: list[str] | None = None) -> Column:
+    """:func:`tokenize`, then an order- and duplicate-preserving
+    stopword filter. The word list is an ``IN`` list, which the
+    optimizer turns into a hashed set lookup (``INSET``); each word is
+    hex-encoded (:func:`sql_str`)."""
     return F.expr(_no_stopwords_sql(_tokens_sql(col), stopwords))
-
-
-def strip_quotes(col: Column | str) -> Column:
-    """Remove every ``"`` character (reference Utils.scala:72-73)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(col, '"', "")
 
 
 def term_frequencies_map(tokens: Column) -> Column:

@@ -31,28 +31,8 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
-def _norm_sql(a: str) -> str:
-    """SQL text of the L2 norm, the same left fold as :func:`dot_sql`."""
-    return (
-        f"sqrt(aggregate(transform({_as_double(a)}, x -> x * x), "
-        "0D, (acc, x) -> acc + x))"
-    )
-
-
 def vec_dot(a: str, b: str) -> Column:
     """Sparse-free dot product: sum(a[i]*b[i]) (reference semantics of
     calculateDotProduct, EntityResolution.scala:368-384, for the dense case).
     """
     return F.expr(dot_sql(a, b))
-
-
-def vec_norm(a: str) -> Column:
-    """L2 norm (reference calculateNorm, EntityResolution.scala:386-393)."""
-    return F.expr(_norm_sql(a))
-
-
-def vec_cosine(a: str, b: str) -> Column:
-    """dot/(|a||b|); NaN when a norm is zero, matching the reference's
-    unguarded division (EntityResolution.scala:395-404).
-    """
-    return F.expr(f"{dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")

@@ -35,11 +35,11 @@ probe, cluster join, exact rerank).
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.lineage import job_description
 from ..functions.sql import sql_double
 from ..functions.vector import dot_sql, vec_dot
 
@@ -114,7 +114,7 @@ def lsh_signatures(
     explicitly to pin the plan.
     """
     if rows_per_band is None:
-        with _job_description(emb, "lsh_signatures: corpus size for rows_per_band"):
+        with job_description(emb, "lsh_signatures: corpus size for rows_per_band"):
             rows_per_band = adaptive_rows_per_band(emb.count())
     plane_rows = [list(p) for p in planes[: bands * rows_per_band]]
     dim = len(plane_rows[0])
@@ -272,20 +272,25 @@ def _init_centroids(nv: DataFrame, n_centroids: int) -> DataFrame:
     )
 
 
-def _collect_cents(cents: DataFrame) -> list[tuple[int, list[float], float]]:
-    """Materialize a (c_id, cv, cn) centroid frame driver-side. Bounded
+def _collect_cents(
+    cents: DataFrame, desc: str
+) -> list[tuple[int, list[float], float]]:
+    """Materialize a (c_id, cv, cn) centroid frame driver-side, under
+    the job description ``desc`` naming the calling operator. Bounded
     by construction: k centroids x dim doubles (16 x 64 here) -- model
     state, not data -- the same justification as the BPE learner's
     vocab-sized collects. NULL components/norms survive as None (they
     become NULL literals, so the centroid scores NULL and ranks last --
     the same behavior the r3 window form had)."""
+    with job_description(cents, desc):
+        rows = cents.collect()
     return [
         (
             int(r["c_id"]),
             [None if x is None else float(x) for x in r["cv"]],
             None if r["cn"] is None else float(r["cn"]),
         )
-        for r in cents.collect()
+        for r in rows
     ]
 
 
@@ -338,7 +343,7 @@ def _best_centroid(v: str, norm: str, cents_arr: str) -> str:
 
 def _assign_from_lit(nv: DataFrame, cents_arr: str, extra_cols: tuple = ()) -> DataFrame:
     """ONE definition of corpus-to-centroid assignment over a literal
-    centroid array (shared by ivf_assignments, dedup and pipeline, so
+    centroid array (shared by dedup and pipeline, so
     they cannot drift; the IVF searches' :func:`_ivf_index` takes the
     same argmax from its broadcast centroid row). NULL cluster arises
     only from an EMPTY centroid set (with any centroid present the
@@ -375,21 +380,6 @@ def _lloyd_means(assign: DataFrame) -> DataFrame:
     )
 
 
-@contextmanager
-def _job_description(df: DataFrame, desc: str):
-    """Run the block's Spark jobs under ``desc`` (the operator's eager
-    action, as the UI and job listeners name it), then restore the
-    caller's description -- NULL included -- so the session is left as
-    it was found."""
-    sc = df.sparkSession.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
-
-
 def kmeans_centroids(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -415,7 +405,7 @@ def kmeans_centroids(
     then one decimal->double cast (correctly rounded on both engines)
     over an exact numerator; the k x dim mean rows are collected and the
     next pass's literals assembled driver-side (the cn re-norm runs in
-    Python doubles -- IEEE-754, same left fold order as vec_norm, so the
+    Python doubles -- IEEE-754, same left fold order as dot_sql, so the
     value is bit-identical to the JVM's). Clusters that end an iteration
     empty drop out -- mirrored exactly by the oracle, so parity holds
     either way.
@@ -433,15 +423,16 @@ def kmeans_centroids(
     literals; non-integer id columns would need a keyed variant).
     """
     nv = _norm_vecs(emb, id_col, vec_col)
-    with _job_description(emb, "kmeans_centroids: seed centroids"):
-        cur = _collect_cents(_init_centroids(nv, n_centroids))
+    cur = _collect_cents(
+        _init_centroids(nv, n_centroids), "kmeans_centroids: seed centroids"
+    )
     for it in range(n_iter):
         if not cur:
             break  # empty corpus: nothing to refine, return empty set
         assign = nv.selectExpr(f"{_best_centroid('v', 'norm', _cents_lit(cur))} AS c_id", "v")
         means = _lloyd_means(assign)
         by_cid: dict[int, dict[int, float | None]] = {}
-        with _job_description(emb, f"kmeans_centroids: Lloyd pass {it + 1} of {n_iter}"):
+        with job_description(emb, f"kmeans_centroids: Lloyd pass {it + 1} of {n_iter}"):
             mean_rows = means.collect()
         for r in mean_rows:
             by_cid.setdefault(int(r["c_id"]), {})[int(r["pos"])] = (
@@ -469,29 +460,6 @@ def kmeans_centroids(
         [(cid, cv, cn) for cid, cv, cn in cur],
         schema="c_id bigint, cv array<double>, cn double",
     )
-
-
-def ivf_assignments(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents: DataFrame | None = None,
-) -> DataFrame:
-    """(id, cluster): inverted-file (IVF) coarse quantization against
-    the centroid table ``cents`` (c_id, cv, cn); when omitted it is
-    :func:`kmeans_centroids` over ``emb`` at its defaults.
-
-    Assignment is a map-only in-row literal argmax (:func:`_cents_lit` /
-    :func:`_best_centroid`): the centroid set is collected driver-side
-    (bounded: k x dim model parameters) and embedded in the plan, so
-    every vector scores against it as a per-row expression and reduces
-    with array_max -- no exchange of the corpus, no join, nothing moves.
-    At 100 TB this is one narrow pass; the cluster column then
-    partitions all downstream search.
-    """
-    if cents is None:
-        cents = kmeans_centroids(emb, id_col, vec_col)
-    return _assign_from_lit(_norm_vecs(emb, id_col, vec_col), _cents_lit(_collect_cents(cents)))
 
 
 def _rank_cents(df: DataFrame, v: str, norm: str, cents: DataFrame) -> DataFrame:
@@ -611,7 +579,7 @@ def cosine_topk_lsh(
     the bucket join and nothing is persisted.
     """
     if rows_per_band is None:
-        with _job_description(emb, "cosine_topk_lsh: corpus size for rows_per_band"):
+        with job_description(emb, "cosine_topk_lsh: corpus size for rows_per_band"):
             rows_per_band = adaptive_rows_per_band(emb.count())
     q = query_ids.select(F.col(query_ids.columns[0]).alias(id_col))
     qsig = lsh_signatures(
@@ -841,16 +809,18 @@ def top_principal_component(
     v = emb.select(F.col(vec_col).cast("array<double>").alias("v")).where(
         F.col("v").isNotNull()
     )
-    dims = v.agg(F.max(F.size("v")).alias("d")).first()
+    with job_description(emb, "top_principal_component: dimension"):
+        dims = v.agg(F.max(F.size("v")).alias("d")).first()
     if dims is None or dims["d"] is None:
         raise ValueError("top_principal_component: empty embedding table")
     dim = int(dims["d"])
     spark = emb.sparkSession
     # v0 = uniform unit vector, rounded THROUGH THE ENGINE (half-up,
     # matching the oracle's round) rather than python's banker rounding
-    c0 = spark.range(1).select(
-        F.round(F.lit(1.0) / F.sqrt(F.lit(float(dim))), 9).alias("c")
-    ).first()["c"]
+    with job_description(emb, "top_principal_component: start vector"):
+        c0 = spark.range(1).select(
+            F.round(F.lit(1.0) / F.sqrt(F.lit(float(dim))), 9).alias("c")
+        ).first()["c"]
     cur = [float(c0)] * dim
     out = None
     for it in range(n_iter):
@@ -882,6 +852,10 @@ def top_principal_component(
         if it == n_iter - 1:
             out = comp
         else:
-            got = {int(r["pos"]): float(r["component"]) for r in comp.collect()}
+            with job_description(
+                emb, f"top_principal_component: power iteration {it + 1} of {n_iter}"
+            ):
+                rows = comp.collect()
+            got = {int(r["pos"]): float(r["component"]) for r in rows}
             cur = [got[j] for j in range(dim)]
     return out.select(F.col("pos").cast("long").alias("pos"), "component")

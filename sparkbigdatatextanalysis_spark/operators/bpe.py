@@ -5,25 +5,13 @@ from corpus statistics. The key scale property is that BPE never needs
 the corpus after one counting pass -- it operates on the WORD-COUNT
 table (one row per distinct word, weighted by frequency), which is
 vocabulary-sized: a 100 TB corpus collapses to millions of rows at the
-first partial aggregation and every merge round runs on that small
-table.
+first partial aggregation, small enough for the driver.
 
-Two learners share one contract and one set of semantics (max count,
-ties lexicographic on (left, right); greedy left-to-right application):
-
-* :func:`bpe_learn_local` -- the production shape: ONE corpus-counting
-  Spark pass, then the merge loop runs driver-side over the
-  vocabulary-sized word table with incremental pair-count maintenance.
-  30k merges ~= 1 Spark job.
-* :func:`bpe_learn` -- fully distributed rounds for the (pathological)
-  case where even the distinct-word table cannot sit on the driver.
-  Per round: adjacent symbol pairs form IN-ROW (``zip_with`` of the
-  symbol array with its shift), one partial-agg ``groupBy(pair)``
-  shuffle over the vocab-sized table, the top-ranked pair window comes
-  to the driver, and the longest provably-sequential-equivalent BATCH
-  of disjoint rules (:func:`_select_merge_batch`) applies in one Arrow
-  stage; lineage truncates per round with ``localCheckpoint`` and the
-  prior round's blocks are released as soon as the new ones exist.
+:func:`bpe_learn_local` runs ONE corpus-counting Spark pass, then the
+merge loop driver-side over the vocabulary-sized word table with
+incremental pair-count maintenance (max count, ties lexicographic on
+(left, right); greedy left-to-right application): 30k merges ~= 1 Spark
+job. :func:`bpe_segment` replays the learned rules in-row.
 """
 
 from __future__ import annotations
@@ -31,14 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.arrays import adjacent_pairs
-from ..functions.lineage import release
-
-from ..serde import ship_by_value
-
-# Worker-bound closures travel by value so executor Python workers
-# never need this package on their own sys.path (see serde.py).
-ship_by_value(__name__)
+from ..functions.lineage import job_description
 
 # SentencePiece-style escape for marker characters that occur INSIDE
 # corpus words: without it an interior U+2581 is indistinguishable from
@@ -92,18 +73,6 @@ def words_to_symbols(tok_df: DataFrame, marker: str = "▁") -> DataFrame:
     )
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    """Adjacent-pair counts over the symbol arrays, weighted by word
-    frequency; pairs form in-row via zip_with against the shifted array."""
-    return (
-        vocab.select(
-            "n_occ", F.explode(adjacent_pairs(F.col("symbols"))).alias("p")
-        )
-        .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
-        .agg(F.sum("n_occ").alias("n"))
-    )
-
-
 def _apply_merge(symbols: Column, left: str, right: str) -> Column:
     """Greedy left-to-right merge of adjacent (left, right) into one
     symbol, as a pure expression fold: walk the array, and when the
@@ -130,9 +99,8 @@ VOCAB_SCHEMA = "word STRING, n_occ BIGINT, symbols ARRAY<STRING>"
 
 def _merge_word(syms: list, left: str, right: str) -> list:
     """One greedy left-to-right application of merge rule (left, right)
-    to a symbol list -- the single Python definition of the merge step,
-    shared by the batch apply, the driver-side learner and the
-    segmentation replay so their semantics cannot diverge."""
+    to a symbol list -- the Python twin of the :func:`_apply_merge`
+    expression fold."""
     out, i, n = [], 0, len(syms)
     while i < n:
         if i + 1 < n and syms[i] == left and syms[i + 1] == right:
@@ -142,159 +110,6 @@ def _merge_word(syms: list, left: str, right: str) -> list:
             out.append(syms[i])
             i += 1
     return out
-
-
-def _apply_merges_pandas(
-    vocab: DataFrame, rules: list[tuple[str, str]]
-) -> DataFrame:
-    """Apply a batch of merge rules to the vocab table, in rule order,
-    each greedy left-to-right -- semantically the exact composition of
-    :func:`_apply_merge` folds, but executed as ONE Arrow
-    ``mapInPandas`` stage so plan depth stays O(1) regardless of batch
-    size (a 64-rule batch of nested ``aggregate`` folds would blow past
-    the codegen limits that single-rule folds stay under)."""
-
-    def _batches(it):
-        import pandas as pd
-
-        def apply_all(syms):
-            syms = list(syms)
-            for left, right in rules:
-                if len(syms) < 2 or left not in syms:
-                    continue
-                syms = _merge_word(syms, left, right)
-            return syms
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "n_occ": pdf["n_occ"].astype("int64"),
-                    "symbols": [apply_all(s) for s in pdf["symbols"]],
-                }
-            )
-
-    return vocab.mapInPandas(_batches, VOCAB_SCHEMA)
-
-
-def _select_merge_batch(
-    rows, window: int, max_batch: int
-) -> list[tuple[str, str, int]]:
-    """Pick the longest RANK-CONSECUTIVE prefix of the fetched pair
-    ranking that provably equals sequential per-merge BPE.
-
-    An occurrence of candidate (x, y) at positions (i, i+1) is
-    destroyed by greedily merging (a, b) only when the two spans
-    OVERLAP: i+1 == j forces y == a, i == j+1 forces x == b, i == j
-    forces (x, y) == (a, b); and (x, y)'s count can be CREATED/boosted
-    only when x or y IS the merged symbol ab. So a candidate's count --
-    and hence its rank -- is exactly invariant under every selected
-    merge iff its y avoids all selected lefts, its x avoids all
-    selected rights, and both avoid all merged symbols. (Plain symbol
-    disjointness is far too strict: every (marker, c) pair shares the
-    marker, which would cap early-round batches at one rule.)
-
-    * selection STOPS at the first conflicting candidate; its count
-      (and the count of the last fetched row, bounding every unseen
-      pair) becomes the barrier. Every pair a batch merge can boost is
-      bounded by the old count of one of its source pairs -- e.g. new
-      (v, ab) by old (v, a), which conflicts via y == a -- and every
-      conflicting pair ranks at/after the stop point, so it sits at or
-      below the barrier. Batch members are kept only while their count
-      is STRICTLY above it: nothing the batch creates can outrank them
-      mid-batch, even on count ties;
-    * the global-max pair is always kept (one merge == plain
-      sequential), so flat-count rounds degrade to one rule, never to
-      an unsound batch.
-    """
-    if not rows:
-        return []
-    unseen = rows[-1]["n"] if len(rows) >= window else 0
-    lefts: set[str] = set()
-    rights: set[str] = set()
-    merged: set[str] = set()
-    selected: list[tuple[str, str, int]] = []
-    barrier = unseen
-    for r in rows:
-        left, right, n = r["left"], r["right"], r["n"]
-        if (
-            len(selected) >= max_batch
-            or right in lefts
-            or left in rights
-            or left in merged
-            or right in merged
-        ):
-            barrier = max(barrier, n)
-            break
-        selected.append((left, right, n))
-        lefts.add(left)
-        rights.add(right)
-        merged.add(left + right)
-    batch = [p for p in selected if p[2] > barrier]
-    if not batch:
-        batch = selected[:1]
-    return batch
-
-
-def bpe_learn(
-    tok_df: DataFrame,
-    n_merges: int,
-    min_pair_count: int = 2,
-    marker: str = "▁",
-    batch_window: int = 1024,
-) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Learn up to ``n_merges`` BPE merge rules. Returns (merges, vocab)
-    where ``merges`` is the ordered rule list [(left, right), ...] and
-    ``vocab`` the final (word, n_occ, symbols) table. Stops early when
-    no pair reaches ``min_pair_count``.
-
-    Determinism: best pair = max weighted count, ties broken by
-    (left, right) lexicographic order -- reproducible on any engine or
-    partitioning (counts are exact integers).
-
-    Scale shape: each driver round-trip fetches the top
-    ``batch_window`` ranked pairs (one TakeOrdered job over the
-    vocab-sized table) and applies the longest provably-safe batch of
-    them (:func:`_select_merge_batch`) in one Arrow stage -- so a
-    production 30k-merge vocabulary needs hundreds of Spark jobs, not
-    30k. Per round the new vocab is localCheckpoint'ed LAZILY (the next
-    round's TakeOrdered materializes it -- one job per round total, and
-    lineage still truncates) and the previous round's checkpoint blocks
-    are unpersisted as soon as the new ones exist, keeping executor
-    storage at one vocab copy instead of growing linearly with rounds.
-    """
-    vocab = words_to_symbols(tok_df, marker).localCheckpoint(eager=True)
-    prev: DataFrame | None = None
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        rows = (
-            _pair_counts(vocab)
-            .orderBy(F.col("n").desc(), "left", "right")
-            .limit(batch_window)
-            .collect()
-        )
-        if prev is not None:
-            # The collect above materialized this round's lazy
-            # checkpoint, so the previous round's blocks are now safe
-            # to drop (releasing any earlier would cut the lineage out
-            # from under the not-yet-computed child). NB release(), not
-            # unpersist(): checkpoint blocks are RDD-level, invisible
-            # to the cacheManager that unpersist talks to.
-            release(prev)
-            prev = None
-        batch = _select_merge_batch(
-            rows, batch_window, n_merges - len(merges)
-        )
-        batch = [(l, r) for l, r, n in batch if n >= min_pair_count]
-        if not batch:
-            break
-        merges.extend(batch)
-        prev = vocab
-        vocab = _apply_merges_pandas(vocab, batch).localCheckpoint(eager=False)
-    # On a merges-exhausted exit the returned vocab is still lazy and
-    # its parent stays persisted until the caller's first action -- one
-    # retained copy, not a per-round leak.
-    return merges, vocab
 
 
 def bpe_learn_local(
@@ -313,21 +128,21 @@ def bpe_learn_local(
     incremental pair-count maintenance: per merge, only the words
     containing the merged pair are touched (inverted pair -> word index),
     the classic subword-nmt optimization. 30k merges cost ~1 Spark job
-    total instead of one-plus per round; semantics are identical to
-    :func:`bpe_learn` and the textbook reference (same (count desc,
-    left, right) tie-break), property-tested. Use the distributed
-    :func:`bpe_learn` only when the DISTINCT-WORD table itself cannot
-    fit on the driver (pathological tokenization regimes).
+    total instead of one-plus per round; semantics are identical to the
+    textbook reference (same (count desc, left, right) tie-break),
+    property-tested.
 
-    Returns (merges, vocab) with vocab the same distributed
-    (word, n_occ, symbols) DataFrame contract as :func:`bpe_learn`,
-    parallelized straight from the driver-side result (vocabulary-sized;
-    no second corpus pass).
+    Returns (merges, vocab): ``merges`` is the ordered rule list
+    [(left, right), ...]; ``vocab`` the final (word, n_occ, symbols)
+    DataFrame, parallelized straight from the driver-side result
+    (vocabulary-sized; no second corpus pass). Stops early when no pair
+    reaches ``min_pair_count``.
     """
     from collections import Counter, defaultdict
 
     base = words_to_symbols(tok_df, marker)
-    rows = base.select("word", "n_occ", "symbols").collect()
+    with job_description(tok_df, "bpe_learn_local: word counts"):
+        rows = base.select("word", "n_occ", "symbols").collect()
     words = [list(r["symbols"]) for r in rows]
     counts = [int(r["n_occ"]) for r in rows]
 
@@ -390,9 +205,9 @@ def bpe_segment(
 
     The rule list rides in the plan as nested expressions, so plan depth
     grows with ``len(merges)`` -- fine for the moderate rule counts this
-    expression path targets; a production 30k-merge tokenizer would
-    replay rules with a trie inside an Arrow ``mapInPandas`` stage
-    instead (same contract, Python-side fold).
+    expression path targets (the driver contract replays 8);
+    tokenizer-size lists of tens of thousands of rules are out of its
+    range.
 
     NULL and empty tokens are skipped (a single NULL element would
     otherwise null out flatten() and silently drop the whole document's
@@ -412,77 +227,3 @@ def bpe_segment(
         "id", F.flatten(F.transform(clean, seg)).alias("pieces")
     )
 
-
-SEGMENT_SCHEMA = "id BIGINT, pieces ARRAY<STRING>"
-
-
-def bpe_segment_pandas(
-    tok_df: DataFrame, merges: list[tuple[str, str]], marker: str = "▁"
-) -> DataFrame:
-    """Production-scale twin of :func:`bpe_segment`: replays the merge
-    rules in Python inside an Arrow ``mapInPandas`` stage instead of
-    nested expressions, so rule lists of tokenizer size (30k+) don't
-    grow the plan at all -- the rules ride once per worker in the
-    closure. Per-word segmentations are memoized within each batch
-    (corpus word frequency is Zipfian, so the cache hit rate is high).
-
-    Still map-only and order-preserving; output is EXACTLY
-    ``bpe_segment``'s (property-tested), including marker escaping,
-    codepoint splitting, and NULL/empty-token skipping.
-    """
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    def _segment_word(word: str, cache: dict) -> list[str]:
-        hit = cache.get(word)
-        if hit is not None:
-            return hit
-        syms = [marker] + list(word.replace(marker, MARKER_ESCAPE))
-        # Rank-priority iteration (the standard fast BPE apply):
-        # repeatedly merge the LOWEST-rank pair present, each
-        # application greedy left-to-right over all its occurrences.
-        # Cost is O(word_len^2) independent of rule-list size (vs one
-        # scan PER RULE for in-order replay -- ruinous at 30k rules).
-        # Equivalent to in-order replay because applying rule j can
-        # never create a match for an earlier rule i < j: rule j's
-        # merged symbol did not exist when rule i was learned, so it
-        # cannot be a component of rule i's pair.
-        while len(syms) >= 2:
-            best = min(
-                (
-                    r
-                    for r in (
-                        ranks.get((a, b)) for a, b in zip(syms, syms[1:])
-                    )
-                    if r is not None
-                ),
-                default=None,
-            )
-            if best is None:
-                break
-            left, right = merges[best]
-            syms = _merge_word(syms, left, right)
-        cache[word] = syms
-        return syms
-
-    def _batches(it):
-        import pandas as pd
-
-        cache: dict = {}
-        for pdf in it:
-            pieces = [
-                # a NULL tokens ARRAY stays NULL (parity with the
-                # expression path, where flatten propagates it); NULL
-                # and empty ELEMENTS are skipped
-                None
-                if toks is None
-                else [
-                    p
-                    for w in toks
-                    if w is not None and w != ""
-                    for p in _segment_word(w, cache)
-                ]
-                for toks in pdf["tokens"]
-            ]
-            yield pd.DataFrame({"id": pdf["id"].astype("int64"), "pieces": pieces})
-
-    return tok_df.select("id", "tokens").mapInPandas(_batches, SEGMENT_SCHEMA)

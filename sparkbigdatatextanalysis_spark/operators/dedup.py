@@ -17,12 +17,12 @@ operators an LLM-data pipeline needs, each designed for 100 TB:
                           Hamming<=3 shares >=1 exact chunk by
                           pigeonhole; 65,536 bucket values per chunk).
 * n-gram Jaccard       -- shingle equi-join + |A∩B| / (|A|+|B|-|A∩B|).
-* embedding near-dup   -- cosine >= threshold pairs; three forms: the
-                          quadratic crossJoin spec baseline, the exact
-                          blocked-GEMM path (BLAS block products, linear
-                          shuffle), and the sub-quadratic LSH-bucketed
-                          approximate path (adaptive bucket width from
-                          operators.ann).
+* embedding near-dup   -- cosine >= threshold pairs; two forms: the
+                          exact blocked-GEMM path (BLAS block products,
+                          linear shuffle) and the sub-quadratic
+                          LSH-bucketed approximate path (adaptive bucket
+                          width from operators.ann). A zero vector has
+                          no cosine and pairs with nothing.
 
 Hashes use functions.hashing.string_hash31 (cross-engine md5 fold) so every operator
 has an exact DuckDB oracle. All plans are built-in expressions + joins --
@@ -339,35 +339,6 @@ def embedding_norms(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embe
     return _norm_vecs(emb, id_col, vec_col)
 
 
-def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(a_id, b_id, cos) for vector pairs with cosine >= threshold.
-
-    Quadratic reference baseline: crossJoin (a<b) + zip_with dot
-    product, all JVM-side. Kept for tiny inputs and as the semantic
-    spec; the production exact path is
-    :func:`embedding_near_dup_pairs_blocked` (same result, BLAS-speed
-    block products, bounded memory), and the sub-quadratic approximate
-    path is :func:`embedding_near_dup_pairs_lsh`."""
-    nv = embedding_norms(emb, id_col, vec_col)
-    a = nv.select(F.col("id").alias("a_id"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = nv.select(F.col("id").alias("b_id"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            (vec_dot("va", "vb") / (F.col("na") * F.col("nb"))).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-
-
 def embedding_near_dup_pairs_blocked(
     emb: DataFrame,
     threshold: float = 0.9,
@@ -535,7 +506,9 @@ def embedding_near_dup_pairs_lsh(
         .select(
             "a_id",
             "b_id",
-            (vec_dot("va", "vb") / (F.col("na") * F.col("nb"))).alias("cos"),
+            F.try_divide(
+                vec_dot("va", "vb"), F.col("na") * F.col("nb")
+            ).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
     )
@@ -1228,8 +1201,8 @@ def semantic_dedup(
     space would silently drop large fractions of the corpus.
 
     Scale shape: assignment is the map-only literal-centroid argmax
-    (:func:`ann._assign_from_lit`, the same single definition
-    ivf_assignments uses -- centroids are k x dim driver-held model
+    (:func:`ann._assign_from_lit`, the single definition of
+    corpus-to-centroid assignment -- centroids are k x dim driver-held model
     state embedded in the plan, ZERO corpus exchanges; cluster, v and
     norm come out of ONE projection, never a join back); candidate
     pairing is an equi-join on the cluster id, cost ~ sum cluster_i^2
@@ -1257,10 +1230,12 @@ def semantic_dedup(
         cents = _init_centroids(nv, N_CENTROIDS)
     # (id, cluster, v, norm) in ONE projection: the cluster id is an
     # in-row literal argmax over data already co-resident in the row --
-    # re-joining ivf_assignments onto nv would shuffle the full corpus
+    # re-joining a separate assignment onto nv would shuffle the full corpus
     # twice for nothing (r5 review finding)
     av = _assign_from_lit(
-        nv, _cents_lit(_collect_cents(cents)), extra_cols=("v", "norm")
+        nv,
+        _cents_lit(_collect_cents(cents, "semantic_dedup: collect centroids")),
+        extra_cols=("v", "norm"),
     )
     # av feeds THREE consumers (both sides of the within-cluster pair
     # join plus the final keep join); without the barrier the
@@ -1294,9 +1269,8 @@ def semantic_dedup(
         .select(
             "_a",
             "_b",
-            (
-                vec_dot("_va", "_vb")
-                / (F.col("_na") * F.col("_nb"))
+            F.try_divide(
+                vec_dot("_va", "_vb"), F.col("_na") * F.col("_nb")
             ).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
@@ -1383,7 +1357,11 @@ def incremental_semantic_dedup(
 
     nv = _norm_vecs(new_emb, id_col, vec_col)
     av = _assign_from_lit(
-        nv, _cents_lit(_collect_cents(cents)), extra_cols=("v", "norm")
+        nv,
+        _cents_lit(
+            _collect_cents(cents, "incremental_semantic_dedup: collect centroids")
+        ),
+        extra_cols=("v", "norm"),
     )
     if persist_assignments:
         av = av.persist()
@@ -1396,7 +1374,7 @@ def incremental_semantic_dedup(
         near_hist = (
             av.join(h, "cluster")
             .where(
-                vec_dot("v", "_hv") / (F.col("norm") * F.col("_hn"))
+                F.try_divide(vec_dot("v", "_hv"), F.col("norm") * F.col("_hn"))
                 >= threshold
             )
             .select(F.col("id").alias("_nh_id"))
@@ -1421,7 +1399,7 @@ def incremental_semantic_dedup(
         a.join(b, "cluster")
         .where(F.col("_a") < F.col("_b"))
         .where(
-            vec_dot("_va", "_vb") / (F.col("_na") * F.col("_nb"))
+            F.try_divide(vec_dot("_va", "_vb"), F.col("_na") * F.col("_nb"))
             >= threshold
         )
         .select(F.col("_b").alias("_nb_id"))

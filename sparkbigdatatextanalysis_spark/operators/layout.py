@@ -12,8 +12,7 @@ Everything here is map-only expressions: per-column normalization to a
 fixed-width integer grid (broadcast min/max -- one tiny agg), then bit
 interleaving as a chain of shift/mask terms that whole-stage codegen
 compiles. Write with ``df.repartitionByRange(n, zkey).sortWithinPartitions
-(zkey)`` (or ``write_partitioned_incremental`` after sorting) so the
-parquet writer sees z-contiguous rows.
+(zkey)`` so the parquet writer sees z-contiguous rows.
 """
 
 from __future__ import annotations
@@ -83,27 +82,4 @@ def zorder_key(
         )
     return df.join(F.broadcast(stats)).select(
         *df.columns, interleave_bits(grids, bits).alias(out)
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered by the Z-order of ``cols``:
-    range-partition on the key (so files own contiguous z-ranges), sort
-    within partitions (so row groups inside each file are contiguous
-    too), drop the key, write. After this, parquet min/max statistics
-    are narrow on EVERY ``cols`` member -- verified directly against the
-    written row-group metadata in tests/test_layout.py."""
-    keyed = zorder_key(df, cols, bits=bits)
-    (
-        keyed.repartitionByRange(n_files, "zkey")
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode("overwrite")
-        .parquet(path)
     )

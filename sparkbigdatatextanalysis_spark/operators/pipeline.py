@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import string_hash31
+from ..functions.lineage import job_description
 
 
 def vocab_top_k(tok_df: DataFrame, k: int = 100) -> DataFrame:
@@ -158,7 +159,7 @@ def bloom_bits(shingles: DataFrame, n_words: int = BLOOM_N_WORDS) -> list[int]:
     pos = F.explode(
         F.array(*[p.cast("long") for p in _bloom_positions(F.col("sh"), n_words)])
     ).alias("p")
-    rows = (
+    words = (
         shingles.select(pos)
         # selectExpr: pyspark's shiftleft wrapper takes only an int
         # literal shift; the SQL function accepts a column
@@ -168,8 +169,9 @@ def bloom_bits(shingles: DataFrame, n_words: int = BLOOM_N_WORDS) -> list[int]:
         )
         .groupBy("w")
         .agg(F.bit_or("mask").alias("bits"))
-        .collect()
     )
+    with job_description(shingles, "bloom_bits: collect bitmap"):
+        rows = words.collect()
     got = {r["w"]: r["bits"] for r in rows}
     return [got.get(i, 0) for i in range(n_words)]
 
@@ -305,7 +307,7 @@ def embedding_decontamination(
     3-gram with its source and sails through both, but lands next to
     it in embedding space. Composes the engine's existing pieces: any
     (id, embedding) frames (e.g. text bridged through
-    ``vectors.hashed_doc_embeddings``), the pinned k-means model state
+    ``vectors.hashed_doc_components``), the pinned k-means model state
     of ``ann.kmeans_centroids``, and the cluster-probe equi-join of
     ``dedup.incremental_semantic_dedup`` (the protected side IS that
     contract's representative-state shape).
@@ -334,7 +336,9 @@ def embedding_decontamination(
     from .ann import _assign_from_lit, _cents_lit, _collect_cents, _norm_vecs
     from ..functions.vector import vec_dot
 
-    lit = _cents_lit(_collect_cents(cents))
+    lit = _cents_lit(
+        _collect_cents(cents, "embedding_decontamination: collect centroids")
+    )
     tr = _assign_from_lit(
         _norm_vecs(train_emb, id_col, vec_col), lit, extra_cols=("v", "norm")
     )
@@ -344,7 +348,7 @@ def embedding_decontamination(
     probes = pr.select(
         "cluster", F.col("v").alias("_pv"), F.col("norm").alias("_pn")
     )
-    cos = vec_dot("v", "_pv") / (F.col("norm") * F.col("_pn"))
+    cos = F.try_divide(vec_dot("v", "_pv"), F.col("norm") * F.col("_pn"))
     hits = (
         tr.join(F.broadcast(probes), "cluster")
         .select("id", cos.alias("_cos"))
@@ -1017,7 +1021,7 @@ class IncrementalIngestResult(NamedTuple):
     # Per-family state deltas, exactly the individual contracts' own
     # (each family keeps its OWN notion of "kept": the hash/band delta
     # excludes hash-family dups, not semantic ones). The streaming loop
-    # (streaming/ingest.py::verdict_stream_writer) appends the set
+    # (streaming/ingest.py::verdict_batch_processor) appends the set
     # families directly and routes the COUNT families through
     # merge_counts_keyed -- replayed merges must no-op:
     delta_hashes: DataFrame | None = None       # kept docs' content hashes

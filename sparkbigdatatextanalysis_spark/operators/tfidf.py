@@ -123,11 +123,3 @@ def norms(weights: DataFrame) -> DataFrame:
     return weights.groupBy("id").agg(
         F.sqrt(F.sum(F.col("weight") * F.col("weight"))).alias("norm")
     )
-
-
-def weights_as_map(weights: DataFrame) -> DataFrame:
-    """Convenience view (id, vector MAP<STRING,DOUBLE>) of the canonical
-    exploded form, for API parity with the reference's sparse-map vectors."""
-    return weights.groupBy("id").agg(
-        F.map_from_entries(F.collect_list(F.struct("token", "weight"))).alias("vector")
-    )

@@ -111,31 +111,6 @@ def quantize_embeddings(
     )
 
 
-def dequantize_embeddings(
-    qemb: DataFrame,
-    id_col: str = "vec_id",
-    qvec_col: str = "qvec",
-    scale_col: str = "scale",
-    out_vec: str = "embedding",
-) -> DataFrame:
-    """Inverse of :func:`quantize_embeddings`:
-    (id, embedding ARRAY<DOUBLE>) with embedding[i] = scale * qvec[i].
-    Map-only."""
-    return qemb.select(
-        F.col(id_col),
-        F.when(
-            F.col(qvec_col).isNull(), F.lit(None).cast("array<double>")
-        )
-        .otherwise(
-            F.transform(
-                F.col(qvec_col),
-                lambda x: x.cast("double") * F.col(scale_col),
-            )
-        )
-        .alias(out_vec),
-    )
-
-
 def quantized_cosine(
     a_scale, a_q, b_scale, b_q, round_to: int = 6
 ):
@@ -173,87 +148,37 @@ def quantized_cosine(
     )
 
 
-def hashed_doc_embeddings(
-    tok_df: DataFrame,
-    dim: int = 64,
-    id_col: str = "id",
-    tokens_col: str = "tokens",
-) -> DataFrame:
-    """Model-free document embeddings by signed feature hashing
-    (the hashing trick): every token hashes to a dimension in
-    [0, dim) with a ±1 sign from an independent hash bit, per-dim
-    contributions sum, and the vector is L2-normalized. Returns
-    (id, embedding ARRAY<DOUBLE>) — the bridge from the text tables to
-    every vector operator (ANN top-k, embedding near-dup, centroids,
-    quantization) when no learned encoder is in the loop.
-
-    Signed hashing keeps E[<u,v>] equal to the true token-count inner
-    product (collisions cancel in expectation), which is what makes
-    the trick usable for similarity rather than just bucketing.
-
-    Scale shape: explode → ONE partial-agg groupBy(id, dim) → ONE
-    groupBy(id) map assembly (dim-bounded rows after the first
-    combiner), all built-ins; the md5-derived hash keeps vectors
-    identical across engines, partitionings and reruns.
-    """
-    if dim < 2:
-        raise ValueError(f"hashed_doc_embeddings: dim must be >= 2, got {dim}")
-    from ..functions.hashing import string_hash31
-
-    h = string_hash31(F.concat(F.lit("emb:"), F.col("_tok")))
-    sign = F.when((h % (2 * dim)) < dim, F.lit(1.0)).otherwise(F.lit(-1.0))
-    ex = (
-        tok_df.select(F.col(id_col).alias("_id"), F.explode(tokens_col).alias("_tok"))
-        .where(F.col("_tok").isNotNull() & (F.col("_tok") != ""))
-        .select("_id", (h % dim).cast("int").alias("_dim"), sign.alias("_s"))
-    )
-    per_dim = ex.groupBy("_id", "_dim").agg(F.sum("_s").alias("_v"))
-    assembled = per_dim.groupBy("_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("_dim", "_v"))).alias("_m")
-    )
-    # explode drops docs with no valid tokens entirely; join back over
-    # ALL input ids so they come out as zero vectors instead of silently
-    # vanishing from the corpus (a NULL map makes every lookup NULL ->
-    # coalesce 0.0 -> the zero-norm branch below returns the raw zeros)
-    ids = tok_df.select(F.col(id_col).alias("_id")).distinct()
-    assembled = ids.join(assembled, "_id", "left")
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda d: F.coalesce(F.col("_m")[d.cast("int")], F.lit(0.0)),
-    )
-    norm = F.sqrt(
-        F.aggregate(dense, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    return assembled.select(
-        F.col("_id").alias(id_col),
-        F.when(
-            norm > 0, F.transform(dense, lambda x: x / norm)
-        ).otherwise(dense).alias("embedding"),
-    )
-
-
 def hashed_doc_components(
     tok_df: DataFrame,
     dim: int = 64,
     id_col: str = "id",
     tokens_col: str = "tokens",
 ) -> DataFrame:
-    """:func:`hashed_doc_embeddings` in exploded relational form:
-    (id, pos, component), one row per (doc, dimension) -- for consumers
-    that explode the array anyway. Bit-identical components: the
-    pre-norm values are integer-valued (sums of +-1, exact in double),
-    the squared-norm sum is exact integer arithmetic in ANY order, and
+    """Model-free document embeddings by signed feature hashing (the
+    hashing trick), in exploded relational form: (id, pos, component),
+    one row per (doc, dimension). Every token hashes to a dimension in
+    [0, dim) with a ±1 sign from an independent hash bit, per-dim
+    contributions sum, and the vector is L2-normalized; a doc with no
+    valid token comes out as a zero vector instead of vanishing.
+
+    Signed hashing keeps E[<u,v>] equal to the true token-count inner
+    product (collisions cancel in expectation), which is what makes
+    the trick usable for similarity rather than just bucketing; the
+    md5-derived hash keeps vectors identical across engines,
+    partitionings and reruns. Bit-identical components: the pre-norm
+    values are integer-valued (sums of +-1, exact in double), the
+    squared-norm sum is exact integer arithmetic in ANY order, and
     component = v / sqrt(s) is one correctly-rounded division of
     identical operands.
 
-    Scale shape (r11 optimization): the array form's dense assembly
+    Scale shape (r11 optimization): a dense array assembly
     (map_from_entries + per-slot map lookups + nested higher-order
-    norm/divide) is interpreted, not codegen'd, and dominated the
-    operator's wall clock (measured ~7x the aggregation cost at sf0.1);
-    this form keeps everything in codegen'd built-ins -- the same
-    explode -> ONE partial-agg groupBy(id, dim), a groupBy(id) exact
-    integer norm, and one (id, pos)-grid left join that fills the zero
-    slots relationally instead of per-slot map probes."""
+    norm/divide) is interpreted, not codegen'd, and measured ~7x the
+    aggregation cost at sf0.1; this form keeps everything in codegen'd
+    built-ins -- explode -> ONE partial-agg groupBy(id, dim), a
+    groupBy(id) exact integer norm, and one (id, pos)-grid left join
+    that fills the zero slots relationally instead of per-slot map
+    probes."""
     if dim < 2:
         raise ValueError(f"hashed_doc_components: dim must be >= 2, got {dim}")
     from ..functions.hashing import string_hash31

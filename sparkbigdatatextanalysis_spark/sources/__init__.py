@@ -1,11 +1,6 @@
-from .catalog_csv import read_catalog_csv, read_gold_pairs_csv, read_stopwords
-from .parquet_io import load_table, load_tables, write_parquet
+from .catalog_csv import read_catalog_csv, read_gold_pairs_csv
 
 __all__ = [
     "read_catalog_csv",
     "read_gold_pairs_csv",
-    "read_stopwords",
-    "load_table",
-    "load_tables",
-    "write_parquet",
 ]

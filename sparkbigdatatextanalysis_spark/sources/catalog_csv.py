@@ -123,10 +123,3 @@ def read_gold_pairs_csv(spark: SparkSession, path: str) -> DataFrame:
         F.regexp_replace("b_id", '"', "").alias("b_id"),
     ).where(F.col("a_id") != "idAmazon")
 
-
-def read_stopwords(path: str) -> list[str]:
-    """Plain-Python stopword file read (one word per line); the list is
-    tiny so it travels into expressions as a literal array, never a join.
-    """
-    with open(path, encoding="utf-8") as fh:
-        return [w.strip() for w in fh if w.strip()]

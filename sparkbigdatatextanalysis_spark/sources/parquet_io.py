@@ -1,14 +1,12 @@
-"""Parquet IO for the synthetic test tables and as the engine's sink.
+"""Parquet reads of the synthetic driver tables.
 
-The reference has no sinks (driver println/chart only); parquet write is
-the new engine's output surface so results are cluster-readable.
+The driver contract hands the engine its tables as one parquet file per
+name under a scale-factor directory.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -23,14 +21,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def normalize_event_ts(events: DataFrame) -> DataFrame:
@@ -48,48 +38,3 @@ def normalize_event_ts(events: DataFrame) -> DataFrame:
     elif dtype != "timestamp":
         events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return events
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Sink. ``partition_by`` enables partition pruning for downstream
-    readers; at 100 TB choose low-cardinality columns (date, source).
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_partitioned_incremental(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    max_records_per_file: int | None = None,
-) -> None:
-    """Incremental partitioned sink: dynamic partition overwrite --
-    ONLY the partitions present in ``df`` are replaced, everything else
-    on disk is untouched. This is the daily-batch write pattern at
-    100 TB: reprocessing one day rewrites one date partition, not the
-    table; a plain mode='overwrite' would truncate all history.
-
-    ``max_records_per_file`` caps file sizes inside a partition (the
-    small-files/giant-files dial); together with AQE-coalesced shuffle
-    output it keeps per-partition file counts sane without a manual
-    repartition.
-
-    The dynamic mode is set per-write via the DataFrameWriter option so
-    the session default (static, the safe one) is untouched.
-    """
-    writer = (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-    )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)

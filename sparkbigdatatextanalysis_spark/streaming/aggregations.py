@@ -15,15 +15,8 @@ aggregation; watermarks bound state size, which is what keeps a stateful
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.text import tokenize_no_stopwords
-
-EVENTS_SCHEMA = (
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
-    "value DOUBLE, props STRING"
-)
 
 
 def windowed_event_stats(events: DataFrame, window: str = "1 hour") -> DataFrame:
@@ -45,49 +38,4 @@ def sliding_user_activity(
         events.groupBy(F.window("ts", window, slide).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "user_id", "n_events")
-    )
-
-
-def windowed_token_counts(docs_with_ts: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Streaming analog of the corpus token count: (window_start, token,
-    n) over a timestamped text stream."""
-    return (
-        docs_with_ts.select(
-            "ts", F.explode(tokenize_no_stopwords("text")).alias("token")
-        )
-        .groupBy(F.window("ts", window).alias("w"), "token")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "token", "n")
-    )
-
-
-def read_events_stream(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream over the events parquet (directory or glob)."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def with_watermark(events: DataFrame, delay: str = "2 hours") -> DataFrame:
-    """Late-data bound: state for windows older than max(ts) - delay is
-    evicted and later events dropped -- the knob that bounds streaming
-    state at scale."""
-    return events.withWatermark("ts", delay)
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
-):
-    """Execute a streaming aggregation with the available-now trigger into
-    an in-memory sink (test/debug surface; production uses parquet/Kafka
-    sinks). Returns the StreamingQuery -- caller awaits termination."""
-    return (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -148,10 +148,10 @@ def verdict_batch_processor(
 ):
     """The foreachBatch body of the CONTINUOUS composed-verdict loop
     (the streaming form of ``operators.pipeline.
-    incremental_ingest_verdict``) -- factored out of
-    :func:`verdict_stream_writer` so a test (or a backfill script) can
-    drive it directly with (batch_df, batch_id), including replaying a
-    batch id to prove the at-least-once contract.
+    incremental_ingest_verdict``): pass it to
+    ``doc_stream.writeStream.foreachBatch``, or drive it directly with
+    (batch_df, batch_id), including replaying a batch id to prove the
+    at-least-once contract.
 
     Per micro-batch, against the parquet state under ``state_dir``:
 
@@ -268,30 +268,3 @@ def verdict_batch_processor(
             release(res.assignments)
 
     return _process
-
-
-def verdict_stream_writer(
-    doc_stream: DataFrame,
-    state_dir: str,
-    flags_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    emb_lookup: DataFrame | None = None,
-    cents: DataFrame | None = None,
-    sem_threshold: float = 0.0,
-):
-    """Wire a document stream into the continuous composed-verdict loop
-    (all four incremental families per micro-batch; see
-    :func:`verdict_batch_processor`); returns the ``DataStreamWriter``
-    (caller sets trigger/checkpoint and starts)."""
-    return doc_stream.writeStream.foreachBatch(
-        verdict_batch_processor(
-            state_dir,
-            flags_dir,
-            id_col,
-            text_col,
-            emb_lookup,
-            cents,
-            sem_threshold,
-        )
-    )

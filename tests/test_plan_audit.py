@@ -888,20 +888,22 @@ def test_ivf_internal_stage_budgets(spark):
     ann_topk_ivf budget above never sees it. Pin the internal stages
     directly -- this is exactly where the r3 scale-killer lived:
 
-    * assignment (ivf_assignments over literal centroids) must be
-      map-only: ZERO shuffle exchanges, no corpus movement;
+    * assignment (_assign_from_lit over literal centroids, the
+      assignment dedup and pipeline run) must be map-only: ZERO
+      shuffle exchanges, no corpus movement;
     * one Lloyd pass's mean aggregation (_lloyd_means) is ONE
       partial-agg shuffle of (cluster, dim) rows.
     """
     from sparkbigdatatextanalysis_spark.operators import ann
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    a = audit_plan(ann.ivf_assignments(emb))
+    nv = ann._norm_vecs(emb, "vec_id", "embedding")
+    lit = ann._cents_lit(ann._collect_cents(ann.kmeans_centroids(emb), "test"))
+    a = audit_plan(ann._assign_from_lit(nv, lit))
     assert a.shuffle_exchanges == 0, a
     assert a.cartesian_products == 0 and a.row_python_stages == 0, a
 
-    nv = ann._norm_vecs(emb, "vec_id", "embedding")
-    cur = ann._collect_cents(ann._init_centroids(nv, ann.N_CENTROIDS))
+    cur = ann._collect_cents(ann._init_centroids(nv, ann.N_CENTROIDS), "test")
     assign = nv.selectExpr(
         f"{ann._best_centroid('v', 'norm', ann._cents_lit(cur))} AS c_id", "v"
     )

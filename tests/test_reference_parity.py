@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sparkbigdatatextanalysis_spark.functions.vector import vec_cosine, vec_dot, vec_norm
+from sparkbigdatatextanalysis_spark.functions.vector import vec_dot
 from sparkbigdatatextanalysis_spark.operators.similarity import (
     common_token_pairs,
     cosine_similarity_join,
@@ -24,7 +24,6 @@ from sparkbigdatatextanalysis_spark.operators.tfidf import (
     idf_table,
     tfidf_weights,
     tokenized,
-    weights_as_map,
 )
 from sparkbigdatatextanalysis_spark.sources.catalog_csv import (
     read_catalog_csv,
@@ -113,8 +112,11 @@ def test_dense_vector_goldens(spark):
     )
     row = df.select(
         vec_dot("v1", "v2").alias("dot"),
-        vec_norm("v1").alias("norm"),
-        vec_cosine("v1", "v3").alias("cos"),
+        F.sqrt(vec_dot("v1", "v1")).alias("norm"),
+        (
+            vec_dot("v1", "v3")
+            / F.sqrt(vec_dot("v1", "v1") * vec_dot("v3", "v3"))
+        ).alias("cos"),
     ).first()
     assert row["dot"] == pytest.approx(358.0)
     assert row["norm"] == pytest.approx(9.486832980505, abs=1e-6)

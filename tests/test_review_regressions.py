@@ -38,9 +38,10 @@ def test_kmeans_seed_centroids_with_offset_ids(spark):
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     cents = ann.kmeans_centroids(emb, n_centroids=4, n_iter=1).collect()
     assert 0 < len(cents) <= 4
-    assign = ann.ivf_assignments(
-        emb, cents=ann.kmeans_centroids(emb, n_centroids=4, n_iter=1)
+    lit = ann._cents_lit(
+        ann._collect_cents(ann.kmeans_centroids(emb, n_centroids=4, n_iter=1), "test")
     )
+    assign = ann._assign_from_lit(ann._norm_vecs(emb, "vec_id", "embedding"), lit)
     assert assign.count() == 20
 
 

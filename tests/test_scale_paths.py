@@ -1,18 +1,13 @@
-"""Scale-path surfaces: salted skew join (result-equivalence + layout),
-bucketed co-located joins (no shuffle on the join key), and the JSONL
-source (explicit schema, corrupt-record channel).
+"""Scale-path surfaces: salted skew join (result-equivalence + layout)
+and bucketed co-located joins (no shuffle on the join key).
 """
 
 from __future__ import annotations
-
-import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparkbigdatatextanalysis_spark.operators import skew
-from sparkbigdatatextanalysis_spark.sources import jsonl
-from sparkbigdatatextanalysis_spark.sources import parquet_io as pio
 
 from conftest import sf_dir
 
@@ -93,60 +88,6 @@ def test_bucketed_join_no_shuffle(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-# --- JSONL source ----------------------------------------------------------
-
-
-@pytest.fixture()
-def jsonl_file(tmp_path):
-    p = tmp_path / "docs.jsonl"
-    lines = [
-        json.dumps({"doc_id": 1, "text": "hello world", "lang": "en",
-                    "source": "web", "n_chars": 11}),
-        json.dumps({"doc_id": 2, "text": "zweites dokument", "lang": "de",
-                    "source": "web", "n_chars": 16}),
-        '{"doc_id": 3, "text": "truncated...',  # malformed
-        "not json at all",
-    ]
-    p.write_text("\n".join(lines) + "\n")
-    return str(p)
-
-
-def test_jsonl_reads_clean_rows(spark, jsonl_file):
-    df = jsonl.read_jsonl(spark, jsonl_file, jsonl.DOCUMENTS_JSONL_SCHEMA)
-    rows = {r["doc_id"]: r["text"] for r in df.collect()}
-    assert rows == {1: "hello world", 2: "zweites dokument"}
-
-
-def test_jsonl_quarantines_corrupt_lines(spark, jsonl_file):
-    bad = jsonl.corrupt_lines(
-        spark, jsonl_file, jsonl.DOCUMENTS_JSONL_SCHEMA
-    ).collect()
-    raws = set(r["raw"] for r in bad)
-    assert raws == {'{"doc_id": 3, "text": "truncated...', "not json at all"}
-
-
-def test_partitioned_write_prunes_on_read(spark, tmp_path):
-    """write_parquet(partition_by=...) must give readers partition
-    pruning: a filter on the partition column shows up as a
-    PartitionFilters entry and non-matching directories are never read."""
-    ev = pio.normalize_event_ts(
-        spark.read.parquet(f"{sf_dir('0.001')}/events.parquet")
-    )
-    out = str(tmp_path / "ev_part")
-    pio.write_parquet(ev, out, partition_by=["event_type"])
-
-    back = spark.read.parquet(out).where(F.col("event_type") == "click")
-    qe = back._jdf.queryExecution()
-    jvm = spark._jvm
-    plan = qe.explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan
-    assert "event_type" in plan.split("PartitionFilters", 1)[1][:300]
-    n_click = ev.where(F.col("event_type") == "click").count()
-    assert back.count() == n_click
-
-
 def test_orc_roundtrip(spark, tmp_path):
     """ORC sink/source parity (second columnar format Spark ships)."""
     src = spark.read.parquet(f"{sf_dir('0.001')}/documents.parquet").limit(40)
@@ -156,17 +97,6 @@ def test_orc_roundtrip(spark, tmp_path):
     assert {r["doc_id"] for r in back.collect()} == {
         r["doc_id"] for r in src.collect()
     }
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    src = spark.read.parquet(f"{sf_dir('0.001')}/documents.parquet").limit(50)
-    out_dir = str(tmp_path / "docs_out")
-    jsonl.write_jsonl(src, out_dir)
-    back = jsonl.read_jsonl(spark, out_dir, jsonl.DOCUMENTS_JSONL_SCHEMA)
-    assert back.count() == 50
-    a = {r["doc_id"]: r["text"] for r in src.collect()}
-    b = {r["doc_id"]: r["text"] for r in back.collect()}
-    assert a == b
 
 
 def test_prefix_blocking_pairs(spark):

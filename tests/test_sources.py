@@ -56,54 +56,3 @@ def test_gold_pairs_reader(spark, tmp_path):
     got = {(r["a_id"], r["b_id"]) for r in df.collect()}
     assert got == {("a1", "g1"), ("a2", "g2")}
 
-
-def test_dynamic_partition_overwrite_replaces_only_written_partitions(
-    spark, tmp_path
-):
-    """write_partitioned_incremental must replace exactly the partitions
-    present in the incoming frame: day 1 is rewritten, day 2 survives,
-    day 3 appears."""
-    from sparkbigdatatextanalysis_spark.sources.parquet_io import (
-        write_partitioned_incremental,
-    )
-
-    path = str(tmp_path / "tbl")
-    initial = spark.createDataFrame(
-        [("2024-01-01", 1, "old"), ("2024-01-02", 2, "keep")],
-        "day STRING, id INT, v STRING",
-    )
-    write_partitioned_incremental(initial, path, ["day"])
-
-    update = spark.createDataFrame(
-        [("2024-01-01", 3, "new"), ("2024-01-03", 4, "ins")],
-        "day STRING, id INT, v STRING",
-    )
-    write_partitioned_incremental(update, path, ["day"])
-
-    # NB: partition-column type inference reads day= back as DATE
-    got = {
-        (str(r["day"]), r["id"], r["v"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        ("2024-01-01", 3, "new"),   # day 1 replaced (old row gone)
-        ("2024-01-02", 2, "keep"),  # untouched partition survives
-        ("2024-01-03", 4, "ins"),   # new partition appended
-    }
-
-
-def test_max_records_per_file_splits_output(spark, tmp_path):
-    import glob
-
-    from sparkbigdatatextanalysis_spark.sources.parquet_io import (
-        write_partitioned_incremental,
-    )
-
-    path = str(tmp_path / "tbl2")
-    df = spark.createDataFrame(
-        [("d", i) for i in range(100)], "day STRING, id INT"
-    ).coalesce(1)
-    write_partitioned_incremental(df, path, ["day"], max_records_per_file=30)
-    files = glob.glob(f"{path}/day=d/*.parquet")
-    assert len(files) >= 4  # 100 rows / 30 per file
-    assert spark.read.parquet(path).count() == 100

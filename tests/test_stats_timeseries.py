@@ -462,6 +462,31 @@ def test_sample_to_token_budget_validates_shards(spark):
             sample_to_token_budget(df, 100, n_shards=bad)
 
 
+def _dequantize(qemb):
+    """Inverse of ``quantize_embeddings``, the reference its round trip
+    is checked against: (vec_id, embedding ARRAY<DOUBLE>) with
+    embedding[i] = scale * qvec[i]; a NULL qvec stays NULL."""
+    return qemb.select(
+        "vec_id",
+        F.when(F.col("qvec").isNull(), F.lit(None).cast("array<double>"))
+        .otherwise(
+            F.transform("qvec", lambda x: x.cast("double") * F.col("scale"))
+        )
+        .alias("embedding"),
+    )
+
+
+def _hashed_embeddings(tok, dim):
+    """(id, embedding) arrays assembled from ``hashed_doc_components``'s
+    (id, pos, component) rows."""
+    return (
+        vec.hashed_doc_components(tok, dim=dim)
+        .groupBy("id")
+        .agg(F.sort_array(F.collect_list(F.struct("pos", "component"))).alias("_c"))
+        .select("id", F.col("_c.component").alias("embedding"))
+    )
+
+
 class TestQuantizeEmbeddings:
     def _emb(self, spark):
         return spark.read.parquet(
@@ -470,12 +495,11 @@ class TestQuantizeEmbeddings:
 
     def test_roundtrip_error_bounded(self, spark):
         from sparkbigdatatextanalysis_spark.operators.vectors import (
-            dequantize_embeddings,
             quantize_embeddings,
         )
 
         emb = self._emb(spark)
-        deq = dequantize_embeddings(quantize_embeddings(emb))
+        deq = _dequantize(quantize_embeddings(emb))
         joined = emb.select(
             "vec_id", F.col("embedding").alias("orig")
         ).join(deq, "vec_id")
@@ -531,7 +555,6 @@ class TestQuantizeEmbeddings:
 
     def test_null_and_zero_vectors_roundtrip(self, spark):
         from sparkbigdatatextanalysis_spark.operators.vectors import (
-            dequantize_embeddings,
             quantize_embeddings,
         )
 
@@ -545,7 +568,7 @@ class TestQuantizeEmbeddings:
         assert q[3]["qvec"][1] in (-127, 127)
         back = {
             r["vec_id"]: r["embedding"]
-            for r in dequantize_embeddings(quantize_embeddings(df)).collect()
+            for r in _dequantize(quantize_embeddings(df)).collect()
         }
         assert back[1] == [0.0, 0.0]
         assert back[2] is None
@@ -643,12 +666,8 @@ class TestHashedDocEmbeddings:
         return em._tok(spark, "/root/testdata/sf0.001")
 
     def test_shape_norm_and_determinism(self, spark):
-        from sparkbigdatatextanalysis_spark.operators.vectors import (
-            hashed_doc_embeddings,
-        )
-
         tok = self._tok(spark)
-        emb = hashed_doc_embeddings(tok, dim=32)
+        emb = _hashed_embeddings(tok, dim=32)
         rows = {r["id"]: list(r["embedding"]) for r in emb.collect()}
         assert len(rows) == 500
         for v in rows.values():
@@ -656,17 +675,11 @@ class TestHashedDocEmbeddings:
             assert abs(sum(x * x for x in v) - 1.0) < 1e-9
         again = {
             r["id"]: list(r["embedding"])
-            for r in hashed_doc_embeddings(tok.repartition(7), dim=32).collect()
+            for r in _hashed_embeddings(tok.repartition(7), dim=32).collect()
         }
         assert again == rows
 
     def test_identical_docs_identical_vectors_and_similarity_orders(self, spark):
-        import math
-
-        from sparkbigdatatextanalysis_spark.operators.vectors import (
-            hashed_doc_embeddings,
-        )
-
         docs = spark.createDataFrame(
             [
                 (1, ["apple", "banana", "cherry", "date", "elderberry"]),
@@ -678,7 +691,7 @@ class TestHashedDocEmbeddings:
         )
         vecs = {
             r["id"]: list(r["embedding"])
-            for r in hashed_doc_embeddings(docs, dim=64).collect()
+            for r in _hashed_embeddings(docs, dim=64).collect()
         }
         assert vecs[1] == vecs[2]
 
@@ -691,11 +704,8 @@ class TestHashedDocEmbeddings:
 
     def test_feeds_ann_topk(self, spark):
         from sparkbigdatatextanalysis_spark.operators import ann as ann_ops
-        from sparkbigdatatextanalysis_spark.operators.vectors import (
-            hashed_doc_embeddings,
-        )
 
-        emb = hashed_doc_embeddings(self._tok(spark), dim=32).withColumnRenamed(
+        emb = _hashed_embeddings(self._tok(spark), dim=32).withColumnRenamed(
             "id", "vec_id"
         )
         queries = emb.select("vec_id").orderBy("vec_id").limit(3)
@@ -741,15 +751,11 @@ class TestQuantizeEdgeCases:
 
 
 def test_hashed_embeddings_keep_tokenless_docs_as_zero_vectors(spark):
-    from sparkbigdatatextanalysis_spark.operators.vectors import (
-        hashed_doc_embeddings,
-    )
-
     docs = spark.createDataFrame(
         [(1, ["alpha", "beta"]), (2, []), (3, None), (4, [None, ""])],
         "id LONG, tokens ARRAY<STRING>",
     )
-    rows = {r["id"]: list(r["embedding"]) for r in hashed_doc_embeddings(docs, dim=8).collect()}
+    rows = {r["id"]: list(r["embedding"]) for r in _hashed_embeddings(docs, dim=8).collect()}
     assert set(rows) == {1, 2, 3, 4}  # nobody silently vanishes
     for vid in (2, 3, 4):
         assert rows[vid] == [0.0] * 8, vid

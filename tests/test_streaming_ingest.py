@@ -124,12 +124,12 @@ VDAY2 = [
 
 def _run_verdict_once(spark, src, state, flags, ckpt):
     from sparkbigdatatextanalysis_spark.streaming.ingest import (
-        verdict_stream_writer,
+        verdict_batch_processor,
     )
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     q = (
-        verdict_stream_writer(stream, state, flags)
+        stream.writeStream.foreachBatch(verdict_batch_processor(state, flags))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from sparkbigdatatextanalysis_spark.functions.text import (
     ENGLISH_STOPWORDS,
-    remove_stopwords,
+    _no_stopwords_sql,
     term_frequencies_map,
     tokenize,
     tokenize_no_stopwords,
@@ -70,7 +70,7 @@ def test_custom_stopwords_are_literals_not_sql(spark):
     a SQL keyword filter exactly those tokens: each word is a literal,
     never SQL text."""
     stop = ["it's", "a\\b", "naïve", "select", "') OR TRUE --"]
-    expr = remove_stopwords("t", stop)
+    expr = F.expr(_no_stopwords_sql("t", stop))
     toks = ["it's", "a\\b", "naïve", "select", "') OR TRUE --", "from", "it", "s", "naive"]
     got = spark.createDataFrame([(toks,)], "t array<string>").select(expr.alias("t")).first()["t"]
     assert got == ["from", "it", "s", "naive"]

@@ -25,7 +25,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # One key per worker-shipping surface: applyInPandas scan (monitor),
 # mapInPandas codec (multimodal), blocked-GEMM applyInPandas (dedup),
-# banded mapInPandas (ann), plus the BPE mapInPandas helper.
+# banded mapInPandas (ann).
 DRIVER_SCRIPT = textwrap.dedent(
     """
     import sys
@@ -84,19 +84,25 @@ STREAMING_SCRIPT = textwrap.dedent(
     sys.path.insert(0, repo)  # driver-side only; workers don't see this
 
     from sparkbigdatatextanalysis_spark.session import get_spark
-    from sparkbigdatatextanalysis_spark.streaming import uniques as uq
+    from sparkbigdatatextanalysis_spark.streaming import sessionize as sz
 
     spark = get_spark("worker-portability-stream", cpus=4,
                       shuffle_partitions=4)
     src = sys.argv[2] + "/src"
     sink = sys.argv[2] + "/sink"
     ckpt = sys.argv[2] + "/ckpt"
-    spark.createDataFrame(
-        [("d1", i) for i in range(200)], "day STRING, user_id LONG"
+    schema = "event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE"
+    # 20 users, each with two events a minute apart and one two hours
+    # later: the later event closes each user's first session, so the
+    # micro-batch emits exactly one session per user
+    spark.sql(
+        "SELECT id AS event_id, "
+        "timestamp_seconds(1700000000 + (id % 3) * 60 + (id % 3) div 2 * 7200) AS ts, "
+        "id div 3 AS user_id, CAST(id AS DOUBLE) AS value FROM range(60)"
     ).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema("day STRING, user_id LONG").parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
     q = (
-        uq.streaming_daily_uniques(stream)
+        sz.sessionize_stream(stream)
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
@@ -106,7 +112,7 @@ STREAMING_SCRIPT = textwrap.dedent(
     )
     q.awaitTermination(120)
     n = spark.read.parquet(sink).count()
-    assert n >= 1, n
+    assert n == 20, n
     spark.stop()
     print("STREAM-OK", n, flush=True)
     """
