@@ -638,10 +638,10 @@ def incremental_dedup(
     # persist: the band table feeds the history probe (when
     # history_bands is given), BOTH sides of the batch self-join, and
     # the returned delta -- up to FOUR consumers; persist_bands=False
-    # trades that many re-evaluations for zero cache residue (the
-    # duplicate_spans(persist_fingerprints=) contract) -- release() on
-    # the returned handle is then a no-op. (r12 measured the lazy
-    # localCheckpoint barrier here, the winnowing precedent, and
+    # trades that many re-evaluations for zero cache residue, the rule
+    # the semantic assignments always follow -- release() on the
+    # returned handle is then a no-op. (r12 measured a lazy
+    # localCheckpoint barrier here, the fingerprints' one rule, and
     # REVERTED it: interleaved same-session A/B at sf0.1 showed the
     # barrier neutral-to-slower -- the band build is a cheap in-row
     # map whose redundant branch evaluations overlap on idle cores,
@@ -920,7 +920,6 @@ def duplicate_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_fingerprints: bool = True,
 ) -> DataFrame:
     """(id, span_idx, span_start, span_end, n_windows): maximal
     character spans of each document covered by corpus-duplicated
@@ -961,59 +960,23 @@ def duplicate_spans(
     length -- then a linear fold), never a per-doc window over the
     corpus-wide exploded stream.
 
-    Fault tolerance of ``persist_fingerprints``: ``True`` (default)
-    pins the fingerprints in the CacheManager -- blocks are
-    lineage-backed, so an executor loss recomputes the lost partitions
-    and the job survives. ``False`` swaps the barrier for a LAZY
-    ``localCheckpoint``: the winnowing still evaluates exactly once
-    and nothing stays pinned, but the blocks are UNREPLICATED
-    executor-local storage with the lineage truncated -- losing an
-    executor mid-job fails the job unrecoverably (rerun from the
-    start). Use ``False`` for zero cache residue in single-shot batch
-    runs (a rerun is the recovery path anyway); keep ``True`` on
-    long-lived cluster sessions where partial recomputation matters.
+    The batch run IS :func:`incremental_duplicate_spans` over an empty
+    history (one kernel, so the two forms cannot drift); its lazy
+    fingerprint checkpoint leaves nothing in the CacheManager and its
+    blocks free with the plan. Call the incremental form directly to
+    get the releasable handle.
     """
-    if min_count < 2:
-        raise ValueError(f"duplicate_spans: min_count must be >= 2, got {min_count}")
-    # persist the selected fingerprints: they feed BOTH the duplicate
-    # count and the semi join back, and the winnowing selection is the
-    # pipeline's one compute-heavy map stage -- without the barrier it
-    # executes twice (the embedding_near_dup_pairs_lsh precedent). The
-    # handle is internal (the return is the spans frame), so a
-    # long-lived session calling this in a loop accumulates one cached
-    # table per call until LRU eviction; with
-    # ``persist_fingerprints=False`` the barrier is a LAZY
-    # localCheckpoint instead (r11 optimization): the winnowing still
-    # evaluates exactly once per run -- blocks materialize at the first
-    # consuming job and are reused, NOT pinned in the CacheManager; the
-    # ContextCleaner frees them when the plan is garbage-collected
-    # (previously False meant an honest double evaluation -- measured
-    # 1.3s slower per run at sf0.1 with an identical result). Or use
-    # :func:`incremental_duplicate_spans`, which returns the releasable
-    # handle.
-    fp = winnow_fingerprints(docs, width, window, id_col, text_col)
-    if persist_fingerprints:
-        fp = fp.persist()
-    else:
-        fp = fp.localCheckpoint(eager=False)
-    dup = (
-        fp.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .where(F.col("_c") >= min_count)
-        .select("h")
-    )
-    dupw = fp.join(dup, "h", "left_semi").select(
-        F.col("id").alias("_id"), F.col("pos").alias("_st")
-    )
-    return _merge_position_spans(dupw, width, id_col)
+    return incremental_duplicate_spans(
+        docs, None, width, window, min_count, id_col, text_col
+    ).spans
 
 
 class IncrementalSpansResult(NamedTuple):
     spans: DataFrame       # the batch docs' duplicate spans
     delta_counts: DataFrame  # (h, cnt) of the batch -- append/merge into history
-    fingerprints: DataFrame  # persisted -- lineage.release() after materializing
-    # outputs, exactly like IncrementalDedupResult.bands: a daily loop
-    # that never releases leaks one cached fingerprint table per batch
+    fingerprints: DataFrame  # lazy localCheckpoint -- lineage.release() after
+    # materializing outputs frees its blocks at once (else the
+    # ContextCleaner frees them when the plan is garbage-collected)
 
 
 def incremental_duplicate_spans(
@@ -1024,7 +987,6 @@ def incremental_duplicate_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_fingerprints: bool = True,
 ) -> IncrementalSpansResult:
     """Daily-batch form of :func:`duplicate_spans` against an
     accumulated corpus: a batch fingerprint is duplicated when its
@@ -1032,9 +994,10 @@ def incremental_duplicate_spans(
     ``min_count``, exactly as if :func:`duplicate_spans` had run over
     history-union-batch and kept only the batch docs' spans (the
     equivalence a test pins). ``history_counts`` is an (h, cnt)
-    fingerprint-count table (None = empty history = plain batch run);
-    the returned ``delta_counts`` is the batch's own (h, cnt) table for
-    the caller to merge into history (sum counts on h).
+    fingerprint-count table (None = empty history = the plain batch
+    run :func:`duplicate_spans` delegates to); the returned
+    ``delta_counts`` is the batch's own (h, cnt) table for the caller
+    to merge into history (sum counts on h).
 
     UNLIKE :func:`incremental_dedup` the merge is NOT rerun-idempotent:
     history is a COUNT (summed on merge), not a set probed by
@@ -1047,10 +1010,19 @@ def incremental_duplicate_spans(
     or key the history merge by a batch id so replayed merges
     deduplicate (insert-if-absent on (batch_id, h)) -- then a rerun
     BEFORE the merge recomputes identical spans and a replayed merge
-    is a no-op. The returned ``fingerprints`` table is persisted (it
-    feeds the count, the semi join and the delta) --
-    ``lineage.release()`` it after materializing the outputs, like
-    ``IncrementalDedupResult.bands``.
+    is a no-op.
+
+    Materialization: the selected fingerprints feed the count, the
+    semi join and the delta, and the winnowing selection is the
+    pipeline's one compute-heavy map stage, so it sits behind a LAZY
+    ``localCheckpoint``: it evaluates once, at the first consuming
+    job, and leaves no CacheManager entry (measured 1.3 s faster per
+    run at sf0.1 than evaluating it twice). The returned
+    ``fingerprints`` handle is that checkpoint; ``lineage.release()``
+    it after materializing the outputs. Its blocks are unreplicated
+    executor-local storage with the lineage truncated: an executor
+    lost mid-run fails the run, and the recovery is a rerun from the
+    start.
 
     Scale shape mirrors incremental_dedup: the 100 TB side is HISTORY,
     touched only by ONE equi-join probe on the fingerprint hash --
@@ -1059,36 +1031,14 @@ def incremental_duplicate_spans(
     accumulated corpus. History spans don't retro-update (a span in an
     OLD doc first duplicated by today's batch is reported when that doc
     is next reprocessed) -- the standard incremental-dedup contract.
-
-    ``persist_fingerprints=False`` trades fault tolerance for zero
-    cache residue exactly like :func:`duplicate_spans`: the barrier
-    becomes a lazy ``localCheckpoint`` whose unreplicated
-    executor-local blocks cannot be recomputed after an executor loss
-    (the job reruns from the start), where the default persist is
-    lineage-backed and survives. Single-shot batch runs take ``False``;
-    long-lived cluster sessions should keep ``True`` and
-    ``lineage.release()`` the returned handle.
     """
     if min_count < 2:
         raise ValueError(
             f"incremental_duplicate_spans: min_count must be >= 2, got {min_count}"
         )
-    # same double-consumer persist as duplicate_spans (count + semi join
-    # + the returned delta all read the batch fingerprints);
-    # persist_fingerprints=False swaps the CacheManager pin for a LAZY
-    # localCheckpoint (r11 optimization): the compute-heavy winnowing
-    # map stage still evaluates exactly once per run (the blocks
-    # materialize at the first consuming job and are reused by the
-    # rest), but nothing stays pinned -- the ContextCleaner releases the
-    # blocks when the plan is garbage-collected, so release() on the
-    # returned handle stays a no-op. Measured 1.3s faster per run than
-    # the previous honest double evaluation at sf0.1 with the identical
-    # skew-safe count + semi-join shape.
-    fp = winnow_fingerprints(batch_docs, width, window, id_col, text_col)
-    if persist_fingerprints:
-        fp = fp.persist()
-    else:
-        fp = fp.localCheckpoint(eager=False)
+    fp = winnow_fingerprints(
+        batch_docs, width, window, id_col, text_col
+    ).localCheckpoint(eager=False)
     bc = fp.groupBy("h").agg(F.count(F.lit(1)).alias("cnt"))
     if history_counts is not None:
         hist = history_counts.select(
@@ -1181,7 +1131,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cents: DataFrame | None = None,
-    persist_assignments: bool = True,
 ) -> DataFrame:
     """(id, cluster, keep): SemDeDup-style semantic dedup (Abbas et al.
     2023, "SemDeDup: Data-efficient learning at web-scale through
@@ -1215,84 +1164,27 @@ def semantic_dedup(
     paper's keep-farthest-from-centroid policy is an ORDER swap over
     the same plan -- for quality-aware survivors compose with
     :func:`cluster_representatives` instead.
-    """
-    from .ann import (
-        N_CENTROIDS,
-        _assign_from_lit,
-        _cents_lit,
-        _collect_cents,
-        _init_centroids,
-        _norm_vecs,
-    )
 
-    nv = _norm_vecs(emb, id_col, vec_col)
+    The batch run IS :func:`incremental_semantic_dedup` over an empty
+    history (one kernel, so the two forms cannot drift): this form only
+    derives default centroids when none are given and projects the
+    result to (id, cluster, keep BIGINT).
+    """
     if cents is None:
-        cents = _init_centroids(nv, N_CENTROIDS)
-    # (id, cluster, v, norm) in ONE projection: the cluster id is an
-    # in-row literal argmax over data already co-resident in the row --
-    # re-joining a separate assignment onto nv would shuffle the full corpus
-    # twice for nothing (r5 review finding)
-    av = _assign_from_lit(
-        nv,
-        _cents_lit(_collect_cents(cents, "semantic_dedup: collect centroids")),
-        extra_cols=("v", "norm"),
-    )
-    # av feeds THREE consumers (both sides of the within-cluster pair
-    # join plus the final keep join); without the barrier the
-    # normalize+argmax projection -- the op's compute-heavy map stage --
-    # re-evaluates 3x per action (the winnowing-fingerprint precedent).
-    # Same residue contract as duplicate_spans(persist_fingerprints=):
-    # the handle is internal, so a long-lived session accumulates one
-    # cached table per call until LRU eviction; pass
-    # persist_assignments=False to trade the triple evaluation for zero
-    # cache residue. (r12 measured a lazy localCheckpoint in the False
-    # branch and REVERTED it: interleaved A/B at sf0.1 neutral-to-
-    # slower -- the literal-centroid argmax is map-only and its
-    # redundant branch evaluations overlap on idle cores.)
-    if persist_assignments:
-        av = av.persist()
-    a = av.select(
-        "cluster",
-        F.col("id").alias("_a"),
-        F.col("v").alias("_va"),
-        F.col("norm").alias("_na"),
-    )
-    b = av.select(
-        "cluster",
-        F.col("id").alias("_b"),
-        F.col("v").alias("_vb"),
-        F.col("norm").alias("_nb"),
-    )
-    pairs = (
-        a.join(b, "cluster")
-        .where(F.col("_a") < F.col("_b"))
-        .select(
-            "_a",
-            "_b",
-            F.try_divide(
-                vec_dot("_va", "_vb"), F.col("_na") * F.col("_nb")
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-    dropped = pairs.select(F.col("_b").alias("id")).distinct()
-    return (
-        av.select("id", "cluster")
-        .join(dropped.withColumn("_dropped", F.lit(True)), "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.col("cluster").cast("long").alias("cluster"),
-            F.col("_dropped").isNull().cast("long").alias("keep"),
-        )
-    )
+        from .ann import N_CENTROIDS, _init_centroids, _norm_vecs
+
+        cents = _init_centroids(_norm_vecs(emb, id_col, vec_col), N_CENTROIDS)
+    return incremental_semantic_dedup(
+        emb, None, threshold, cents, id_col, vec_col
+    ).result.select(id_col, "cluster", F.col("keep").cast("long").alias("keep"))
 
 
 class IncrementalSemanticResult(NamedTuple):
     result: DataFrame      # (id, cluster, near_dup_history, near_dup_batch, keep)
     delta_reps: DataFrame  # the KEPT batch vectors' (id, cluster, v, norm)
     # rows -- append to the history representative table for tomorrow
-    assignments: DataFrame  # persisted -- lineage.release() after
-    # materializing outputs, exactly like IncrementalDedupResult.bands
+    assignments: DataFrame  # every batch vector's (id, cluster, v, norm):
+    # the all-reps history form; a plain lazy frame, nothing to release
 
 
 def incremental_semantic_dedup(
@@ -1302,7 +1194,6 @@ def incremental_semantic_dedup(
     cents: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    persist_assignments: bool = True,
 ) -> IncrementalSemanticResult:
     """Daily-batch form of :func:`semantic_dedup` against accumulated
     corpus state -- the embedding-family completion of the incremental
@@ -1338,11 +1229,14 @@ def incremental_semantic_dedup(
     with ANY same-cluster history representative), ``near_dup_batch``
     (cos >= threshold with a smaller-id same-cluster batch vector --
     the min-id survivor policy of :func:`semantic_dedup`), and ``keep``
-    = neither. The returned ``assignments`` handle is persisted (it
-    feeds the history probe, both sides of the batch pair join, and
-    the delta -- up to four consumers); ``lineage.release()`` it after
-    materializing outputs, or pass ``persist_assignments=False`` for
-    zero cache residue at re-evaluation cost.
+    = neither. ``history_reps=None`` is the plain batch run
+    :func:`semantic_dedup` delegates to.
+
+    Materialization: none. The assignment frame feeds the history
+    probe, both sides of the batch pair join and the delta, and each
+    consumer re-evaluates it: the literal-centroid argmax is map-only,
+    and its redundant evaluations overlap on idle cores (a barrier
+    here measured neutral-to-slower at sf0.1). Nothing is left cached.
 
     Scale shape: batch assignment is the map-only literal-centroid
     argmax (zero batch exchanges); the history probe is ONE equi-join
@@ -1363,8 +1257,6 @@ def incremental_semantic_dedup(
         ),
         extra_cols=("v", "norm"),
     )
-    if persist_assignments:
-        av = av.persist()
     if history_reps is not None:
         h = history_reps.select(
             "cluster",

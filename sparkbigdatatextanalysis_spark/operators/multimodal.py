@@ -28,7 +28,6 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -51,25 +50,6 @@ except ImportError:
 from ..serde import ship_by_value
 
 ship_by_value(__name__)
-
-MEDIA_META = StructType(
-    [
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("payload", BinaryType(), False),
-        StructField("meta", MEDIA_META),
-    ]
-)
 
 
 def _byte_fold(payload: bytes) -> int:

@@ -861,29 +861,21 @@ def dedup_lines(
     the text. Joining on the raw line keeps the operator exact (a
     64-bit line-hash join would start colliding around 2^32 distinct
     lines and silently delete unique text).
+
+    The batch run IS :func:`incremental_dedup_lines` over an empty
+    history (one kernel, so the two forms cannot drift).
     """
-    if max_occurrences < 1:
-        raise ValueError(
-            f"dedup_lines: max_occurrences must be >= 1, got {max_occurrences}"
-        )
-    if not sep:
-        raise ValueError("dedup_lines: sep must be non-empty")
-    lines = _exploded_lines(docs, id_col, text_col, sep)
-    dup = (
-        line_counts(docs, id_col, text_col, sep)
-        .where(F.col("cnt") > max_occurrences)
-        .select(F.col("line").alias("_line"), F.lit(True).alias("_dup"))
-    )
-    return _reassemble_kept_lines(lines, dup, id_col, sep)
+    return incremental_dedup_lines(
+        docs, None, id_col, text_col, max_occurrences, sep
+    ).result
 
 
 def _exploded_lines(
     docs: DataFrame, id_col: str, text_col: str, sep: str
 ) -> DataFrame:
     """(_id, _i, _line): one row per line, original index kept. Shared
-    by the full-corpus and incremental line dedups so the split
-    semantics (literal separator, NULL text = empty doc) cannot
-    drift."""
+    by :func:`line_counts` and the line dedup so the split semantics
+    (literal separator, NULL text = empty doc) cannot drift."""
     return docs.select(
         F.col(id_col).alias("_id"),
         F.posexplode(
@@ -910,43 +902,12 @@ def line_counts(
     )
 
 
-def _reassemble_kept_lines(
-    lines: DataFrame, dup: DataFrame, id_col: str, sep: str
-) -> DataFrame:
-    """Join the duplicate-line set back and rebuild each doc in original
-    line order -- the shared back half of both line dedups. ``dup`` is
-    (_line, _dup=true)."""
-    keep = (F.trim("_line") == "") | F.col("_dup").isNull()
-    marked = lines.join(dup, "_line", "left")
-    return (
-        marked.groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum((~keep).cast("long")).alias("n_removed"),
-            # collect_list drops the NULLs the when() leaves for removed
-            # lines; array_sort on (idx, line) structs restores order
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.when(keep, F.struct("_i", "_line")))
-                    ),
-                    lambda s: s["_line"],
-                ),
-                sep,
-            ).alias("text_dedup"),
-        )
-        .select(
-            F.col("_id").alias(id_col), "text_dedup", "n_lines", "n_removed"
-        )
-    )
-
-
 class IncrementalLinesResult(NamedTuple):
     result: DataFrame       # the batch docs' (id, text_dedup, n_lines, n_removed)
     delta_counts: DataFrame  # (line, cnt) of the batch -- merge into history
     # by summing cnt on line. Nothing is persisted here (unlike the
-    # spans/bands results): the line explode is one cheap map-only
-    # split, so re-evaluation costs less than the cache residue.
+    # bands result): the line explode is one cheap map-only split, so
+    # re-evaluation costs less than the cache residue.
 
 
 def incremental_dedup_lines(
@@ -1006,18 +967,42 @@ def incremental_dedup_lines(
         totals.where(F.col("_n") > max_occurrences)
         .select(F.col("line").alias("_line"), F.lit(True).alias("_dup"))
     )
-    return IncrementalLinesResult(
-        _reassemble_kept_lines(lines, dup, id_col, sep), bc
+    # join the duplicate set back and rebuild each doc in original line
+    # order
+    keep = (F.trim("_line") == "") | F.col("_dup").isNull()
+    result = (
+        lines.join(dup, "_line", "left")
+        .groupBy("_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.sum((~keep).cast("long")).alias("n_removed"),
+            # collect_list drops the NULLs the when() leaves for removed
+            # lines; array_sort on (idx, line) structs restores order
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(F.when(keep, F.struct("_i", "_line")))
+                    ),
+                    lambda s: s["_line"],
+                ),
+                sep,
+            ).alias("text_dedup"),
+        )
+        .select(
+            F.col("_id").alias(id_col), "text_dedup", "n_lines", "n_removed"
+        )
     )
+    return IncrementalLinesResult(result, bc)
 
 
 class IncrementalIngestResult(NamedTuple):
     result: DataFrame  # per-batch-doc verdict + per-family audit columns
-    # Persisted handles (when persist_intermediates=True) -- release()
-    # each after materializing, exactly like the individual contracts:
-    bands: DataFrame          # IncrementalDedupResult.bands
-    fingerprints: DataFrame   # IncrementalSpansResult.fingerprints
-    assignments: DataFrame | None  # IncrementalSemanticResult.assignments
+    # Materialized handles -- release() each after materializing the
+    # outputs, exactly like the individual contracts:
+    bands: DataFrame          # IncrementalDedupResult.bands (persisted
+    # when persist_intermediates=True, else a plain lazy frame)
+    fingerprints: DataFrame   # IncrementalSpansResult.fingerprints (lazy
+    # localCheckpoint)
     # Per-family state deltas, exactly the individual contracts' own
     # (each family keeps its OWN notion of "kept": the hash/band delta
     # excludes hash-family dups, not semantic ones). The streaming loop
@@ -1073,6 +1058,11 @@ def incremental_ingest_verdict(
     own: hash/band and semantic probes are idempotent, span and line
     COUNT merges are not (see the respective docstrings) -- commit
     outputs before merging deltas.
+
+    ``persist_intermediates`` drives the hash family's
+    ``persist_bands``; the fingerprints always sit behind their lazy
+    checkpoint and the semantic assignments are never materialized
+    (each family's one rule, see its docstring).
     """
     from .dedup import (
         incremental_dedup,
@@ -1089,11 +1079,7 @@ def incremental_ingest_verdict(
         persist_bands=persist_intermediates,
     )
     sp = incremental_duplicate_spans(
-        batch_docs,
-        hist_span_counts,
-        id_col=id_col,
-        text_col=text_col,
-        persist_fingerprints=persist_intermediates,
+        batch_docs, hist_span_counts, id_col=id_col, text_col=text_col
     )
     sp_agg = sp.spans.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_dup_spans"),
@@ -1115,22 +1101,16 @@ def incremental_ingest_verdict(
                 "(the pinned centroid model state)"
             )
         sem_res = incremental_semantic_dedup(
-            batch_emb,
-            hist_reps,
-            sem_threshold,
-            cents,
-            persist_assignments=persist_intermediates,
+            batch_emb, hist_reps, sem_threshold, cents
         )
         sem = sem_res.result.select(
             F.col("vec_id").alias("_sem_id"),
             F.col("near_dup_history").alias("sem_dup_history"),
             F.col("near_dup_batch").alias("sem_dup_batch"),
         )
-        assignments = sem_res.assignments
         sem_delta_reps = sem_res.delta_reps
     else:
         sem = None
-        assignments = None
         sem_delta_reps = None
     out = (
         base.result.drop("keep")
@@ -1175,7 +1155,6 @@ def incremental_ingest_verdict(
         out,
         base.bands,
         sp.fingerprints,
-        assignments,
         delta_hashes=base.delta_hashes,
         delta_bands=base.delta_bands,
         delta_span_counts=sp.delta_counts,

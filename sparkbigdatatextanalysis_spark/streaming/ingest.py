@@ -264,7 +264,5 @@ def verdict_batch_processor(
             _append_stamped(res.delta_reps, f"{state_dir}/reps", batch_id)
         release(res.bands)
         release(res.fingerprints)
-        if res.assignments is not None:
-            release(res.assignments)
 
     return _process

@@ -243,9 +243,8 @@ def test_incremental_spans_history_probe_is_equi_join(spark):
     plan = res.spans._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    # the result's fingerprint table is persisted by contract -- release
-    # it or the shared test session accumulates one cached table per run
-    # (the exact leak the API docstring warns about; r5 verdict item)
+    # the result's fingerprint table is a lazy checkpoint -- release it
+    # so its blocks free now rather than at the next driver GC
     release(res.fingerprints)
 
 
@@ -332,15 +331,15 @@ def test_incremental_semantic_equals_union_restricted(spark, sem_corpus):
     full_keep = {
         r["vec_id"]: bool(r["keep"])
         for r in dd.semantic_dedup(
-            full, SEM_T, cents=cents, persist_assignments=False
+            full, SEM_T, cents=cents
         ).collect()
         if r["vec_id"] >= 10
     }
     hr = dd.incremental_semantic_dedup(
-        hist, None, SEM_T, cents, persist_assignments=False
+        hist, None, SEM_T, cents
     )
     r = dd.incremental_semantic_dedup(
-        batch, hr.assignments, SEM_T, cents, persist_assignments=False
+        batch, hr.assignments, SEM_T, cents
     )
     inc_keep = {row["vec_id"]: bool(row["keep"]) for row in r.result.collect()}
     assert inc_keep == full_keep
@@ -348,7 +347,7 @@ def test_incremental_semantic_equals_union_restricted(spark, sem_corpus):
     full_cl = {
         r["vec_id"]: r["cluster"]
         for r in dd.semantic_dedup(
-            full, SEM_T, cents=cents, persist_assignments=False
+            full, SEM_T, cents=cents
         ).collect()
     }
     inc_cl = {row["vec_id"]: row["cluster"] for row in r.result.collect()}
@@ -383,10 +382,10 @@ def test_incremental_semantic_history_probe_shape(spark, sem_corpus):
     for."""
     hist, batch, _full, cents = sem_corpus
     hr = dd.incremental_semantic_dedup(
-        hist, None, SEM_T, cents, persist_assignments=False
+        hist, None, SEM_T, cents
     )
     r = dd.incremental_semantic_dedup(
-        batch, hr.assignments, SEM_T, cents, persist_assignments=False
+        batch, hr.assignments, SEM_T, cents
     )
     plan = r.result._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -473,6 +472,77 @@ def test_incremental_lines_history_probe_is_equi_join(spark):
     assert "BatchEvalPython" not in plan
 
 
+# --- one materialization rule per family ------------------------------------
+
+_BOILER = "a shared boilerplate paragraph long enough to carry fingerprints"
+_RULE_DOCS = [
+    (1, "alpha intro line\n" + _BOILER),
+    (2, "beta intro line\n" + _BOILER),
+    (3, "gamma document whose text shares nothing with the other two"),
+]
+
+
+def _rule_spans(docs, emb, cents):
+    return dd.duplicate_spans(docs), []
+
+
+def _rule_incremental_spans(docs, emb, cents):
+    r = dd.incremental_duplicate_spans(docs, None)
+    return r.spans, [r.fingerprints]
+
+
+def _rule_semantic(docs, emb, cents):
+    return dd.semantic_dedup(emb, SEM_T, cents=cents), []
+
+
+def _rule_incremental_semantic(docs, emb, cents):
+    r = dd.incremental_semantic_dedup(emb, None, SEM_T, cents)
+    return r.result, [r.assignments]
+
+
+def _rule_lines(docs, emb, cents):
+    from sparkbigdatatextanalysis_spark.operators import pipeline as pl
+
+    return pl.dedup_lines(docs), []
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        _rule_spans,
+        _rule_incremental_spans,
+        _rule_semantic,
+        _rule_incremental_semantic,
+        _rule_lines,
+    ],
+    ids=[
+        "duplicate_spans",
+        "incremental_duplicate_spans",
+        "semantic_dedup",
+        "incremental_semantic_dedup",
+        "dedup_lines",
+    ],
+)
+def test_dedup_family_leaves_no_cached_table(spark, sem_corpus, run):
+    """Each dedup family has one materialization rule and none of them
+    is a CacheManager entry: the fingerprints sit behind a lazy
+    localCheckpoint and the semantic assignments are not materialized.
+    Two runs, each followed by releasing its handles, give identical
+    rows and leave the session's cache empty."""
+    _hist, _batch, full, cents = sem_corpus
+    docs = spark.createDataFrame(_RULE_DOCS, "doc_id LONG, text STRING")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    runs = []
+    for _ in range(2):
+        df, handles = run(docs, full, cents)
+        runs.append(sorted(tuple(r) for r in df.collect()))
+        for h in handles:
+            release(h)
+        assert cache.isEmpty()
+    assert runs[0] and runs[0] == runs[1]
+
+
 # --- the composed nightly-ingest verdict -------------------------------------
 
 
@@ -507,7 +577,7 @@ def test_incremental_ingest_verdict_equals_its_four_contracts(spark):
     batch_emb = emb.where(F.col("vec_id") >= 10)
     cents = ann.kmeans_centroids(emb, n_centroids=2)
     hr = dd.incremental_semantic_dedup(
-        hist_emb, None, 0.95, cents, persist_assignments=False
+        hist_emb, None, 0.95, cents
     )
     res = pl.incremental_ingest_verdict(
         batch_docs, hh, hb, hc, hl, batch_emb, hr.assignments, cents, 0.95,
@@ -532,7 +602,7 @@ def test_incremental_ingest_verdict_equals_its_four_contracts(spark):
 
     # arm 2: span audit equals the aggregated incremental spans
     sp = dd.incremental_duplicate_spans(
-        batch_docs, hc, persist_fingerprints=False
+        batch_docs, hc
     ).spans.collect()
     by_doc: dict = {}
     for r in sp:
@@ -558,7 +628,7 @@ def test_incremental_ingest_verdict_equals_its_four_contracts(spark):
     sem = {
         r["vec_id"]: r
         for r in dd.incremental_semantic_dedup(
-            batch_emb, hr.assignments, 0.95, cents, persist_assignments=False
+            batch_emb, hr.assignments, 0.95, cents
         ).result.collect()
     }
     for i, r in got.items():
@@ -606,8 +676,7 @@ def test_incremental_ingest_verdict_plan_shape(spark):
     )
     cents = ann.kmeans_centroids(emb, n_centroids=2)
     hr = dd.incremental_semantic_dedup(
-        emb.where(F.col("vec_id") < 10), None, 0.95, cents,
-        persist_assignments=False,
+        emb.where(F.col("vec_id") < 10), None, 0.95, cents
     )
     res = pl.incremental_ingest_verdict(
         batch_docs, hh, hb, hc, hl,

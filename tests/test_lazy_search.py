@@ -181,7 +181,7 @@ def _bloom_bits(spark, emb):
 def _semantic_dedup(spark, emb):
     from sparkbigdatatextanalysis_spark.operators import dedup
 
-    dedup.semantic_dedup(emb, 0.35, persist_assignments=False)
+    dedup.semantic_dedup(emb, 0.35)
 
 
 def _bpe_learn_local(spark, emb):
@@ -202,7 +202,8 @@ def _bpe_learn_local(spark, emb):
                 "top_principal_component: power iteration 1 of 2",
             },
         ),
-        (_semantic_dedup, {"semantic_dedup: collect centroids"}),
+        # the batch form runs the incremental kernel's collect
+        (_semantic_dedup, {"incremental_semantic_dedup: collect centroids"}),
         (_bloom_bits, {"bloom_bits: collect bitmap"}),
         (_bpe_learn_local, {"bpe_learn_local: word counts"}),
     ],

@@ -161,7 +161,7 @@ def test_semantic_dedup_partition_invariant(spark):
         got = sorted(
             tuple(r)
             for r in dedup.semantic_dedup(
-                emb, threshold=0.7, persist_assignments=False
+                emb, threshold=0.7
             ).collect()
         )
         results.append(got)

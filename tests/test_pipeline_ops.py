@@ -809,7 +809,7 @@ def test_semantic_dedup_within_cluster_minid_survives(spark):
     got = {
         r["vec_id"]: (r["cluster"], r["keep"])
         for r in dedup.semantic_dedup(
-            emb, threshold=0.95, cents=cents, persist_assignments=False
+            emb, threshold=0.95, cents=cents
         ).collect()
     }
     assert set(got) == {1, 2, 3, 4}
@@ -830,7 +830,7 @@ def test_semantic_dedup_recall_tradeoff_documented(spark):
 
     cents = _init_centroids(_norm_vecs(emb, "vec_id", "embedding"), 8)
     out = dedup.semantic_dedup(
-        emb, threshold=0.0, cents=cents, persist_assignments=False
+        emb, threshold=0.0, cents=cents
     ).collect()
     # orthogonal unit vectors each own their seed cluster: all kept even
     # at threshold 0 (cos 0 pairs exist corpus-wide but never in-cluster)
@@ -851,7 +851,7 @@ def test_semantic_dedup_matches_brute_force_within_clusters(spark):
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     got = {r["vec_id"]: (r["cluster"], r["keep"])
            for r in dedup.semantic_dedup(
-               emb, threshold=0.8, persist_assignments=False).collect()}
+               emb, threshold=0.8).collect()}
     vecs = dict(rows)
 
     def cos(a, b):

@@ -292,10 +292,7 @@ def test_semantic_dedup_survives_degenerate_cluster(spark):
         rows.append((i, list(hot_vec)))
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
-    # persist_assignments=False: the shared suite session must not
-    # accumulate one cached assignment table per test run (the same
-    # residue class that made the r5 plan pin flaky)
-    out_df = dedup.semantic_dedup(emb, threshold=0.99, persist_assignments=False)
+    out_df = dedup.semantic_dedup(emb, threshold=0.99)
     a = audit_plan(out_df)
     assert a.cartesian_products == 0 and a.row_python_stages == 0
 
@@ -453,10 +450,10 @@ def test_incremental_semantic_survives_degenerate_history_cluster(spark):
     batch = spark.createDataFrame(batch_rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
     hr = dedup.incremental_semantic_dedup(
-        hist, None, 0.99, cents, persist_assignments=False
+        hist, None, 0.99, cents
     )
     r = dedup.incremental_semantic_dedup(
-        batch, hr.assignments, 0.99, cents, persist_assignments=False
+        batch, hr.assignments, 0.99, cents
     )
     a = audit_plan(r.result)
     assert a.cartesian_products == 0 and a.row_python_stages == 0
@@ -486,12 +483,12 @@ def test_incremental_semantic_empty_batch_and_empty_corpus(spark):
     cents = ann.kmeans_centroids(emb, n_centroids=4)
     empty = emb.where("vec_id < 0")
     r = dedup.incremental_semantic_dedup(
-        empty, None, 0.9, cents, persist_assignments=False
+        empty, None, 0.9, cents
     )
     assert r.result.count() == 0 and r.delta_reps.count() == 0
     # empty history reps frame (not None) behaves like no history
     hr = dedup.incremental_semantic_dedup(
-        emb, r.delta_reps, 0.9, cents, persist_assignments=False
+        emb, r.delta_reps, 0.9, cents
     )
     assert hr.result.count() == 20
 

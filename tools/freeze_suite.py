@@ -40,7 +40,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DURATIONS_FILE = os.path.join(REPO, "tools", "freeze_durations.json")
 # Files that open the embedded Derby metastore (saveAsTable): one
 # process only, pinned to worker 0.
-METASTORE_FILES = {"test_scale_paths.py", "test_bucketed.py", "test_layout.py"}
+METASTORE_FILES = {"test_scale_paths.py", "test_bucketed.py"}
 
 
 def _load_durations() -> dict[str, float]:
